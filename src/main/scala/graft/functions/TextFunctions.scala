@@ -37,10 +37,6 @@ object TextFunctions {
   def punctCount(c: Column): Column =
     length(c) - length(regexp_replace(c, "[^\\w\\s]", ""))
 
-  /** Uppercase letters. */
-  def upperCount(c: Column): Column =
-    length(c) - length(regexp_replace(c, "[A-Z]", ""))
-
   /** Mean token length in characters (0 for empty docs); a single double
     * division so it hash-compares across engines.
     */

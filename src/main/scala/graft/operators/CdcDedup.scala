@@ -50,12 +50,6 @@ object CdcDedup {
   private def escapeGlob(path: String): String =
     path.replaceAll("([\\[\\]{}*?])", "\\\\$1")
 
-  /** Attach `ingestion_seq` to an in-memory staging DataFrame that already
-    * has a stable per-row order column; used by tests/synthetic streams.
-    */
-  def withIngestionSeq(df: DataFrame, orderCol: String): DataFrame =
-    df.withColumn(IngestionSeqCol, col(orderCol))
-
   /** The cascading dedup ORDER BY (reference: handler.py:345-404), built
     * schema-dependently — each level participates only when its column
     * exists:

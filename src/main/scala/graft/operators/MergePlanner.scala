@@ -181,20 +181,10 @@ object MergePlanner {
     val chosen = choose(p, cow.numBuckets, th)
     chosen match {
       case MorDelta =>
-        val delta = normalizeDelta(cow, morSide, staging, opCol)
-        if (morSide.isEmpty) {
-          // bootstrap: the MoR side-table's base is the EMPTY relation
-          // with the row schema (all live data is in the CoW home);
-          // its resolve then yields exactly the accumulated scatter
-          val rowSchema = org.apache.spark.sql.types.StructType(
-            delta.schema.filterNot(f =>
-              f.name == morSide.OpCol || f.name == morSide.SeqCol))
-          morSide.commitBase(staging.sparkSession.createDataFrame(
-            staging.sparkSession.sparkContext
-              .emptyRDD[org.apache.spark.sql.Row], rowSchema),
-            freshTs(morSide))
-        }
-        morSide.commitDelta(delta, freshTs(morSide))
+        // a first delta bootstraps the side's EMPTY base (all live data
+        // is in the CoW home), so its resolve is exactly the scatter
+        morSide.commitDelta(normalizeDelta(cow, morSide, staging, opCol),
+          morSide.freshTs())
       case _ =>
         // fold any accumulated scatter home first — per-key apply
         // order must match the batch arrival order
@@ -232,18 +222,7 @@ object MergePlanner {
         deleteCol = morSide.OpCol, deleteVals = Seq("D"),
         broadcastStaging = rows <= th.broadcastMaxRows)
       morSide.commitBase(net.filter(lit(false)).drop(
-        morSide.OpCol, morSide.SeqCol), freshTs(morSide))
+        morSide.OpCol, morSide.SeqCol), morSide.freshTs())
       touched
     }
-
-  /** A commit ts the store has not logged. MoR commits are idempotent
-    * BY TS, so a base bootstrap and its first delta (or two batches)
-    * landing in the same wall millisecond would silently swallow the
-    * second commit — probe the logged set and step past collisions.
-    */
-  private def freshTs(st: MorStore): Long = {
-    var t = System.nanoTime() / 1000000L
-    while (st.tsCommitted(t)) t += 1L
-    t
-  }
 }

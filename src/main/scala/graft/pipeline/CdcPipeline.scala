@@ -49,21 +49,6 @@ final class CdcPipeline(
   val ledger = new FileLedger(spark, s"$storeRoot/_ledger")
   val evolutionLog = new EvolutionLog(spark, s"$storeRoot/_evolution_log")
 
-  /** Commit-ts allocator for the MoR side-stores. MoR commits are
-    * idempotent BY TS (a replayed commitTsMillis no-ops), so two
-    * commits in the same wall millisecond — base bootstrap + first
-    * delta, or two small files applied back-to-back — would silently
-    * swallow the second. Allocate strictly increasing values and skip
-    * any ts the store already logged (restart with an existing side).
-    */
-  private val lastSideTs = new java.util.concurrent.atomic.AtomicLong(0L)
-  private def freshSideTs(side: MorStore): Long = {
-    var t = math.max(System.currentTimeMillis(), lastSideTs.get() + 1L)
-    while (side.tsCommitted(t)) t += 1L
-    lastSideTs.set(t)
-    t
-  }
-
   def storeFor(table: String, keys: Seq[String]): BucketedTableStore =
     new BucketedTableStore(spark, s"$storeRoot/$table", keys, numBuckets)
 
@@ -176,14 +161,7 @@ final class CdcPipeline(
                 .drop(deleteCol)
               val delta = MergePlanner.normalizeDelta(
                 store, side, premapped, "__cdc_op")
-              if (side.isEmpty) {
-                val rowSchema = org.apache.spark.sql.types.StructType(
-                  delta.schema.filterNot(_.name == side.OpCol))
-                side.commitBase(spark.createDataFrame(
-                  spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-                  rowSchema), freshSideTs(side))
-              }
-              side.commitDelta(delta, freshSideTs(side))
+              side.commitDelta(delta, side.freshTs())
               0
             case chosen =>
               MergePlanner.drain(store, side)

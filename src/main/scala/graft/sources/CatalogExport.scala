@@ -1,5 +1,6 @@
 package graft.sources
 
+import com.fasterxml.jackson.databind.annotation.JsonDeserialize
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
@@ -19,6 +20,9 @@ object CatalogExport {
 
   private def manifestPath(dir: String) = new Path(dir, "_manifest.json")
 
+  private final case class Manifest(generation: Long,
+      @JsonDeserialize(contentAs = classOf[java.lang.Long]) tables: Map[String, Long])
+
   /** Export generation `g`'s snapshot tables to `dir`. Returns the
     * (table → rowCount) manifest map.
     */
@@ -30,10 +34,9 @@ object CatalogExport {
       df.write.mode("overwrite").parquet(s"$dir/$t")
       t -> spark.read.parquet(s"$dir/$t").count()
     }
-    val body = counts.map { case (t, n) => s""""$t":$n""" }.mkString(",")
     val out = fs.create(manifestPath(dir), true)
-    out.write(s"""{"generation":$g,"tables":{$body}}""".getBytes("UTF-8"))
-    out.close()
+    try out.write(CommitLog.json.writeValueAsBytes(Manifest(g, counts.toMap)))
+    finally out.close()
     counts.toMap
   }
 
@@ -41,16 +44,7 @@ object CatalogExport {
   def manifest(spark: SparkSession, dir: String): Map[String, Long] = {
     val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
     require(fs.exists(manifestPath(dir)), s"no manifest at $dir — not an export")
-    val in = fs.open(manifestPath(dir))
-    val s = scala.io.Source.fromInputStream(in).mkString
-    in.close()
-    val bodyParts = s.split("""\"tables\":\{""")
-    val body = bodyParts(1).takeWhile(_ != '}')
-    if (body.trim.isEmpty) Map.empty
-    else body.split(",").map { kv =>
-      val Array(k, v) = kv.split(":")
-      k.trim.stripPrefix("\"").stripSuffix("\"") -> v.trim.toLong
-    }.toMap
+    CommitLog.readJson(fs, manifestPath(dir), classOf[Manifest]).tables
   }
 
   /** Import the export at `dir` into `cat` as one atomic generation,

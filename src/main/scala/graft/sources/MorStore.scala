@@ -1,9 +1,10 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Merge-on-read table — the write-cheap half of the CoW/MoR
   * trade-off the engine's CDC merge
@@ -32,10 +33,11 @@ import org.apache.spark.sql.functions._
   * contract applies (and that every `__op` is a recognized verb)
   * against the just-written files and refuses the commit otherwise —
   * an unrecognized op or an unordered same-key tie would silently
-  * resolve as a delete / a coin flip (ADVICE r8). Commit atomicity
-  * reuses the engine's rename-only pointer discipline
-  * ([[SnapshotStore]]): a generation is either fully visible or
-  * absent; a crash mid-commit leaves the previous cut intact.
+  * resolve as a delete / a coin flip (ADVICE r8). Each generation
+  * `g=N` is published by its [[CommitLog]] entry `_log/N.json`
+  * (generation, ts, kind); the protocol and the visibility rule are
+  * the log's, so a generation is either fully visible or absent and a
+  * crash mid-commit leaves the previous cut intact.
   */
 class MorStore(spark: SparkSession, root: String, keyCols: Seq[String]) {
 
@@ -46,31 +48,39 @@ class MorStore(spark: SparkSession, root: String, keyCols: Seq[String]) {
     FileSystem.get(spark.sparkContext.hadoopConfiguration)
 
   private def genDir(v: Long) = new Path(root, s"g=$v")
-  private def logDir = new Path(root, "_log")
-  private def pointer = new Path(root, "_latest")
+
+  private[graft] val log = new CommitLog[MorStore.Entry](spark, root, "_log")
 
   // ── commit ──────────────────────────────────────────────────────────
 
   /** Commit a full base generation (initial load or compaction
     * output). Returns the generation.
     */
-  def commitBase(df: DataFrame, commitTsMillis: Long): Long =
-    commit(df, commitTsMillis, kind = "base")
+  def commitBase(df: DataFrame, commitTsMillis: Long): Long = {
+    val g = log.nextId()
+    write(g, df)
+    log.append(MorStore.Entry(g, commitTsMillis, "base"))
+    g
+  }
+
+  private def write(g: Long, df: DataFrame): Unit = {
+    fs.delete(genDir(g), true) // orphan from a crashed commit
+    df.write.mode("overwrite").parquet(genDir(g).toString)
+  }
 
   /** Commit a CDC delta (schema = base + `__op`, optional `__seq`).
     * O(|delta|) write — the table is never rewritten. The delta
     * contract is validated against the WRITTEN files (one cheap
     * re-scan of the fresh parquet — the input plan is not recomputed)
     * before the generation becomes visible; violations abort with the
-    * generation directory still invisible (no log entry, no pointer).
+    * generation directory still invisible (no log entry). A store
+    * with no generation yet first commits an EMPTY base of the delta's
+    * row schema under the same ts, so a first delta needs no special
+    * casing in the caller.
     */
   def commitDelta(delta: DataFrame, commitTsMillis: Long,
-      allowEvolution: Boolean = false): Long = {
-    require(delta.columns.contains(OpCol),
-      s"delta must carry $OpCol in {U, D}")
-    commit(delta, commitTsMillis, kind = "delta", validateDelta = true,
-      allowEvolution = allowEvolution)
-  }
+      allowEvolution: Boolean = false): Long =
+    commitDeltaAll(Seq(delta -> commitTsMillis), allowEvolution).head
 
   /** Fail unless every __op ∈ {U, D}, (key ++ __seq-if-present) is
     * unique (one aggregation job over the just-written generation),
@@ -163,11 +173,10 @@ class MorStore(spark: SparkSession, root: String, keyCols: Seq[String]) {
   /** Commit a CHAIN of CDC deltas in one call: the generation
     * directories are staged as concurrent Spark writes (guide §2.6 —
     * a staged `g=N` is invisible until its log entry publishes it),
-    * then validated AND published strictly in input order with the
-    * exact per-generation protocol [[commitDelta]] uses. Validation
+    * then validated AND published strictly in input order. Validation
     * order is what keeps this externally indistinguishable from N
-    * sequential commits: when delta i validates, deltas 0..i-1 are
-    * already logged and pointed, so the effective-schema walk and the
+    * sequential [[commitDelta]]s: when delta i validates, deltas 0..i-1
+    * are already logged, so the effective-schema walk and the
     * base-schema guard see exactly the store state a sequential
     * caller's would. Same crash contract (unlogged staged dirs are
     * orphans the next commit's delete clears). Callers must pass
@@ -177,23 +186,18 @@ class MorStore(spark: SparkSession, root: String, keyCols: Seq[String]) {
       allowEvolution: Boolean = false): Seq[Long] = {
     deltas.foreach { case (d, _) =>
       require(d.columns.contains(OpCol), s"delta must carry $OpCol in {U, D}") }
-    val base = generations().lastOption.map(_._1 + 1).getOrElse(0L)
+    if (deltas.nonEmpty && isEmpty) {
+      val (d, ts) = deltas.head
+      commitBase(spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+        StructType(d.schema.filterNot(f => f.name == OpCol || f.name == SeqCol))), ts)
+    }
+    val base = log.nextId()
     graft.operators.Overlap.inParallel(
-      deltas.zipWithIndex.map { case ((df, _), i) => () =>
-        val dest = genDir(base + i)
-        fs.delete(dest, true) // orphan from a crashed commit
-        df.write.mode("overwrite").parquet(dest.toString)
-      })
+      deltas.zipWithIndex.map { case ((df, _), i) => () => write(base + i, df) })
     deltas.zipWithIndex.map { case ((_, ts), i) =>
       val g = base + i
       validateDeltaFiles(genDir(g), allowEvolution)
-      fs.mkdirs(logDir)
-      val out = fs.create(new Path(logDir, s"$g.json"), true)
-      out.write(s"""{"generation":$g,"ts":$ts,"kind":"delta"}""".getBytes("UTF-8"))
-      out.close()
-      PointerFile.swing(spark.sparkContext.hadoopConfiguration,
-        new Path(root), pointer, g.toString, s"mor g=$g")
-      committedTsCache += ts
+      log.append(MorStore.Entry(g, ts, "delta"))
       g
     }
   }
@@ -235,7 +239,7 @@ class MorStore(spark: SparkSession, root: String, keyCols: Seq[String]) {
     val dlqCount = spark.read.parquet(dlqDest.toString).count()
     val clean = marked.filter(!col("__bad_op") && col("__k_dups") <= 1)
       .drop("__bad_op", "__k_dups")
-    (commit(clean, commitTsMillis, kind = "delta", validateDelta = true), dlqCount)
+    (commitDelta(clean, commitTsMillis), dlqCount)
   }
 
   /** The accumulated dead-letter rows (all lenient commits). The
@@ -280,120 +284,28 @@ class MorStore(spark: SparkSession, root: String, keyCols: Seq[String]) {
     removed
   }
 
-  private def commit(df: DataFrame, ts: Long, kind: String,
-      validateDelta: Boolean = false, allowEvolution: Boolean = false): Long = {
-    val g = generations().lastOption.map(_._1 + 1).getOrElse(0L)
-    val dest = genDir(g)
-    fs.delete(dest, true) // orphan from a crashed commit
-    df.write.mode("overwrite").parquet(dest.toString)
-    if (validateDelta) validateDeltaFiles(dest, allowEvolution)
-    fs.mkdirs(logDir)
-    val out = fs.create(new Path(logDir, s"$g.json"), true)
-    out.write(s"""{"generation":$g,"ts":$ts,"kind":"$kind"}""".getBytes("UTF-8"))
-    out.close()
-    PointerFile.swing(spark.sparkContext.hadoopConfiguration,
-      new Path(root), pointer, g.toString, s"mor g=$g")
-    committedTsCache += ts
-    g
-  }
+  /** (generation, kind) pairs of every logged generation, ascending. */
+  private[graft] def generations(): Seq[(Long, String)] =
+    log.entries().map(e => e.generation -> e.kind)
 
-  /** (generation, kind) pairs ≤ the pointer, ascending — staged
-    * generations beyond the pointer are invisible.
+  /** O(1) amortized: was any generation committed with this ts? */
+  def tsCommitted(ts: Long): Boolean = log.tsCommitted(ts)
+
+  /** The commit ts of the next side-store commit (CDC pipeline and
+    * merge planner alike): wall-clock ms, strictly above every ts handed
+    * out in this JVM and not yet logged here, so each commit carries its
+    * own ts. MoR commits do not check their ts; this keeps
+    * [[tsCommitted]] an unambiguous per-commit lookup.
     */
-  private[graft] def generations(): Seq[(Long, String)] = {
-    val logged =
-      if (!fs.exists(logDir)) Seq.empty
-      else fs.listStatus(logDir).map(_.getPath.getName)
-        .filter(_.endsWith(".json")).map(_.stripSuffix(".json").toLong)
-        .sorted.toSeq
-    val visible =
-      if (!fs.exists(pointer)) logged
-      else {
-        val in = fs.open(pointer)
-        val last = scala.io.Source.fromInputStream(in).mkString.trim.toLong
-        in.close()
-        logged.filter(_ <= last)
-      }
-    visible.map { g =>
-      val in = fs.open(new Path(logDir, s"$g.json"))
-      val s = scala.io.Source.fromInputStream(in).mkString
-      in.close()
-      g -> s.split(""""kind":"""")(1).takeWhile(_ != '"')
-    }
+  private[graft] def freshTs(): Long = {
+    var t = math.max(System.currentTimeMillis(), MorStore.lastTs.get() + 1L)
+    while (tsCommitted(t)) t += 1L
+    MorStore.lastTs.set(t)
+    t
   }
 
-  /** Commit timestamp of generation `g` (the streaming sink keys its
-    * exactly-once check on it).
-    */
-  def generationTs(g: Long): Long = {
-    val in = fs.open(new Path(logDir, s"$g.json"))
-    val s = scala.io.Source.fromInputStream(in).mkString
-    in.close()
-    s.split(""""ts":""")(1).takeWhile(c => c.isDigit || c == '-').toLong
-  }
-
-  /** Commit timestamps of every visible generation — seeded from the
-    * log ONCE per store handle, then maintained on commit, so the
-    * streaming sink's per-batch redelivery check costs O(1) instead
-    * of O(total generations) filesystem round-trips per micro-batch
-    * (unbounded growth over a long-running stream; ADVICE r8).
-    */
-  private lazy val committedTsCache: scala.collection.mutable.Set[Long] = {
-    val s = scala.collection.mutable.Set.empty[Long]
-    generations().foreach { case (g, _) => s += generationTs(g) }
-    s
-  }
-
-  /** O(1) amortized: was any visible generation committed with this ts? */
-  def tsCommitted(ts: Long): Boolean = committedTsCache.contains(ts)
-
-  /** Streaming-sink redelivery check with O(1) RESTART seeding: reads
-    * the persisted [[BatchMark]] (one file) plus only the generations
-    * newer than its floor — the commit-vs-mark crash window — instead
-    * of the whole log. Valid ONLY for monotone gapless Structured
-    * Streaming batch ids (see [[BatchMark]]); other callers use
-    * [[tsCommitted]].
-    */
-  def batchCommitted(id: Long): Boolean =
-    id <= batchSeed._1 || batchSeed._2.contains(id)
-
-  /** Persist the batch high-water mark after a sink commit of `id`. */
-  def markBatch(id: Long): Unit = {
-    batchSeed._2 += id
-    BatchMark.mark(spark.sparkContext.hadoopConfiguration, fs,
-      new Path(root), visibleGenIds().lastOption.getOrElse(-1L), id)
-  }
-
-  // generation ids ≤ the pointer from the LISTING alone — one round
-  // trip, no per-generation json reads (generations() reads every
-  // file for its kind, which would defeat the O(1) restart)
-  private def visibleGenIds(): Seq[Long] = {
-    val logged =
-      if (!fs.exists(logDir)) Seq.empty
-      else fs.listStatus(logDir).map(_.getPath.getName)
-        .filter(_.endsWith(".json")).map(_.stripSuffix(".json").toLong)
-        .sorted.toSeq
-    if (!fs.exists(pointer)) logged
-    else {
-      val in = fs.open(pointer)
-      val last = scala.io.Source.fromInputStream(in).mkString.trim.toLong
-      in.close()
-      logged.filter(_ <= last)
-    }
-  }
-
-  // (maxMarkedId, ts of generations above the mark's floor) — the tail
-  // scan is the crash window only, so a restart seeds in O(1): one
-  // mark read, one listing, and a json read per ABOVE-FLOOR generation
-  private lazy val batchSeed: (Long, scala.collection.mutable.Set[Long]) = {
-    val (floor, maxId) = BatchMark.read(fs, new Path(root)).getOrElse((-1L, -1L))
-    val s = scala.collection.mutable.Set.empty[Long]
-    visibleGenIds().filter(_ > floor).foreach(g => s += generationTs(g))
-    (maxId, s)
-  }
-
-  /** True before the first visible commit. */
-  def isEmpty: Boolean = generations().isEmpty
+  /** True before the first commit. */
+  def isEmpty: Boolean = log.head().isEmpty
 
   // ── read (the MoR resolve) ──────────────────────────────────────────
 
@@ -417,14 +329,6 @@ class MorStore(spark: SparkSession, root: String, keyCols: Seq[String]) {
     require(gens.nonEmpty, s"no MoR generation <= $upTo at $root")
     readGens(gens)
   }
-
-  /** The NEWEST visible generation committed with ts `ts`, if any —
-    * lets a multi-table commit protocol recognize a delta it already
-    * committed before a crash and reuse it instead of re-appending
-    * (newest, because a bootstrap writes base + delta under one ts).
-    */
-  def generationWithTs(ts: Long): Option[Long] =
-    generations().map(_._1).reverse.find(generationTs(_) == ts)
 
   private def readGens(gens: Seq[(Long, String)]): DataFrame = {
     val baseGen = gens.filter(_._2 == "base").map(_._1).lastOption
@@ -585,7 +489,7 @@ class MorStore(spark: SparkSession, root: String, keyCols: Seq[String]) {
     * at or before `upTo` — the oldest generation any read at ≥ `upTo`
     * can touch. Time travel to generations ≥ `upTo` is untouched;
     * reads below it become impossible (that is the point — storage is
-    * reclaimed). Returns the dropped generation numbers. The pointer,
+    * reclaimed). Returns the dropped generation numbers. The head,
     * numbering, and later commits are unaffected (generation numbers
     * never recycle because numbering comes from the surviving log).
     */
@@ -598,13 +502,21 @@ class MorStore(spark: SparkSession, root: String, keyCols: Seq[String]) {
     val dropped = gens.map(_._1).filter(_ < keepFrom)
     dropped.foreach { g =>
       fs.delete(genDir(g), true)
-      fs.delete(new Path(logDir, s"$g.json"), false)
+      log.delete(g)
     }
     dropped
   }
 }
 
 object MorStore {
+
+  /** One `_log/N.json` entry; `kind` is "base" or "delta". */
+  final case class Entry(generation: Long, ts: Long, kind: String)
+      extends CommitLog.Entry {
+    def id: Long = generation
+  }
+
+  private val lastTs = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** Consumer-side application of a [[MorStore.changesBetween]] feed:
     * fold `changes` into `state` (the consumer's copy of the table at

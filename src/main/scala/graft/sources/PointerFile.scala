@@ -5,15 +5,12 @@ import java.util.EnumSet
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{CreateFlag, FileContext, Options, Path}
 
-/** The one pointer-swing primitive every store shares: write the new
-  * value to a temp file, then ATOMICALLY REPLACE the pointer with one
-  * OVERWRITE rename (`FileContext.rename(…, Rename.OVERWRITE)` —
-  * POSIX `rename(2)` semantics on local/HDFS). The previous
-  * delete-then-rename pair had a crash window with NO pointer on disk
-  * between the two calls; every store healed it (missing pointer ⇒
-  * newest logged generation), but a single atomic replace makes the
-  * window zero-width instead of merely survivable — the pointer now
-  * always exists once the first commit lands.
+/** The one pointer-swing primitive: [[TableCatalog]]'s refs and tags
+  * and [[CommitLog]]'s batch mark. Write the new value to a temp file,
+  * then ATOMICALLY REPLACE the pointer with one OVERWRITE rename
+  * (`FileContext.rename(…, Rename.OVERWRITE)` — POSIX `rename(2)`
+  * semantics on local/HDFS), so a pointer never goes missing between
+  * two calls.
   *
   * Both the tmp WRITE and the rename go through [[FileContext]]
   * (RawLocalFs on local disks), never the checksummed `FileSystem`

@@ -6,31 +6,26 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Snapshot-versioned parquet table — MVCC table format in miniature
   * (the Iceberg/Delta snapshot-isolation shape, reduced to what the
   * engine needs): every commit writes a complete new generation
-  * directory `v=N`, then atomically swings a pointer file; readers
-  * resolve the pointer once and scan an immutable directory, so a
-  * reader never sees a partial write and a writer never blocks a
-  * reader. Old generations stay addressable — `read(version)` and
-  * `asOf(timestamp)` are time travel; `expireSnapshots` is the
-  * retention pass.
+  * directory `v=N`, then appends its [[CommitLog]] entry `_log/N.json`
+  * (version, commit ts, row count); readers resolve the head once and
+  * scan an immutable directory, so a reader never sees a partial write
+  * and a writer never blocks a reader. Old generations stay addressable
+  * — `read(version)` and `asOf(timestamp)` are time travel;
+  * `expireSnapshots` is the retention pass.
   *
-  * Commit protocol (rename-only, same discipline as the bucketed
-  * store's two-phase swap):
-  *   1. write `v=N` fully (parquet job)
-  *   2. append `_log/N.json` (version metadata: commit ts, row count)
-  *   3. write `_latest.tmp`, delete `_latest`, rename tmp → `_latest`
-  * A crash before step 3 leaves the table at N−1 with an orphan
-  * directory the next commit overwrites; a crash inside step 3's
-  * delete-rename window is healed by the reader's fallback rule:
-  * pointer missing ⇒ newest logged version wins.
+  * The entry protocol and the visibility rule (the head is the newest
+  * fully written entry) are [[CommitLog]]'s. A crash before the entry
+  * leaves the table at N−1 with an orphan directory the next commit
+  * overwrites.
   *
   * Commit timestamps are CALLER-provided (a real deployment passes its
   * coordinator clock): determinism for tests and oracles, and no
   * hidden wall-clock reads inside the engine.
   *
   * At 100 TB a generation directory is written by the cluster (the
-  * parquet job parallelizes); the pointer swap and log append are
-  * O(1) driver-side metadata — the same asymmetry that makes
-  * metadata-tree table formats work at that scale.
+  * parquet job parallelizes); the log append is O(1) driver-side
+  * metadata — the same asymmetry that makes metadata-tree table
+  * formats work at that scale.
   */
 class SnapshotStore(spark: SparkSession, root: String) {
 
@@ -38,157 +33,65 @@ class SnapshotStore(spark: SparkSession, root: String) {
     FileSystem.get(spark.sparkContext.hadoopConfiguration)
 
   private def verDir(v: Long) = new Path(root, s"v=$v")
-  private def logDir = new Path(root, "_log")
-  private def pointer = new Path(root, "_latest")
+
+  private[graft] val log =
+    new CommitLog[SnapshotStore.Entry](spark, root, "_log")
 
   // ── commit ──────────────────────────────────────────────────────────
 
   /** Commit `df` as the next generation; returns its version. */
-  def commit(df: DataFrame, commitTsMillis: Long): Long = {
-    val v = latestVersion().map(_ + 1).getOrElse(0L)
-    val dest = verDir(v)
-    fs.delete(dest, true) // orphan from a crashed commit
-    // the log's row count rides the WRITE itself (Observation metric):
-    // the old shape re-read the freshly-written directory with a
-    // second count job — one extra scan per commit, paid by every
-    // snapshot-store user in the suite
-    val obs = org.apache.spark.sql.Observation(s"snapshot-rows-v$v")
-    df.observe(obs, org.apache.spark.sql.functions.count(
-        org.apache.spark.sql.functions.lit(1)).as("rows"))
-      .write.mode("overwrite").parquet(dest.toString)
-    val rows = obs.get("rows").asInstanceOf[Long]
-    writeLog(v, commitTsMillis, rows)
-    swingPointer(v)
-    committedTsCache += commitTsMillis
-    v
-  }
+  def commit(df: DataFrame, commitTsMillis: Long): Long =
+    commitAll(Seq(df -> commitTsMillis)).head
 
   /** Commit a VERSION CHAIN in one call: the generation directories
     * are staged as concurrent Spark jobs (guide §2.6 — each df is an
     * independent expression over already-committed inputs, and a
-    * staged `v=N` directory is invisible until its log entry and the
-    * pointer publish it), then published strictly in input order with
-    * the exact per-version protocol [[commit]] uses (log append, then
-    * pointer swing). Externally indistinguishable from N sequential
-    * commits — same versions, same logs, same pointer history, same
-    * crash contract (a crash mid-staging leaves unlogged orphan
-    * directories the next commit's delete clears; a crash mid-publish
-    * leaves the table at the last published version) — but the commit
-    * wall is the slowest write, not the sum. Callers must pass dfs
-    * that do NOT read this store (a df reading version k would race
-    * its own staging).
+    * staged `v=N` directory is invisible until its log entry publishes
+    * it), then published strictly in input order. Externally
+    * indistinguishable from N sequential commits — same versions, same
+    * logs, same crash contract (a crash mid-staging leaves unlogged
+    * orphan directories the next commit's delete clears; a crash
+    * mid-publish leaves the table at the last published version) — but
+    * the commit wall is the slowest write, not the sum. Callers must
+    * pass dfs that do NOT read this store (a df reading version k would
+    * race its own staging).
     */
   def commitAll(dfs: Seq[(DataFrame, Long)]): Seq[Long] = {
-    val base = latestVersion().map(_ + 1).getOrElse(0L)
+    val base = log.nextId()
     val staged = graft.operators.Overlap.inParallel(
       dfs.zipWithIndex.map { case ((df, ts), i) => () =>
         val v = base + i
         val dest = verDir(v)
         fs.delete(dest, true) // orphan from a crashed commit
+        // the log's row count rides the WRITE itself (Observation
+        // metric) — no second count job over the fresh directory
         val obs = org.apache.spark.sql.Observation(s"snapshot-rows-v$v")
         df.observe(obs, org.apache.spark.sql.functions.count(
             org.apache.spark.sql.functions.lit(1)).as("rows"))
           .write.mode("overwrite").parquet(dest.toString)
-        (v, ts, obs.get("rows").asInstanceOf[Long])
+        SnapshotStore.Entry(v, ts, obs.get("rows").asInstanceOf[Long])
       })
-    staged.foreach { case (v, ts, rows) =>
-      writeLog(v, ts, rows)
-      swingPointer(v)
-      committedTsCache += ts
-    }
-    staged.map(_._1)
-  }
-
-  /** Commit timestamps of every logged version — seeded from the log
-    * ONCE per store handle, then maintained on commit, so the streaming
-    * sink's per-batch redelivery check costs O(1) instead of O(total
-    * versions) filesystem round-trips per micro-batch (unbounded growth
-    * over a long-running stream — the same fix MorStore and
-    * TableCatalog already carry; ADVICE r9).
-    */
-  private lazy val committedTsCache: scala.collection.mutable.Set[Long] = {
-    val s = scala.collection.mutable.Set.empty[Long]
-    history().foreach { case (_, ts, _) => s += ts }
-    s
+    staged.foreach(log.append)
+    staged.map(_.version)
   }
 
   /** O(1) amortized: was any version committed with this ts? */
-  def tsCommitted(ts: Long): Boolean = committedTsCache.contains(ts)
+  def tsCommitted(ts: Long): Boolean = log.tsCommitted(ts)
 
-  /** Streaming-sink redelivery check with O(1) RESTART seeding (one
-    * [[BatchMark]] read + the crash-window tail of the log, not the
-    * whole log). Only for monotone gapless batch ids — see
-    * [[BatchMark]]; other callers use [[tsCommitted]].
-    */
-  def batchCommitted(id: Long): Boolean =
-    id <= batchSeed._1 || batchSeed._2.contains(id)
-
-  /** Persist the batch high-water mark after a sink commit of `id`. */
-  def markBatch(id: Long): Unit = {
-    batchSeed._2 += id
-    BatchMark.mark(spark.sparkContext.hadoopConfiguration, fs,
-      new Path(root), loggedVersions().lastOption.getOrElse(-1L), id)
-  }
-
-  // the tail scan reads ONLY the log files above the mark's floor —
-  // a history() call here would re-read every version's log entry and
-  // defeat the O(1) restart this exists to provide
-  private lazy val batchSeed: (Long, scala.collection.mutable.Set[Long]) = {
-    val (floor, maxId) = BatchMark.read(fs, new Path(root)).getOrElse((-1L, -1L))
-    val s = scala.collection.mutable.Set.empty[Long]
-    loggedVersions().filter(_ > floor).foreach(v => s += tsOf(v))
-    (maxId, s)
-  }
-
-  /** Commit ts of one logged version (single log-file read). */
-  private def tsOf(v: Long): Long = {
-    val in = fs.open(new Path(logDir, s"$v.json"))
-    val s = scala.io.Source.fromInputStream(in).mkString
-    in.close()
-    s.split(""""ts":""")(1).takeWhile(c => c.isDigit || c == '-').toLong
-  }
-
-  private def writeLog(v: Long, ts: Long, rows: Long): Unit = {
-    fs.mkdirs(logDir)
-    val out = fs.create(new Path(logDir, s"$v.json"), true)
-    out.write(s"""{"version":$v,"ts":$ts,"rows":$rows}""".getBytes("UTF-8"))
-    out.close()
-  }
-
-  private def swingPointer(v: Long): Unit =
-    PointerFile.swing(spark.sparkContext.hadoopConfiguration,
-      new Path(root), pointer, v.toString, s"v=$v")
+  /** Streaming-sink redelivery check ([[CommitLog.batchCommitted]]). */
+  def batchCommitted(id: Long): Boolean = log.batchCommitted(id)
 
   // ── resolve / read ──────────────────────────────────────────────────
 
-  /** Pointer value, else newest logged version (crash-heal rule), else
-    * None (empty table).
-    */
-  def latestVersion(): Option[Long] = {
-    if (fs.exists(pointer)) {
-      val in = fs.open(pointer)
-      val s = scala.io.Source.fromInputStream(in).mkString.trim
-      in.close()
-      Some(s.toLong)
-    } else loggedVersions().lastOption
-  }
+  /** Newest logged version, else None (empty table). */
+  def latestVersion(): Option[Long] = log.head()
 
   /** All committed versions, ascending (from the log). */
-  def loggedVersions(): Seq[Long] =
-    if (!fs.exists(logDir)) Seq.empty
-    else fs.listStatus(logDir).map(_.getPath.getName)
-      .filter(_.endsWith(".json")).map(_.stripSuffix(".json").toLong)
-      .sorted.toSeq
+  def loggedVersions(): Seq[Long] = log.ids()
 
   /** Commit metadata (version, ts, rows) from the log, ascending. */
-  def history(): Seq[(Long, Long, Long)] = loggedVersions().map { v =>
-    val in = fs.open(new Path(logDir, s"$v.json"))
-    val s = scala.io.Source.fromInputStream(in).mkString
-    in.close()
-    val get = (k: String) =>
-      s.split(s""""$k":""")(1).takeWhile(c => c.isDigit || c == '-').toLong
-    (get("version"), get("ts"), get("rows"))
-  }
+  def history(): Seq[(Long, Long, Long)] =
+    log.entries().map(e => (e.version, e.ts, e.rows))
 
   def readLatest(): DataFrame = read(latestVersion().getOrElse(
     throw new IllegalStateException(s"no snapshot at $root")))
@@ -210,18 +113,25 @@ class SnapshotStore(spark: SparkSession, root: String) {
 
   // ── retention ───────────────────────────────────────────────────────
 
-  /** Delete all generations except the newest `keep` (the pointer
-    * target always survives). Returns the expired versions.
+  /** Delete all generations except the newest `keep` (the head
+    * always survives). Returns the expired versions.
     */
   def expireSnapshots(keep: Int): Seq[Long] = {
     require(keep >= 1, "must keep at least one snapshot")
-    val current = latestVersion().toSeq
-    val all = loggedVersions()
-    val victims = all.dropRight(keep).filterNot(current.contains)
+    val victims = loggedVersions().dropRight(keep)
     victims.foreach { v =>
       fs.delete(verDir(v), true)
-      fs.delete(new Path(logDir, s"$v.json"), false)
+      log.delete(v)
     }
     victims
+  }
+}
+
+object SnapshotStore {
+
+  /** One `_log/N.json` entry. */
+  final case class Entry(version: Long, ts: Long, rows: Long)
+      extends CommitLog.Entry {
+    def id: Long = version
   }
 }

@@ -1,5 +1,6 @@
 package graft.sources
 
+import com.fasterxml.jackson.databind.annotation.JsonDeserialize
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -9,26 +10,29 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * cut or the new cut of EVERY table, never a mix.
   *
   * [[SnapshotStore]] makes a single table's commit atomic; the
-  * catalog lifts the same rename-only pointer discipline one level:
-  * table data lives in `tables/<name>/v=N` generation directories,
-  * but VISIBILITY is resolved exclusively through catalog generation
-  * files — `_catalog/G.json` maps every table to the version that
-  * belongs to cut G — behind one `_latest` pointer.
+  * catalog lifts the same [[CommitLog]] one level: table data lives in
+  * `tables/<name>/v=N` generation directories, but VISIBILITY is
+  * resolved exclusively through catalog generation entries —
+  * `_catalog/G.json` maps every table to the version that belongs to
+  * cut G — and per-ref pointers (`_latest` for main, `_refs/<branch>`,
+  * `_tags/<tag>`).
   *
   * Commit protocol:
   *   1. write every changed table's next `v=N` directory fully
   *      (cluster-parallel parquet jobs; crash here leaves orphan
   *      directories the next commit overwrites — invisible, since no
   *      catalog generation references them)
-  *   2. write `_catalog/G.json` carrying forward unchanged tables'
-  *      versions from generation G−1
-  *   3. write `_latest.tmp`, delete `_latest`, rename tmp → `_latest`
-  * Readers resolve the pointer once, load one generation file, and
-  * scan immutable directories — snapshot isolation across tables for
-  * the price of one O(tables) metadata file. At 100 TB the data
-  * writes parallelize across the cluster; steps 2-3 stay O(1)
-  * driver-side metadata, the asymmetry that makes metadata-tree
-  * formats (Iceberg/Delta/Nessie-style multi-table refs) scale.
+  *   2. append generation entry G (the [[CommitLog]] protocol),
+  *      carrying forward unchanged tables' versions from the ref's head
+  *   3. swing the ref's pointer to G ([[PointerFile]] atomic replace)
+  * Readers resolve the head once, load one generation entry, and scan
+  * immutable directories — snapshot isolation across tables for the
+  * price of one O(tables) metadata file. A crash between steps 2 and 3
+  * loses nothing: the log's visibility rule, applied per ref, heals
+  * the head past the pointer ([[headOf]]). At 100 TB the data writes
+  * parallelize across the cluster; steps 2-3 stay O(1) driver-side
+  * metadata, the asymmetry that makes metadata-tree formats
+  * (Iceberg/Delta/Nessie-style multi-table refs) scale.
   *
   * Commit timestamps are caller-provided, like [[SnapshotStore]]'s —
   * no hidden wall-clock reads.
@@ -54,21 +58,17 @@ class TableCatalog(spark: SparkSession, root: String) {
   private def tableDir(t: String, v: Long) = new Path(root, s"tables/$t/v=$v")
   private def morRootDir(t: String) = new Path(root, s"tables/$t/mor")
   private def morKeysFile(t: String) = new Path(root, s"tables/$t/_mor_keys")
-  private def catDir = new Path(root, "_catalog")
-  private def genFile(g: Long) = new Path(catDir, s"$g.json")
+  private[graft] val log =
+    new CommitLog[TableCatalog.Generation](spark, root, "_catalog")
+  private def gen(g: Long): TableCatalog.Generation = log.read(g)
   private def pointer = new Path(root, "_latest")
   private def refsDir = new Path(root, "_refs")
   private def refPath(ref: String): Path =
     if (ref == TableCatalog.Main) pointer else new Path(refsDir, ref)
 
-  private def requireSafeName(t: String): Unit = {
+  private def requireSafeName(t: String): Unit =
     require(t.matches("[A-Za-z0-9_.-]+"),
-      s"table name '$t' outside [A-Za-z0-9_.-]+ — generation files " +
-        "are plain JSON and a quote/comma/brace in a name would corrupt them")
-    require(!TableCatalog.ReservedNames.contains(t),
-      s"table name '$t' collides with a generation-file field name — " +
-        "the hand-rolled JSON parse keys on field labels")
-  }
+      s"table name '$t' outside [A-Za-z0-9_.-]+ — names become directory names")
 
   /** Per-root JVM-wide commit lock: all TableCatalog instances over
     * the same root (however many are constructed) serialize their
@@ -82,8 +82,8 @@ class TableCatalog(spark: SparkSession, root: String) {
 
   /** Atomically commit all frames in `tables` as one catalog
     * generation; unchanged tables carry forward. Returns the new
-    * generation number. Nothing becomes visible until the final
-    * pointer rename. Concurrent commits are safe (staging is
+    * generation number. Nothing becomes visible until the generation
+    * entry lands. Concurrent commits are safe (staging is
     * nonce-isolated, version placement serializes) with
     * LAST-WRITER-WINS per table — a read-modify-write that must not
     * lose a concurrent update uses [[commitAllIf]] or [[transact]].
@@ -183,10 +183,8 @@ class TableCatalog(spark: SparkSession, root: String) {
     * (drop, rename-away) and is recommitted: restarting at 0 would
     * overwrite a directory older generations still reference — then
     * staged directories RENAME into place (metadata-cheap; the heavy
-    * write already happened outside the lock), and the generation
-    * file is written to a temp name and renamed WITHOUT overwrite, so
-    * a torn generation file (crash mid-write) can never exist under a
-    * logged name — loggedGenerations lists only fully-written files.
+    * write already happened outside the lock), then the generation
+    * entry is appended ([[CommitLog.append]]) and the ref swung.
     */
   private[graft] def publish(
       staged: Map[String, String], commitTsMillis: Long,
@@ -211,7 +209,7 @@ class TableCatalog(spark: SparkSession, root: String) {
     // branch commit can never collide with a main commit's file); the
     // parent field records which generation this one extends, making
     // each ref's history a chain through the shared log
-    val g = loggedGenerations().lastOption.map(_ + 1).getOrElse(0L)
+    val g = log.nextId()
     val prevVs = prev.map(tableVersions).getOrElse(Map.empty)
     // Name-collision guard ACROSS generations (commitAllWith guards only
     // within one call): a snapshot committed under a name that is
@@ -275,34 +273,10 @@ class TableCatalog(spark: SparkSession, root: String) {
     val locs = (prev.map(tableLocations).getOrElse(Map.empty) --
       placed.keys -- appPlaced.keys -- dropped) ++
       cloned.map { case (t, (src, _)) => t -> src }
-    def jsonMap(m: Map[String, Long]): String = m.toSeq.sortBy(_._1)
-      .map { case (t, v) => s""""$t":$v""" }.mkString(",")
-    def jsonStrMap(m: Map[String, String]): String = m.toSeq.sortBy(_._1)
-      .map { case (t, v) => s""""$t":"$v"""" }.mkString(",")
-    // chains encode as dash-joined strings ("9-7-3", newest first):
-    // the hand-rolled section parser splits entries on commas, so a
-    // JSON array value would tear it
-    val appJson = appLists.map { case (t, vs) => t -> vs.mkString("-") }
-    fs.mkdirs(catDir)
-    val tmp = new Path(catDir, s"$g.json.tmp")
-    val out = fs.create(tmp, true)
-    out.write(
-      (s"""{"generation":$g,"ts":$commitTsMillis,""" +
-        s""""ref":"$ref","parent":${prev.getOrElse(-1L)},""" +
-        s""""tables":{${jsonMap(versions)}},"mor":{${jsonMap(morVs)}},""" +
-        s""""app":{${jsonStrMap(appJson)}},""" +
-        s""""locs":{${jsonStrMap(locs)}}}""")
-        .getBytes("UTF-8"))
-    out.close()
-    try
-      org.apache.hadoop.fs.FileContext.getFileContext(genFile(g).toUri,
-        spark.sparkContext.hadoopConfiguration).rename(tmp, genFile(g))
-    catch {
-      case e: Exception => throw new IllegalStateException(
-        s"generation $g already exists — an external writer raced this " +
-          "commit (cross-process OCC needs a storage-level CAS)", e)
-    }
-    committedTsCache += commitTsMillis
+    // chains encode as dash-joined strings ("9-7-3", newest first)
+    log.append(TableCatalog.Generation(g, commitTsMillis, ref,
+      Some(prev.getOrElse(-1L)), versions, morVs,
+      appLists.map { case (t, vs) => t -> vs.mkString("-") }, locs))
     refCache.put(g, ref)
     swingRef(ref, g)
     g
@@ -448,10 +422,8 @@ class TableCatalog(spark: SparkSession, root: String) {
     * committed a generation with this ts (a crash after the member
     * commit but before the catalog publish) REUSES it rather than
     * re-appending, so replayed batches stay exactly-once; otherwise
-    * `df` commits as a delta (schema = base + __op, optional __seq).
-    * An empty member handed a DELTA (df carries __op — the uniform
-    * morDerive shape) bootstraps an empty base of the delta's row
-    * schema first, so batch 0 needs no special casing in the caller.
+    * `df` commits as a delta (schema = base + __op, optional __seq;
+    * an empty member bootstraps itself — [[MorStore.commitDelta]]).
     */
   def commitAllWith(snapshots: Map[String, DataFrame],
       morDeltas: Map[String, DataFrame], commitTsMillis: Long): Long = {
@@ -478,23 +450,12 @@ class TableCatalog(spark: SparkSession, root: String) {
         // the delta, so only a same-kind newest generation counts
         val intendedKind =
           if (df.columns.contains(store.OpCol)) "delta" else "base"
-        val reusable = store.generations().reverse.collectFirst {
-          case (gg, k) if k == intendedKind && store.generationTs(gg) == commitTsMillis => gg
+        val reusable = store.log.entries().reverse.collectFirst {
+          case e if e.kind == intendedKind && e.ts == commitTsMillis => e.generation
         }
         val g = reusable.getOrElse {
-          if (store.isEmpty && !df.columns.contains(store.OpCol))
-            store.commitBase(df, commitTsMillis)
-          else {
-            if (store.isEmpty) {
-              val rowSchema = org.apache.spark.sql.types.StructType(
-                df.schema.filterNot(f =>
-                  f.name == store.OpCol || f.name == store.SeqCol))
-              store.commitBase(spark.createDataFrame(
-                spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], rowSchema),
-                commitTsMillis)
-            }
-            store.commitDelta(df, commitTsMillis)
-          }
+          if (store.isEmpty && intendedKind == "base") store.commitBase(df, commitTsMillis)
+          else store.commitDelta(df, commitTsMillis) // bootstraps an empty member
         }
         t -> g
       } catch { case e: Throwable =>
@@ -529,7 +490,7 @@ class TableCatalog(spark: SparkSession, root: String) {
     * under the same name (e.g. a compaction transact's fold) resets
     * the chain to one directory; a later append chains on top of that
     * snapshot. All-or-nothing with the snapshot halves: one
-    * generation file references every staged directory or none.
+    * generation entry references every staged directory or none.
     */
   def commitAllAppend(snapshots: Map[String, DataFrame],
       appends: Map[String, DataFrame], commitTsMillis: Long): Long = {
@@ -569,7 +530,7 @@ class TableCatalog(spark: SparkSession, root: String) {
     * branch refs): [[commitAllOn]] advances only the branch pointer,
     * so main's readers never see branch generations until
     * [[publishBranch]] fast-forwards them in. The enabling layout
-    * fact: every generation file is a SELF-CONTAINED version map, so
+    * fact: every generation entry is a SELF-CONTAINED version map, so
     * a ref is nothing but a pointer — branching costs one file.
     */
   def createBranch(name: String): Unit = commitLock.synchronized {
@@ -620,7 +581,7 @@ class TableCatalog(spark: SparkSession, root: String) {
       require(!fs.exists(tagPath(name)), s"tag '$name' already exists")
       val g = at.getOrElse(latestGeneration().getOrElse(
         throw new IllegalStateException(s"empty catalog at $root")))
-      require(fs.exists(genFile(g)), s"no generation $g to tag")
+      require(log.exists(g), s"no generation $g to tag")
       fs.mkdirs(tagsDir)
       PointerFile.swing(spark.sparkContext.hadoopConfiguration,
         new Path(root), tagPath(name), g.toString, s"catalog tag $name g=$g")
@@ -690,7 +651,7 @@ class TableCatalog(spark: SparkSession, root: String) {
     // vacuumed-away parent ends the walk as a conflict, never a crash
     var cur: Option[Long] = Some(bh)
     while (cur.nonEmpty && mh.forall(cur.get > _))
-      cur = parentOf(cur.get).filter(g => fs.exists(genFile(g)))
+      cur = parentOf(cur.get).filter(log.exists)
     if (cur != mh)
       throw new TableCatalog.CommitConflictException(cur, mh)
     swingRef(TableCatalog.Main, bh)
@@ -700,20 +661,16 @@ class TableCatalog(spark: SparkSession, root: String) {
   // ── resolve / read ──────────────────────────────────────────────────
 
   /** Ref `ref`'s head: max(its pointer, newest logged generation
-    * COMMITTED ON this ref), else None. Healing PAST the pointer is
-    * safe and required: a generation file is only ever written after
-    * every table version it references is fully staged (publish step
-    * 2 of 3), so a crash between the generation-file write and the
-    * pointer swing leaves a complete, readable generation the pointer
-    * merely hasn't caught up to. Without the heal, the next commit
-    * would reuse that generation number and overwrite the file — and
-    * a redelivered micro-batch whose id is logged in the orphaned
-    * file would no-op, silently losing the batch (the exactly-once
-    * hole ADVICE r8 flagged at CatalogSink:37). The heal is PER-REF
-    * (each generation records the ref it was committed on), so a
-    * branch writer's orphan can never yank main's head onto the
-    * branch. Only generations beyond the pointer are ever inspected,
-    * and their refs are cached — steady-state cost is one listing.
+    * COMMITTED ON this ref), else None — [[CommitLog]]'s visibility
+    * rule applied per ref. Healing PAST the pointer is required:
+    * without it a redelivered micro-batch whose id is logged in a
+    * generation the pointer never caught up to would no-op while the
+    * next commit built on the stale head, silently losing the batch.
+    * The heal is PER-REF (each generation records the ref it was
+    * committed on), so a branch writer's orphan can never yank main's
+    * head onto the branch. Only generations beyond the pointer are
+    * ever inspected, and their refs are cached — steady-state cost is
+    * one listing.
     */
   def headOf(ref: String): Option[Long] = {
     val pv = readRefPointer(ref)
@@ -749,14 +706,14 @@ class TableCatalog(spark: SparkSession, root: String) {
       var cur = latestGeneration()
       while (cur.nonEmpty) {
         b += cur.get
-        cur = parentOf(cur.get).filter(g => fs.exists(genFile(g)))
+        cur = parentOf(cur.get).filter(log.exists)
       }
       b.toSet
     }
     val rows = loggedGenerations().map { g =>
-      (g, generationTs(g), refOf(g), parentOf(g).getOrElse(-1L),
-        mainChain.contains(g), tableVersions(g).size.toLong,
-        morVersions(g).size.toLong)
+      val e = gen(g)
+      (g, e.ts, e.ref, parentOf(g).getOrElse(-1L),
+        mainChain.contains(g), e.tables.size.toLong, e.mor.size.toLong)
     }
     import spark.implicits._
     rows.toDF("generation", "ts", "ref", "parent", "on_main",
@@ -764,47 +721,13 @@ class TableCatalog(spark: SparkSession, root: String) {
   }
 
   /** All committed generations, ascending. */
-  def loggedGenerations(): Seq[Long] =
-    if (!fs.exists(catDir)) Seq.empty
-    else fs.listStatus(catDir).map(_.getPath.getName)
-      .filter(_.endsWith(".json")).map(_.stripSuffix(".json").toLong)
-      .sorted.toSeq
-
-  /** ONE parser for every `"section":{...}` map in a generation file
-    * (values differ only in type — a second hand-rolled copy per
-    * section would have to track format changes in lockstep).
-    */
-  private def parseSection[A](json: String, section: String,
-      value: String => A): Map[String, A] = {
-    val parts = json.split("\"" + section + "\":\\{")
-    if (parts.length < 2) Map.empty // generation predates the section
-    else {
-      val body = parts(1).takeWhile(_ != '}')
-      if (body.trim.isEmpty) Map.empty
-      else body.split(",").map { kv =>
-        val Array(k, v) = kv.split(":")
-        k.trim.stripPrefix("\"").stripSuffix("\"") -> value(v.trim)
-      }.toMap
-    }
-  }
-
-  private def parseVersionMap(json: String, section: String): Map[String, Long] =
-    parseSection(json, section, _.toLong)
-
-  private def genJson(g: Long): String = {
-    val in = fs.open(genFile(g))
-    val s = scala.io.Source.fromInputStream(in).mkString
-    in.close()
-    s
-  }
+  def loggedGenerations(): Seq[Long] = log.ids()
 
   /** The snapshot-table→version map of generation `g`. */
-  def tableVersions(g: Long): Map[String, Long] =
-    parseVersionMap(genJson(g), "tables")
+  def tableVersions(g: Long): Map[String, Long] = gen(g).tables
 
   /** The MoR-member→store-generation map of generation `g`. */
-  def morVersions(g: Long): Map[String, Long] =
-    parseVersionMap(genJson(g), "mor")
+  def morVersions(g: Long): Map[String, Long] = gen(g).mor
 
   /** The APPEND-member→segment-chain map of generation `g` (newest
     * segment first). An append member's state at a generation is the
@@ -814,21 +737,15 @@ class TableCatalog(spark: SparkSession, root: String) {
     * segment model on the catalog's versioned layout). Generations
     * written before append support parse as empty.
     */
-  def appendVersions(g: Long): Map[String, Seq[Long]] =
-    parseSection(genJson(g), "app",
-      _.stripPrefix("\"").stripSuffix("\"")).collect {
-      case (t, s) if s.nonEmpty => t -> s.split("-").toSeq.map(_.toLong)
-    }
+  def appendVersions(g: Long): Map[String, Seq[Long]] = gen(g).chains
 
   /** Every member name of generation `g`, whatever its kind (snapshot,
     * append chain, or MoR) — the existence check maintenance policies
     * and invariants key on.
     */
   def memberNames(g: Long): Set[String] = {
-    val json = genJson(g)
-    parseVersionMap(json, "tables").keySet ++
-      parseVersionMap(json, "mor").keySet ++
-      parseSection(json, "app", identity[String] _).keySet
+    val e = gen(g)
+    e.tables.keySet ++ e.mor.keySet ++ e.app.keySet
   }
 
   /** The table→physical-location map of generation `g` — entries
@@ -836,87 +753,26 @@ class TableCatalog(spark: SparkSession, root: String) {
     * table's); absent means the table lives under its own name.
     * Generations written before clone support parse as empty.
     */
-  def tableLocations(g: Long): Map[String, String] =
-    parseSection(genJson(g), "locs",
-      _.stripPrefix("\"").stripSuffix("\""))
+  def tableLocations(g: Long): Map[String, String] = gen(g).locs
 
   /** Commit ts of generation `g`. */
-  def generationTs(g: Long): Long = {
-    val in = fs.open(genFile(g))
-    val s = scala.io.Source.fromInputStream(in).mkString
-    in.close()
-    s.split(""""ts":""")(1).takeWhile(c => c.isDigit || c == '-').toLong
-  }
+  def generationTs(g: Long): Long = gen(g).ts
 
   /** The ref generation `g` was committed on — cached per handle
-    * (generation files are immutable). Files from before branch
-    * support carry no ref field and parse as main.
+    * (generation entries are immutable).
     */
   private val refCache =
     new java.util.concurrent.ConcurrentHashMap[Long, String]()
 
-  private def refOf(g: Long): String =
-    refCache.computeIfAbsent(g, _ => {
-      val parts = genJson(g).split(""""ref":"""")
-      if (parts.length < 2) TableCatalog.Main
-      else parts(1).takeWhile(_ != '"')
-    })
+  private def refOf(g: Long): String = refCache.computeIfAbsent(g, gen(_).ref)
 
-  /** The generation `g` extends (None at a root). Pre-branch files
+  /** The generation `g` extends (None at a root). Pre-branch entries
     * carry no parent field; their history was linear, so the parent
-    * is g−1 when that file still exists.
+    * is g−1 when that entry still exists.
     */
-  private[graft] def parentOf(g: Long): Option[Long] = {
-    val parts = genJson(g).split(""""parent":""")
-    if (parts.length < 2)
-      Some(g - 1).filter(p => p >= 0 && fs.exists(genFile(p)))
-    else {
-      val v = parts(1).takeWhile(c => c.isDigit || c == '-').toLong
-      if (v < 0) None else Some(v)
-    }
-  }
-
-  /** Commit timestamps already logged — seeded from the commit log
-    * ONCE per catalog handle, then maintained in memory, so a
-    * streaming sink's per-batch redelivery check is O(1) instead of
-    * one filesystem round-trip per historical generation per batch
-    * (ADVICE r8: the scan-the-whole-log-every-batch pattern grows
-    * without bound over a long-running stream). Visibility matches
-    * [[latestGeneration]] (pointer-heal included) because the seed
-    * reads every logged generation file, which by the publish
-    * protocol all reference fully staged data.
-    */
-  private lazy val committedTsCache: scala.collection.mutable.Set[Long] = {
-    val s = scala.collection.mutable.Set.empty[Long]
-    loggedGenerations().foreach(g => s += generationTs(g))
-    s
-  }
-
-  /** O(1) amortized: was any generation committed with this ts? */
-  def tsCommitted(ts: Long): Boolean = committedTsCache.contains(ts)
-
-  /** Streaming-sink redelivery check with O(1) RESTART seeding (one
-    * [[BatchMark]] read + the crash-window tail of the log, not every
-    * generation file). Only for monotone gapless batch ids — see
-    * [[BatchMark]]; other callers use [[tsCommitted]]. Visibility
-    * matches [[tsCommitted]]: every LOGGED generation counts (orphans
-    * included — the pointer heal makes them reader-visible).
-    */
-  def batchCommitted(id: Long): Boolean =
-    id <= batchSeed._1 || batchSeed._2.contains(id)
-
-  /** Persist the batch high-water mark after a sink commit of `id`. */
-  def markBatch(id: Long): Unit = {
-    batchSeed._2 += id
-    BatchMark.mark(spark.sparkContext.hadoopConfiguration, fs,
-      new Path(root), loggedGenerations().lastOption.getOrElse(-1L), id)
-  }
-
-  private lazy val batchSeed: (Long, scala.collection.mutable.Set[Long]) = {
-    val (floor, maxId) = BatchMark.read(fs, new Path(root)).getOrElse((-1L, -1L))
-    val s = scala.collection.mutable.Set.empty[Long]
-    loggedGenerations().filter(_ > floor).foreach(g => s += generationTs(g))
-    (maxId, s)
+  private[graft] def parentOf(g: Long): Option[Long] = gen(g).parent match {
+    case None => Some(g - 1).filter(p => p >= 0 && log.exists(p))
+    case Some(p) => Some(p).filter(_ >= 0)
   }
 
   /** Read `table` at catalog generation `g` — every table read at the
@@ -925,25 +781,19 @@ class TableCatalog(spark: SparkSession, root: String) {
     * recorded (later deltas, committed after `g`, are invisible).
     */
   def readAt(g: Long, table: String): DataFrame = {
-    val json = genJson(g) // one read feeds versions AND locations
-    parseVersionMap(json, "tables").get(table) match {
+    val e = gen(g) // one read feeds versions AND locations
+    e.tables.get(table) match {
       case Some(v) =>
-        val loc = parseSection(json, "locs",
-          (s: String) => s.stripPrefix("\"").stripSuffix("\""))
-          .getOrElse(table, table)
-        spark.read.parquet(tableDir(loc, v).toString)
+        spark.read.parquet(tableDir(e.locs.getOrElse(table, table), v).toString)
       case None =>
         // append member: the state IS the union of the chain's
         // immutable segment directories — one multi-path scan, no
         // resolve/shuffle (segments are disjoint pure appends)
-        parseSection(json, "app",
-          (s: String) => s.stripPrefix("\"").stripSuffix("\""))
-          .get(table).filter(_.nonEmpty) match {
+        e.chains.get(table) match {
           case Some(chain) =>
-            spark.read.parquet(chain.split("-").toSeq
-              .map(v => tableDir(table, v.toLong).toString): _*)
+            spark.read.parquet(chain.map(v => tableDir(table, v).toString): _*)
           case None =>
-            val mv = parseVersionMap(json, "mor").getOrElse(table,
+            val mv = e.mor.getOrElse(table,
               throw new IllegalArgumentException(s"table $table not in generation $g"))
             morStore(table, morKeys(table)).readAt(mv)
         }
@@ -959,16 +809,8 @@ class TableCatalog(spark: SparkSession, root: String) {
     * builders like [[CatalogIndex]] that need the version's actual
     * file paths. MoR members have no single directory and throw.
     */
-  def versionDir(g: Long, table: String): String = {
-    val json = genJson(g)
-    val v = parseVersionMap(json, "tables").getOrElse(table,
-      throw new IllegalArgumentException(
-        s"table $table is not a snapshot table of generation $g"))
-    val loc = parseSection(json, "locs",
-      (s: String) => s.stripPrefix("\"").stripSuffix("\""))
-      .getOrElse(table, table)
-    tableDir(loc, v).toString
-  }
+  def versionDir(g: Long, table: String): String =
+    tableDir(tableLocations(g).getOrElse(table, table), versionOf(g, table)).toString
 
   /** Snapshot `table`'s version number at generation `g`. */
   def versionOf(g: Long, table: String): Long =
@@ -992,7 +834,7 @@ class TableCatalog(spark: SparkSession, root: String) {
     var cur = headOf(ref)
     while (cur.nonEmpty) {
       if (generationTs(cur.get) <= tsMillis) return cur.get
-      cur = parentOf(cur.get).filter(g => fs.exists(genFile(g)))
+      cur = parentOf(cur.get).filter(log.exists)
     }
     throw new IllegalArgumentException(
       s"no catalog generation at or before $tsMillis on $ref")
@@ -1010,7 +852,7 @@ class TableCatalog(spark: SparkSession, root: String) {
   // ── retention ───────────────────────────────────────────────────────
 
   /** Retention: keep the newest `keepLast` catalog generations, drop
-    * the older generation files, and reclaim every table version
+    * the older generation entries, and reclaim every table version
     * directory no kept generation references. Snapshot tables delete
     * versions below their minimum kept reference (versions only ever
     * grow, and every kept generation carries every table forward, so
@@ -1032,7 +874,7 @@ class TableCatalog(spark: SparkSession, root: String) {
       var cur = latestGeneration()
       while (cur.nonEmpty && b.size < keepLast) {
         b += cur.get
-        cur = parentOf(cur.get).filter(g => fs.exists(genFile(g)))
+        cur = parentOf(cur.get).filter(log.exists)
       }
       b.toSeq
     }
@@ -1115,7 +957,7 @@ class TableCatalog(spark: SparkSession, root: String) {
       .foreach { case (t, minG) =>
         morStore(t, morKeys(t)).vacuumBefore(minG)
       }
-    dropped.foreach(g => fs.delete(genFile(g), false))
+    dropped.foreach(log.delete)
     dropped
   }
 }
@@ -1125,11 +967,24 @@ object TableCatalog {
   /** The trunk ref every read/commit defaults to. */
   val Main = "main"
 
-  /** Field labels of the hand-rolled generation JSON — a table named
-    * after one would collide with the label-keyed parse.
+  /** One `_catalog/G.json` entry. `app` holds each append member's
+    * chain as a dash-joined string ("9-7-3", newest first). Entries
+    * from before branches, clones or appends lack the later fields and
+    * read with these defaults; a missing `parent` is resolved by
+    * [[TableCatalog.parentOf]].
     */
-  private[sources] val ReservedNames =
-    Set("generation", "ts", "ref", "parent", "tables", "mor", "locs", "app")
+  final case class Generation(
+      generation: Long, ts: Long, ref: String = Main,
+      @JsonDeserialize(contentAs = classOf[java.lang.Long]) parent: Option[Long] = None,
+      @JsonDeserialize(contentAs = classOf[java.lang.Long]) tables: Map[String, Long] = Map.empty,
+      @JsonDeserialize(contentAs = classOf[java.lang.Long]) mor: Map[String, Long] = Map.empty,
+      app: Map[String, String] = Map.empty,
+      locs: Map[String, String] = Map.empty) extends CommitLog.Entry {
+    def id: Long = generation
+    def chains: Map[String, Seq[Long]] = app.collect {
+      case (t, s) if s.nonEmpty => t -> s.split("-").toSeq.map(_.toLong)
+    }
+  }
 
   /** A [[TableCatalog.commitAllIf]]/[[TableCatalog.transact]] lost
     * the optimistic race: the catalog advanced past the generation

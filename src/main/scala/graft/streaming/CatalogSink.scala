@@ -15,9 +15,10 @@ import graft.sources.TableCatalog
   *
   * Exactly-once: the catalog generation records the micro-batch id
   * as its commit timestamp; [[commitBatch]] is a no-op for an id
-  * already committed, so a foreachBatch redelivery after a crash
-  * cannot double-apply ANY of the tables (the all-or-nothing pointer
-  * means there is no state where only some tables took the batch).
+  * already committed ([[graft.sources.CommitLog.once]]), so a
+  * foreachBatch redelivery after a crash cannot double-apply ANY of
+  * the tables (one generation entry covers them all, so there is no
+  * state where only some tables took the batch).
   *
   * `derive` maps a micro-batch to each table's NEW full state given
   * its previous state (None at the first batch) — append is
@@ -47,28 +48,24 @@ object CatalogSink {
     */
   def commitBatchOn(
       cat: TableCatalog, ref: String, batch: DataFrame, batchId: Long,
-      derive: Map[String, (Option[DataFrame], DataFrame) => DataFrame]): Long = {
-    // O(1) check AND O(1) restart seeding (persisted BatchMark); a
-    // generation file orphaned by a crash between its write and the
-    // pointer swing counts as committed BECAUSE the catalog's per-ref
-    // pointer heal (TableCatalog.headOf) makes it reader-visible — the
-    // replayed batch correctly no-ops against an already-durable cut
-    // (the mark's crash-window tail scan reads LOGGED generations, so
-    // orphans are seen).
-    if (cat.batchCommitted(batchId)) -1L
-    else {
-      val prevGen = cat.headOf(ref)
-      val newStates = derive.map { case (t, fn) =>
-        val prev = prevGen.flatMap { g =>
-          cat.tableVersions(g).get(t).map(_ => cat.readAt(g, t))
-        }
-        t -> fn(prev, batch)
-      }
-      val g = cat.commitAllOn(ref, newStates, commitTsMillis = batchId)
-      cat.markBatch(batchId)
-      g
+      derive: Map[String, (Option[DataFrame], DataFrame) => DataFrame]): Long =
+    // a generation entry the ref's pointer never caught up to counts
+    // as committed: the per-ref heal (TableCatalog.headOf) makes it
+    // reader-visible, so the replayed batch no-ops against a durable cut
+    cat.log.once(batchId) {
+      cat.commitAllOn(ref, derived(cat, cat.headOf(ref), batch, derive),
+        commitTsMillis = batchId)
     }
-  }
+
+  /** Each derived table's new state from its state at `prevGen`. */
+  private def derived(cat: TableCatalog, prevGen: Option[Long], batch: DataFrame,
+      derive: Map[String, (Option[DataFrame], DataFrame) => DataFrame]): Map[String, DataFrame] =
+    derive.map { case (t, fn) =>
+      val prev = prevGen.flatMap { g =>
+        cat.tableVersions(g).get(t).map(_ => cat.readAt(g, t))
+      }
+      t -> fn(prev, batch)
+    }
 
   /** [[commitBatch]] with MoR members: `morDerive` maps the
     * micro-batch to each MoR member's CDC delta (base + __op rows;
@@ -82,23 +79,12 @@ object CatalogSink {
   def commitBatchMixed(
       cat: TableCatalog, batch: DataFrame, batchId: Long,
       derive: Map[String, (Option[DataFrame], DataFrame) => DataFrame],
-      morDerive: Map[String, DataFrame => DataFrame]): Long = {
-    if (cat.batchCommitted(batchId)) -1L
-    else {
-      val prevGen = cat.latestGeneration()
-      val newStates = derive.map { case (t, fn) =>
-        val prev = prevGen.flatMap { g =>
-          cat.tableVersions(g).get(t).map(_ => cat.readAt(g, t))
-        }
-        t -> fn(prev, batch)
-      }
-      val g = cat.commitAllWith(newStates,
+      morDerive: Map[String, DataFrame => DataFrame]): Long =
+    cat.log.once(batchId) {
+      cat.commitAllWith(derived(cat, cat.latestGeneration(), batch, derive),
         morDerive.map { case (t, fn) => t -> fn(batch) },
         commitTsMillis = batchId)
-      cat.markBatch(batchId)
-      g
     }
-  }
 
   /** Exactly-once APPEND-member sink: each micro-batch commits ONLY
     * its own rows per member ([[TableCatalog.commitAllAppend]] — a
@@ -116,11 +102,8 @@ object CatalogSink {
   def commitBatchAppend(cat: TableCatalog, batchId: Long,
       appends: Map[String, DataFrame],
       snapshots: Map[String, DataFrame] = Map.empty): Long =
-    if (cat.batchCommitted(batchId)) -1L
-    else {
-      val g = cat.commitAllAppend(snapshots, appends, commitTsMillis = batchId)
-      cat.markBatch(batchId)
-      g
+    cat.log.once(batchId) {
+      cat.commitAllAppend(snapshots, appends, commitTsMillis = batchId)
     }
 
   /** Attach the sink to a stream (foreachBatch driver). */

@@ -16,8 +16,9 @@ import graft.sources.MorStore
   *
   * Exactly-once: the store's commit log records the micro-batch id
   * as the commit timestamp; [[appendBatch]] no-ops on an id already
-  * logged, so crash-replay redelivery cannot double-apply a delta —
-  * the same ledger discipline as [[SnapshotSink]]/[[CatalogSink]].
+  * committed ([[graft.sources.CommitLog.once]]), so crash-replay
+  * redelivery cannot double-apply a delta — the same check as
+  * [[SnapshotSink]]/[[CatalogSink]].
   */
 object MorSink {
 
@@ -30,18 +31,10 @@ object MorSink {
     */
   def appendBatch(store: MorStore, delta: DataFrame, batchId: Long,
       compactEvery: Int = 0): Long = {
-    // O(1) check AND O(1) restart seeding: the persisted BatchMark
-    // high-water file replaces both the per-batch log scan (ADVICE r8)
-    // and the per-restart whole-log seed (ADVICE r9 — a 10⁴-generation
-    // stream paid 10⁴ metadata reads before its first batch)
-    if (store.batchCommitted(batchId)) -1L
-    else {
-      val g = store.commitDelta(delta, commitTsMillis = batchId)
-      store.markBatch(batchId)
-      if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
-        store.compact(commitTsMillis = -(batchId + 1))
-      g
-    }
+    val g = store.log.once(batchId)(store.commitDelta(delta, commitTsMillis = batchId))
+    if (g >= 0 && compactEvery > 0 && (batchId + 1) % compactEvery == 0)
+      store.compact(commitTsMillis = -(batchId + 1))
+    g
   }
 
   /** Attach the sink to a CDC stream (foreachBatch driver). */

@@ -14,11 +14,11 @@ import graft.sources.SnapshotStore
   *
   * Exactly-once: the store's commit log records the micro-batch id as
   * the commit timestamp, and [[appendBatch]] is a NO-OP for an id
-  * already in the log — so the foreachBatch redelivery after a crash
-  * (Structured Streaming replays the last uncommitted batch from the
-  * checkpoint) cannot double-append. The same ledger-idempotency
-  * discipline as the CDC pipeline's FileLedger, expressed in MVCC
-  * terms.
+  * already committed ([[graft.sources.CommitLog.once]]) — so the
+  * foreachBatch redelivery after a crash (Structured Streaming replays
+  * the last uncommitted batch from the checkpoint) cannot
+  * double-append. The same ledger-idempotency discipline as the CDC
+  * pipeline's FileLedger, expressed in MVCC terms.
   */
 object SnapshotSink {
 
@@ -41,19 +41,11 @@ object SnapshotSink {
     * redelivered batch is a no-op, so the fold applies exactly once.
     */
   def foldBatch(store: SnapshotStore, batch: DataFrame, batchId: Long,
-      fold: (Option[DataFrame], DataFrame) => DataFrame): Long = {
-    // O(1) check AND O(1) restart seeding via the persisted BatchMark —
-    // a history() scan here was O(total versions) of filesystem
-    // round-trips per micro-batch (ADVICE r9), and even the seeded
-    // cache re-read the whole log once per restarted handle
-    if (store.batchCommitted(batchId)) -1L
-    else {
-      val v = store.commit(fold(store.latestVersion().map(store.read), batch),
+      fold: (Option[DataFrame], DataFrame) => DataFrame): Long =
+    store.log.once(batchId) {
+      store.commit(fold(store.latestVersion().map(store.read), batch),
         commitTsMillis = batchId)
-      store.markBatch(batchId)
-      v
     }
-  }
 
   /** Attach the sink to a stream (foreachBatch driver). */
   def attach(stream: DataFrame, store: SnapshotStore,

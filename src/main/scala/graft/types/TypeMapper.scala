@@ -1,7 +1,5 @@
 package graft.types
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
 /** Source-type (MySQL/DMS/Parquet type strings) → Spark type mapping.
@@ -185,8 +183,4 @@ object TypeMapper {
 
   private def isTimestampLike(dt: DataType): Boolean =
     dt == TimestampType || dt == TimestampNTZType
-
-  /** `CAST("col" AS type)` equivalent (reference: mapping.py:327-343). */
-  def castExpression(column: String, target: DataType): Column =
-    col(column).cast(target)
 }
