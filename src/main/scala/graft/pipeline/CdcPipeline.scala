@@ -1,5 +1,7 @@
 package graft.pipeline
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -100,10 +102,15 @@ final class CdcPipeline(
     }
   }
 
+  /** Apply one routed file. Any non-fatal failure becomes a `failed`
+    * ledger row; a fatal JVM error (OOM, interrupt) propagates unrecorded.
+    * The staged file is released on every path.
+    */
   private def applyFile(fileKey: String, table: String, keys: Seq[String]): Outcome = {
+    var staging: DataFrame = null
     try {
       // STEP 1: stage with ingestion_seq (handler.py:486-546)
-      val staging = CdcDedup.readCdcFiles(spark, Seq(fileKey)).persist()
+      staging = CdcDedup.readCdcFiles(spark, Seq(fileKey)).persist()
       val store = storeFor(table, keys)
       if (!store.exists)
         throw new IllegalStateException(s"target table '$table' not initialized at ${store.path}")
@@ -122,7 +129,7 @@ final class CdcPipeline(
       // (the reference's publish is try/except-warning too)
       if (evolution.hasChanges)
         try evolutionLog.log(table, CdcPath.ledgerKey(fileKey), evolution)
-        catch { case e: Throwable =>
+        catch { case NonFatal(e) =>
           System.err.println(s"[graft] evolution-log append failed for $table: ${e.getMessage}")
         }
 
@@ -172,7 +179,6 @@ final class CdcPipeline(
 
       // STEP 7: ledger (handler.py:962-967)
       ledger.markCompleted(CdcPath.ledgerKey(fileKey))
-      staging.unpersist()
 
       // probabilistic maintenance: with small probability per invocation,
       // apply ledger retention (reference: AUTOMATIC_CLEANUP.md:12-63 —
@@ -182,10 +188,10 @@ final class CdcPipeline(
 
       Applied(table, touched, evolution)
     } catch {
-      case e: Throwable =>
+      case NonFatal(e) =>
         ledger.markFailed(CdcPath.ledgerKey(fileKey), e.getMessage)
         Failed(table, e)
-    }
+    } finally if (staging != null) staging.unpersist()
   }
 
   /** Backfill driver: apply every unprocessed CDC file under `root`,

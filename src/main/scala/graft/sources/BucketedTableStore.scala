@@ -3,9 +3,9 @@ package graft.sources
 import java.util.UUID
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, IntegerType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, MapType, StructField, StructType}
 
 import graft.operators.CdcMerge
 
@@ -22,7 +22,10 @@ import graft.operators.CdcMerge
   * A merge then:
   *   1. computes the distinct buckets touched by the staged keys (≤ batch
   *      size, usually ≪ N);
-  *   2. reads ONLY those partitions (partition-pruned scan);
+  *   2. reads ONLY those bucket directories: the root listing that the
+  *      swap recovery already does names the live ones, so Spark lists
+  *      the touched directories and never the rest of the table (a full
+  *      read — [[read]] — still lists every bucket);
   *   3. runs the broadcast [[CdcMerge]] against that slice;
   *   4. writes the slice to a temp dir and atomically swaps the affected
   *      bucket directories (write-temp-then-rename — the moral equivalent
@@ -82,19 +85,18 @@ final class BucketedTableStore(
     * keys — validate against the persisted layout before any merge.
     */
   private def validateBucketCount(): Unit =
-    if (fs.exists(metaPath)) {
-      val in = fs.open(metaPath)
-      val bytes = new Array[Byte](fs.getFileStatus(metaPath).getLen.toInt)
-      in.readFully(bytes)
-      in.close()
-      val m = raw""""numBuckets"\s*:\s*(\d+)""".r
-        .findFirstMatchIn(new String(bytes, "UTF-8")).map(_.group(1).toInt)
-      m.foreach { persisted =>
-        require(persisted == numBuckets,
-          s"store at $path was written with numBuckets=$persisted " +
-            s"but opened with numBuckets=$numBuckets")
-      }
+    readSidecar(metaPath).map(CommitLog.json.readValue(_, classOf[Meta])).foreach { m =>
+      require(m.numBuckets == numBuckets,
+        s"store at $path was written with numBuckets=${m.numBuckets} " +
+          s"but opened with numBuckets=$numBuckets")
     }
+
+  /** A sidecar's text (one open), else None when the store has none. */
+  private def readSidecar(p: Path): Option[String] =
+    try {
+      val in = fs.open(p)
+      try Some(new String(in.readAllBytes(), "UTF-8")) finally in.close()
+    } catch { case _: java.io.FileNotFoundException => None }
 
   private def renameOrFail(src: Path, dst: Path): Unit =
     require(fs.rename(src, dst), s"rename failed: $src -> $dst")
@@ -130,31 +132,28 @@ final class BucketedTableStore(
   }
 
   private def readSchemaSidecar(): Option[StructType] =
-    if (!fs.exists(sidecarPath)) None
-    else {
-      val in = fs.open(sidecarPath)
-      val bytes = new Array[Byte](fs.getFileStatus(sidecarPath).getLen.toInt)
-      in.readFully(bytes)
-      in.close()
-      Some(DataType.fromJson(new String(bytes, "UTF-8")).asInstanceOf[StructType])
-    }
+    readSidecar(sidecarPath).map(DataType.fromJson(_).asInstanceOf[StructType])
 
-  /** Raw read including the bucket partition column; survives a fully
-    * emptied table via the sidecar schema.
+  private def withBucketCol(s: StructType): StructType =
+    s.add(StructField(BucketCol, IntegerType, nullable = true))
+
+  /** Full-table read (partition column dropped); survives a fully
+    * emptied table via the sidecar schema. Lists every bucket.
     */
-  private def readRaw(): DataFrame = readSchemaSidecar() match {
-    case Some(s) =>
-      spark.read
-        .schema(s.add(StructField(BucketCol, IntegerType, nullable = true)))
-        .parquet(path)
+  def read(): DataFrame = (readSchemaSidecar() match {
+    case Some(s) => spark.read.schema(withBucketCol(s)).parquet(path)
     case None => spark.read.parquet(path)
+  }).drop(BucketCol)
+
+  /** Table schema without the bucket column, exactly as [[read]] reports
+    * it: the sidecar's, with every field nullable as a file-source read
+    * makes it, so asking lists no bucket. A store written without a
+    * sidecar falls back to a full read.
+    */
+  def schema: StructType = readSchemaSidecar() match {
+    case Some(s) => asNullable(s).asInstanceOf[StructType]
+    case None => read().schema
   }
-
-  /** Full-table read (partition column dropped). */
-  def read(): DataFrame = readRaw().drop(BucketCol)
-
-  /** Table schema without the bucket column. */
-  def schema: StructType = read().schema
 
   /** Apply schema evolution: append safe new columns (nullable) to the
     * stored schema — the ALTER TABLE ADD COLUMN ... NULL of the reference
@@ -173,17 +172,21 @@ final class BucketedTableStore(
       broadcastStaging: Boolean = true): Int = {
     require(exists, s"target $path not initialized")
     validateBucketCount()
-    recoverInterruptedSwaps()
+    val live = recoverInterruptedSwaps()
 
     // 1. buckets touched by this batch (small: ≤ distinct staged keys)
     val stagingB = staging.withColumn(BucketCol, bucketOf(staging)).persist()
     val affected = stagingB.select(BucketCol).distinct().collect().map(_.getInt(0)).sorted
     if (affected.isEmpty) { stagingB.unpersist(); return 0 }
 
-    // 2. partition-pruned scan of only the affected buckets
-    val slice = readRaw()
-      .filter(col(BucketCol).isin(affected.map(Integer.valueOf).toSeq: _*))
-      .drop(BucketCol)
+    // 2. scan of only the affected live bucket directories (basePath
+    // keeps __bucket a partition column); none live ⇒ an empty slice
+    val s = schema
+    val dirs = affected.filter(live).map(b => new Path(path, s"$BucketCol=$b").toString)
+    val slice =
+      if (dirs.isEmpty) spark.createDataFrame(java.util.List.of[Row](), s)
+      else spark.read.schema(withBucketCol(s)).option("basePath", path)
+        .parquet(dirs.toSeq: _*).drop(BucketCol)
 
     // 3. merge on the slice — broadcast for CDC-file-sized batches, a
     // shuffle join when the caller (e.g. MergePlanner's ShuffleCow for
@@ -233,26 +236,42 @@ final class BucketedTableStore(
     * fresh replacement never landed). Restore any trashed bucket whose
     * live dir is missing, then clear leftover tmp/trash dirs — the
     * interrupted file was never ledgered, so its retry re-merges cleanly
-    * on the restored state.
+    * on the restored state. Returns the buckets live afterwards, from
+    * the same one root listing.
     */
-  private def recoverInterruptedSwaps(): Unit = {
-    val leftovers = fs.listStatus(new Path(path))
-      .map(_.getPath)
+  private def recoverInterruptedSwaps(): Set[Int] = {
+    val listed = fs.listStatus(new Path(path)).map(_.getPath)
+    val leftovers = listed
       .filter(p => p.getName.startsWith(".merge-trash-") || p.getName.startsWith(".merge-tmp-"))
-    leftovers.filter(_.getName.startsWith(".merge-trash-")).foreach { trash =>
-      fs.listStatus(trash).map(_.getPath)
-        .filter(_.getName.startsWith(s"$BucketCol="))
-        .foreach { trashedBucket =>
-          val live = new Path(path, trashedBucket.getName)
-          if (!fs.exists(live)) renameOrFail(trashedBucket, live)
-        }
+    val trashed = leftovers.filter(_.getName.startsWith(".merge-trash-")).flatMap { trash =>
+      fs.listStatus(trash).map(_.getPath).filter(_.getName.startsWith(s"$BucketCol="))
+    }
+    trashed.foreach { trashedBucket =>
+      val live = new Path(path, trashedBucket.getName)
+      if (!fs.exists(live)) renameOrFail(trashedBucket, live)
     }
     leftovers.foreach(fs.delete(_, true))
+    // every trashed bucket is live now: restored, or live already
+    (listed ++ trashed).map(_.getName).filter(_.startsWith(s"$BucketCol="))
+      .map(_.stripPrefix(s"$BucketCol=").toInt).toSet
   }
 }
 
 object BucketedTableStore {
   val BucketCol = "__bucket"
+
+  /** The `_graft_meta.json` sidecar. */
+  private final case class Meta(numBuckets: Int)
+
+  /** `t` with every field, element and map value nullable, recursively. */
+  private def asNullable(t: DataType): DataType = t match {
+    case s: StructType =>
+      StructType(s.fields.map(f => f.copy(dataType = asNullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(asNullable(a.elementType), containsNull = true)
+    case m: MapType =>
+      MapType(asNullable(m.keyType), asNullable(m.valueType), valueContainsNull = true)
+    case other => other
+  }
 
   def create(
       spark: SparkSession,

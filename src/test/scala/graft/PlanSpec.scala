@@ -258,15 +258,16 @@ class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   }
 
   test("bucket filter prunes partitions at the store scan (not post-read)") {
-    // the merge-path read (`isin` over the hive-partitioned __bucket
-    // column) must become a PartitionFilter — at 10⁵ buckets the scan
-    // lists only the touched directories instead of reading the table
+    // a bucket `isin` over the hive-partitioned __bucket column must
+    // become a PartitionFilter, so no file outside the set is read. The
+    // scan still lists every bucket directory first: a store merge avoids
+    // that by reading only the touched directories; full reads list all
     import org.apache.spark.sql.functions.col
     val root = java.nio.file.Files.createTempDirectory("planspec_bucket").toString
     val store = new sources.BucketedTableStore(spark, s"$root/t", Seq("k"), numBuckets = 16)
     import spark.implicits._
     store.initialize((1L to 1000L).map(i => (i, s"v$i")).toDF("k", "v"))
-    // the same hive-partitioned layout the merge path filters with isin
+    // the hive-partitioned layout the store writes, filtered with isin
     val pruned = spark.read.parquet(s"$root/t")
       .filter(col(sources.BucketedTableStore.BucketCol)
         .isin(Integer.valueOf(3), Integer.valueOf(7)))
