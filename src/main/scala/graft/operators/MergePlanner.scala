@@ -134,11 +134,13 @@ object MergePlanner {
     * side: net side ops applied on top (deletes drop, upserts replace;
     * upsert rows are projected to the home schema — scatter batches
     * may carry staging metadata the home's merge intersection would
-    * have dropped, and may lack columns a later evolution added).
+    * have dropped, and may lack columns a later evolution added). A
+    * side the log shows empty ([[MorStore.knownEmpty]]: never written,
+    * or drained) is not resolved at all: the view is the home's read.
     */
   def resolvedView(cow: BucketedTableStore, morSide: MorStore): DataFrame = {
     val home = cow.read()
-    if (morSide.isEmpty) home
+    if (morSide.knownEmpty) home
     else {
       val net = morSide.netChanges()
       val upserts = net.filter(col(morSide.OpCol) === "U")
@@ -205,16 +207,19 @@ object MergePlanner {
     * included), so N scattered MorDelta batches cost one amortized
     * rewrite instead of N; the broadcast hint follows the net batch's
     * size through the same threshold the per-batch routing uses.
-    * Returns touched bucket count (0 when the side was already empty).
+    * Returns touched bucket count.
     *
-    * The reset commits an empty BASE generation, so a crash between
-    * the merge and the reset replays the net changes — idempotent,
-    * because the net batch is last-write-wins against rows it already
-    * wrote.
+    * The reset commits an empty BASE generation logged with 0 rows, so a
+    * crash between the merge and the reset replays the net changes —
+    * idempotent, because the net batch is last-write-wins against rows
+    * it already wrote. A side the log shows empty
+    * ([[MorStore.knownEmpty]]: never written, or already drained) is a
+    * no-op that reads no data, starts no Spark job and commits nothing,
+    * returning 0.
     */
   def drain(cow: BucketedTableStore, morSide: MorStore,
       th: Thresholds = Thresholds()): Int =
-    if (morSide.isEmpty) 0
+    if (morSide.knownEmpty) 0
     else {
       val net = morSide.netChanges()
       val rows = net.count()

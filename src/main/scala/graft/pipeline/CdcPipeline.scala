@@ -63,8 +63,10 @@ final class CdcPipeline(
 
   /** The table's complete current state: the CoW home with any
     * undrained side-store scatter resolved on top (net per-key ops —
-    * deletes drop, upserts replace). With an empty side this is
-    * exactly `storeFor(...).read()`.
+    * deletes drop, upserts replace). With a side the log shows empty
+    * (never written, or drained) this is exactly `storeFor(...).read()`.
+    * Building it starts no Spark job for the home: the store plans its
+    * scan from its own listing ([[BucketedTableStore.read]]).
     */
   def readTable(table: String): DataFrame = {
     val keys = tableKeys.keysFor(table)

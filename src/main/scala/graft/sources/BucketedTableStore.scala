@@ -2,8 +2,10 @@ package graft.sources
 
 import java.util.UUID
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, MapType, StructField, StructType}
 
@@ -23,13 +25,17 @@ import graft.operators.CdcMerge
   *   1. computes the distinct buckets touched by the staged keys (≤ batch
   *      size, usually ≪ N);
   *   2. reads ONLY those bucket directories: the root listing that the
-  *      swap recovery already does names the live ones, so Spark lists
-  *      the touched directories and never the rest of the table (a full
-  *      read — [[read]] — still lists every bucket);
+  *      swap recovery already does names the live ones, and the scan is
+  *      planned from the store's own listing of just those directories;
   *   3. runs the broadcast [[CdcMerge]] against that slice;
   *   4. writes the slice to a temp dir and atomically swaps the affected
   *      bucket directories (write-temp-then-rename — the moral equivalent
   *      of the reference's backup-rename, FIX_36_TABLES_SCHEMA.sql:18).
+  *
+  * Every scan — a merge's slice and a full [[read]] alike — is planned
+  * from that driver-side listing of the live `__bucket=b` directories:
+  * Spark gets the part files already listed, so no store read starts a
+  * Spark listing job, whatever the bucket count.
   *
   * Cost per batch ∝ touched buckets, not table size. Rerunning the same
   * batch is a no-op state-wise (merge idempotency), which preserves the
@@ -134,16 +140,48 @@ final class BucketedTableStore(
   private def readSchemaSidecar(): Option[StructType] =
     readSidecar(sidecarPath).map(DataType.fromJson(_).asInstanceOf[StructType])
 
-  private def withBucketCol(s: StructType): StructType =
-    s.add(StructField(BucketCol, IntegerType, nullable = true))
+  private def withBucketCol(s: StructType): StructType = s.add(BucketField)
 
   /** Full-table read (partition column dropped); survives a fully
-    * emptied table via the sidecar schema. Lists every bucket.
+    * emptied table via the sidecar schema. One root listing names the
+    * live buckets and [[scan]] plans the read from their listing, so no
+    * Spark listing job starts; the store is not touched (a bucket left
+    * in a swap's trash by a crash stays unread until the next merge
+    * restores it). A store written without a sidecar falls back to a
+    * file-source read of the root.
     */
-  def read(): DataFrame = (readSchemaSidecar() match {
-    case Some(s) => spark.read.schema(withBucketCol(s)).parquet(path)
-    case None => spark.read.parquet(path)
-  }).drop(BucketCol)
+  def read(): DataFrame = readSchemaSidecar() match {
+    case Some(s) => scan(asNullable(s).asInstanceOf[StructType],
+      liveBuckets(fs.listStatus(new Path(path)).map(_.getPath)))
+    case None => spark.read.parquet(path).drop(BucketCol)
+  }
+
+  /** One scan of the given live buckets, schema `s` (nullable, without
+    * the bucket column), planned from the store's own listing: each
+    * `__bucket=b` directory's part files are listed on the driver (hidden
+    * `_`/`.` names dropped, as Spark's file index drops them) and handed
+    * to Spark's file index already listed. A directory that vanished
+    * since its bucket was seen live fails the scan.
+    */
+  private def scan(s: StructType, buckets: Array[Int]): DataFrame = {
+    val root = fs.makeQualified(new Path(path))
+    val listed = new Array[Array[FileStatus]](buckets.length)
+    parallelOverBuckets(buckets.indices.toArray) { i =>
+      listed(i) = fs.listStatus(new Path(root, s"$BucketCol=${buckets(i)}"))
+        .filter(f => f.isFile && !hidden(f.getPath.getName))
+    }
+    val files = listed.flatten
+    val cache = new FileStatusCache {
+      override def getLeafFiles(p: Path): Option[Array[FileStatus]] =
+        if (p == root) Some(files) else None
+      override def putLeafFiles(p: Path, leafFiles: Array[FileStatus]): Unit = ()
+      override def invalidateAll(): Unit = ()
+    }
+    val index = new InMemoryFileIndex(spark, Seq(root), Map.empty, Some(withBucketCol(s)), cache)
+    spark.baseRelationToDataFrame(HadoopFsRelation(index,
+      StructType(Seq(BucketField)), s, None, new ParquetFileFormat, Map.empty)(spark))
+      .drop(BucketCol)
+  }
 
   /** Table schema without the bucket column, exactly as [[read]] reports
     * it: the sidecar's, with every field nullable as a file-source read
@@ -179,14 +217,9 @@ final class BucketedTableStore(
     val affected = stagingB.select(BucketCol).distinct().collect().map(_.getInt(0)).sorted
     if (affected.isEmpty) { stagingB.unpersist(); return 0 }
 
-    // 2. scan of only the affected live bucket directories (basePath
-    // keeps __bucket a partition column); none live ⇒ an empty slice
-    val s = schema
-    val dirs = affected.filter(live).map(b => new Path(path, s"$BucketCol=$b").toString)
-    val slice =
-      if (dirs.isEmpty) spark.createDataFrame(java.util.List.of[Row](), s)
-      else spark.read.schema(withBucketCol(s)).option("basePath", path)
-        .parquet(dirs.toSeq: _*).drop(BucketCol)
+    // 2. scan of only the affected live bucket directories; none live
+    // ⇒ an empty slice
+    val slice = scan(schema, affected.filter(live))
 
     // 3. merge on the slice — broadcast for CDC-file-sized batches, a
     // shuffle join when the caller (e.g. MergePlanner's ShuffleCow for
@@ -252,13 +285,22 @@ final class BucketedTableStore(
     }
     leftovers.foreach(fs.delete(_, true))
     // every trashed bucket is live now: restored, or live already
-    (listed ++ trashed).map(_.getName).filter(_.startsWith(s"$BucketCol="))
-      .map(_.stripPrefix(s"$BucketCol=").toInt).toSet
+    liveBuckets(listed ++ trashed).toSet
   }
 }
 
 object BucketedTableStore {
   val BucketCol = "__bucket"
+
+  private val BucketField = StructField(BucketCol, IntegerType, nullable = true)
+
+  /** The buckets named by `__bucket=b` directories among `listed`, ascending. */
+  private def liveBuckets(listed: Array[Path]): Array[Int] =
+    listed.map(_.getName).filter(_.startsWith(s"$BucketCol="))
+      .map(_.stripPrefix(s"$BucketCol=").toInt).sorted
+
+  /** A name Spark's file index skips, such as `_SUCCESS` or a `.crc` checksum. */
+  private def hidden(name: String): Boolean = name.startsWith("_") || name.startsWith(".")
 
   /** The `_graft_meta.json` sidecar. */
   private final case class Meta(numBuckets: Int)

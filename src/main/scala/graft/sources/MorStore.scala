@@ -1,5 +1,6 @@
 package graft.sources
 
+import com.fasterxml.jackson.databind.annotation.JsonDeserialize
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -58,14 +59,19 @@ class MorStore(spark: SparkSession, root: String, keyCols: Seq[String]) {
     */
   def commitBase(df: DataFrame, commitTsMillis: Long): Long = {
     val g = log.nextId()
-    write(g, df)
-    log.append(MorStore.Entry(g, commitTsMillis, "base"))
+    log.append(MorStore.Entry(g, commitTsMillis, "base", Some(write(g, df))))
     g
   }
 
-  private def write(g: Long, df: DataFrame): Unit = {
+  /** Write generation `g`; returns its row count, which rides the write
+    * itself (an Observation metric, no second job).
+    */
+  private def write(g: Long, df: DataFrame): Long = {
     fs.delete(genDir(g), true) // orphan from a crashed commit
-    df.write.mode("overwrite").parquet(genDir(g).toString)
+    val obs = org.apache.spark.sql.Observation()
+    df.observe(obs, count(lit(1)).as("rows"))
+      .write.mode("overwrite").parquet(genDir(g).toString)
+    obs.get("rows").asInstanceOf[Long]
   }
 
   /** Commit a CDC delta (schema = base + `__op`, optional `__seq`).
@@ -192,12 +198,12 @@ class MorStore(spark: SparkSession, root: String, keyCols: Seq[String]) {
         StructType(d.schema.filterNot(f => f.name == OpCol || f.name == SeqCol))), ts)
     }
     val base = log.nextId()
-    graft.operators.Overlap.inParallel(
+    val rows = graft.operators.Overlap.inParallel(
       deltas.zipWithIndex.map { case ((df, _), i) => () => write(base + i, df) })
     deltas.zipWithIndex.map { case ((_, ts), i) =>
       val g = base + i
       validateDeltaFiles(genDir(g), allowEvolution)
-      log.append(MorStore.Entry(g, ts, "delta"))
+      log.append(MorStore.Entry(g, ts, "delta", Some(rows(i))))
       g
     }
   }
@@ -306,6 +312,16 @@ class MorStore(spark: SparkSession, root: String, keyCols: Seq[String]) {
 
   /** True before the first commit. */
   def isEmpty: Boolean = log.head().isEmpty
+
+  /** True when the log alone shows the store resolves to no row: no
+    * commit yet, or the head is a base logged with 0 rows (a drain's
+    * reset). Reads one log entry, no data file, and starts no Spark job;
+    * an entry written without a row count is never known empty.
+    */
+  def knownEmpty: Boolean = log.head().forall { n =>
+    val e = log.read(n)
+    e.kind == "base" && e.rows.contains(0L)
+  }
 
   // ── read (the MoR resolve) ──────────────────────────────────────────
 
@@ -510,8 +526,12 @@ class MorStore(spark: SparkSession, root: String, keyCols: Seq[String]) {
 
 object MorStore {
 
-  /** One `_log/N.json` entry; `kind` is "base" or "delta". */
-  final case class Entry(generation: Long, ts: Long, kind: String)
+  /** One `_log/N.json` entry; `kind` is "base" or "delta"; `rows` is
+    * the generation's row count (None in entries written before it was
+    * recorded).
+    */
+  final case class Entry(generation: Long, ts: Long, kind: String,
+      @JsonDeserialize(contentAs = classOf[java.lang.Long]) rows: Option[Long] = None)
       extends CommitLog.Entry {
     def id: Long = generation
   }

@@ -16,7 +16,7 @@ import graft.streaming.CdcStream
 /** End-to-end: bucketed store merges, ledger idempotency, file pipeline,
   * schema evolution, streaming apply (SURVEY §5 rebuild test plan).
   */
-class PipelineSpec extends AnyFunSuite {
+class PipelineSpec extends AnyFunSuite with SparkJobProbe {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -201,6 +201,43 @@ class PipelineSpec extends AnyFunSuite {
     assert(snapshot(home.read()) == expected,
       "home alone must be complete after the drain")
     assert(snapshot(pipe.readTable("users")) == expected)
+  }
+
+  test("adaptive merge: a drained side costs nothing — later CoW files and reads skip it") {
+    import spark.implicits._
+    val root = tmpDir()
+    val keys = TableKeys.parse("""{"users": "id", "accounts": "id"}""")
+    val pipe = new CdcPipeline(spark, s"$root/store", keys, numBuckets = 8)
+    val initial = (1L to 200L).map(i => (i, s"v$i", i * 1.0)).toDF("id", "v", "amount")
+    pipe.initialLoad("users", initial)
+    pipe.initialLoad("accounts", initial)
+    val side = pipe.morSideFor("users", Seq("id"))
+    def apply(table: String, day: Int, rows: Seq[(Long, String, Double, String, String, Long)]) = {
+      val f = s"$root/fair/$table/2026/08/$day/f.parquet"
+      writeCdcFile(f, rows)
+      assert(pipe.processFile(f).isInstanceOf[CdcPipeline.Applied])
+    }
+
+    // a scattered file lands in the side, a concentrated one drains it
+    apply("users", 12, (2L to 200L by 2).map(i => (i, "upd", i * 2.0, "U", "2026-08-12 00:00:00", 0L)))
+    assert(!side.knownEmpty, "scattered batch must land as a MoR side delta")
+    apply("users", 13, Seq((1L, "one", -1.0, "U", "2026-08-13 00:00:00", 0L)))
+    assert(side.knownEmpty, "a CoW-routed batch must drain the side")
+    val drainedLog = side.log.ids()
+
+    // three more CoW files find the drained side empty: no re-drain,
+    // so no new reset base in the side's log
+    (14 to 16).foreach(d =>
+      apply("users", d, Seq((3L, s"d$d", d.toDouble, "U", s"2026-08-$d 00:00:00", 0L))))
+    assert(side.log.ids() == drainedLog, "a drained side must not be drained again")
+
+    // a read of the drained table costs what a read of a never-scattered one does
+    var users: Seq[(Long, String, Double)] = null
+    val drainedRead = jobDescriptions { users = snapshot(pipe.readTable("users")) }
+    val plainRead = jobDescriptions(snapshot(pipe.readTable("accounts")))
+    assert(drainedRead.size == plainRead.size, (drainedRead, plainRead))
+    assert(users.contains((3L, "d16", 16.0)) && users.contains((2L, "upd", 4.0)) &&
+      users.contains((1L, "one", -1.0)) && users.size == 200)
   }
 
   test("pipeline: empty CDC file applies as a no-op and is ledgered") {

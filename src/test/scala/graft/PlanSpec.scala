@@ -259,9 +259,10 @@ class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   test("bucket filter prunes partitions at the store scan (not post-read)") {
     // a bucket `isin` over the hive-partitioned __bucket column must
-    // become a PartitionFilter, so no file outside the set is read. The
-    // scan still lists every bucket directory first: a store merge avoids
-    // that by reading only the touched directories; full reads list all
+    // become a PartitionFilter, so no file outside the set is read. This
+    // file-source scan still lists every bucket directory first; the
+    // store's own reads and merges avoid that by planning their scans
+    // from the store's listing of the live buckets they read
     import org.apache.spark.sql.functions.col
     val root = java.nio.file.Files.createTempDirectory("planspec_bucket").toString
     val store = new sources.BucketedTableStore(spark, s"$root/t", Seq("k"), numBuckets = 16)

@@ -1,26 +1,27 @@
 package graft.sources
 
 import java.nio.file.Files
-import java.util.UUID
-import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkJobProbe
+import graft.config.TableKeys
 import graft.operators.SchemaEvolution
+import graft.pipeline.CdcPipeline
 
-/** The apply path's bounded listing: `schema` answers from the sidecar
-  * and a merge lists only the buckets it touches, with state equal to a
-  * full read; `schema` always equals what [[BucketedTableStore.read]]
-  * reports.
+/** The store plans every scan from its own listing: `schema` answers
+  * from the sidecar, a merge lists only the buckets it touches, and no
+  * read or merge starts a Spark listing job; a read equals a file-source
+  * read of the root, and `schema` always equals what
+  * [[BucketedTableStore.read]] reports.
   */
-class BucketedTableStoreSpec extends AnyFunSuite {
+class BucketedTableStoreSpec extends AnyFunSuite with SparkJobProbe {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -33,41 +34,6 @@ class BucketedTableStoreSpec extends AnyFunSuite {
 
   import BucketedTableStore.BucketCol
 
-  /** Descriptions of the Spark jobs `f` starts on this thread. Listener
-    * events arrive in order, so seeing a marker job that runs after `f`
-    * proves every job `f` started was delivered.
-    */
-  def jobDescriptions(f: => Unit): Seq[String] = {
-    val sc = spark.sparkContext
-    val group = s"listing-guard-${UUID.randomUUID()}"
-    val marker = s"marker-$group"
-    val seen = new ConcurrentLinkedQueue[(String, String)]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val p = Option(e.properties)
-        def prop(k: String) = p.flatMap(q => Option(q.getProperty(k))).getOrElse("")
-        seen.add(prop("spark.jobGroup.id") -> prop("spark.job.description"))
-      }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, group)
-      try {
-        f
-        sc.setJobDescription(marker)
-        sc.parallelize(Seq(1), 1).count()
-      } finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!seen.asScala.exists(_._2 == marker) && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      assert(seen.asScala.exists(_._2 == marker), "listener never saw the marker job")
-      seen.asScala.toSeq.collect { case (`group`, d) if d != marker => d }
-    } finally sc.removeSparkListener(listener)
-  }
-
-  def listings(descriptions: Seq[String]): Seq[String] =
-    descriptions.filter(_.startsWith("Listing leaf files and directories"))
-
   def rows(df: DataFrame): Seq[(Long, String)] =
     df.select(col("k"), col("v")).collect().map(r => (r.getLong(0), r.getString(1)))
       .sortBy(_._1).toSeq
@@ -76,6 +42,16 @@ class BucketedTableStoreSpec extends AnyFunSuite {
     import spark.implicits._
     keys.toDF("k").select(col("k"), pmod(hash(col("k")), lit(n)))
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+  }
+
+  /** One single-file CDC parquet at `file`, as DMS lands it. */
+  def writeCdcFile(file: String, df: DataFrame): Unit = {
+    val tmp = s"${tmpDir()}/out"
+    df.coalesce(1).write.parquet(tmp)
+    val part = new java.io.File(tmp).listFiles().find(_.getName.endsWith(".parquet")).get
+    val dest = new java.io.File(file)
+    dest.getParentFile.mkdirs()
+    Files.move(part.toPath, dest.toPath)
   }
 
   def liveBuckets(store: BucketedTableStore): Set[Int] = {
@@ -105,11 +81,120 @@ class BucketedTableStoreSpec extends AnyFunSuite {
     val mergeJobs = jobDescriptions(assert(store.merge(batch) == 1))
     assert(listings(mergeJobs).isEmpty, mergeJobs)
 
-    val state = store.read().collect().map(r => r.getLong(0) -> (r.getString(1), r.getString(2)))
-      .toMap
+    var read: Array[Row] = null
+    val readJobs = jobDescriptions { read = store.read().collect() }
+    assert(listings(readJobs).isEmpty, readJobs)
+    val state = read.map(r => r.getLong(0) -> (r.getString(1), r.getString(2))).toMap
     assert(state.size == 2000)
     assert(state(7L) == ("seven", "x"))
     assert(state(8L) == ("v8", null))
+
+    // a merge whose slice covers more than 32 live buckets (Spark's
+    // threshold for a distributed listing)
+    val wide = (1L to 300L).map(i => (i, s"w$i", "y", "U")).toDF("k", "v", "extra", "Op")
+    var touched = 0
+    val wideJobs = jobDescriptions { touched = store.merge(wide) }
+    assert(touched > 32, s"the slice must cover more than 32 buckets, got $touched")
+    assert(listings(wideJobs).isEmpty, wideJobs)
+    assert(rows(store.read()).take(2) == Seq(1L -> "w1", 2L -> "w2"))
+
+    // CdcPipeline.readTable after a MoR-routed file and the drain a
+    // later CoW-routed file runs first
+    val root = tmpDir()
+    val pipe = new CdcPipeline(spark, s"$root/store", TableKeys.parse("""{"t": "k"}"""))
+    pipe.initialLoad("t", (1L to 2000L).map(i => (i, s"v$i")).toDF("k", "v"))
+    val scatter = s"$root/fair/t/2026/08/12/a.parquet"
+    writeCdcFile(scatter, (1L to 200L).map(i => (i, s"m$i", "U")).toDF("k", "v", "Op"))
+    val scatterJobs = jobDescriptions(
+      assert(pipe.processFile(scatter).isInstanceOf[CdcPipeline.Applied]))
+    assert(listings(scatterJobs).isEmpty, scatterJobs)
+    val side = pipe.morSideFor("t", Seq("k"))
+    assert(!side.knownEmpty, "the scattered file must take the MoR route")
+    val cow = s"$root/fair/t/2026/08/13/b.parquet"
+    writeCdcFile(cow, Seq((1L, "c1", "U")).toDF("k", "v", "Op"))
+    val drainJobs = jobDescriptions(
+      assert(pipe.processFile(cow).isInstanceOf[CdcPipeline.Applied]))
+    assert(listings(drainJobs).isEmpty, drainJobs)
+    assert(side.knownEmpty, "the CoW-routed file must drain the side")
+    var table: Map[Long, String] = null
+    val tableJobs = jobDescriptions { table = rows(pipe.readTable("t")).toMap }
+    assert(listings(tableJobs).isEmpty, tableJobs)
+    assert(table.size == 2000 && table(1L) == "c1" && table(2L) == "m2" && table(300L) == "v300")
+  }
+
+  test("read equals a file-source read of the root: evolved, emptied, leftovers, nested") {
+    import spark.implicits._
+    /** `store.read()` against the sidecar-schema read of the root. */
+    def sameAsFileSource(store: BucketedTableStore): Unit = {
+      val sidecar = new Path(store.path, "_graft_schema.json")
+      val fs = sidecar.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val in = fs.open(sidecar)
+      val s = try DataType.fromJson(new String(in.readAllBytes(), "UTF-8")).asInstanceOf[StructType]
+        finally in.close()
+      val expected = spark.read.schema(s.add(BucketCol, IntegerType)).parquet(store.path)
+        .drop(BucketCol)
+      val actual = store.read()
+      assert(actual.schema == expected.schema)
+      def sorted(df: DataFrame) = df.collect().toSeq.sortBy(_.getLong(0))
+      assert(sorted(actual) == sorted(expected))
+    }
+
+    // evolved: files written before the new column lack it (null)
+    val evolved = BucketedTableStore.create(spark, s"${tmpDir()}/t", Seq("k"),
+      (1L to 50L).map(i => (i, s"v$i")).toDF("k", "v"), numBuckets = 8)
+    val staged = StructType(evolved.schema.fields :+ StructField("extra", StringType))
+    evolved.evolveSchema(SchemaEvolution.diff(staged, evolved.schema))
+    assert(evolved.merge(Seq((3L, "three", "x", "U")).toDF("k", "v", "extra", "Op")) == 1)
+    sameAsFileSource(evolved)
+    assert(evolved.read().filter(col("extra").isNull).count() > 0)
+
+    // emptied: every row deleted, so no bucket is live
+    val emptied = BucketedTableStore.create(spark, s"${tmpDir()}/t", Seq("k"),
+      (1L to 20L).map(i => (i, s"v$i")).toDF("k", "v"), numBuckets = 8)
+    assert(emptied.merge((1L to 20L).map(i => (i, "", "D")).toDF("k", "v", "Op")) > 0)
+    assert(liveBuckets(emptied).isEmpty)
+    sameAsFileSource(emptied)
+    assert(emptied.read().count() == 0)
+
+    // leftovers: a crashed merge's tmp dir holding a bucket, and _SUCCESS
+    // markers at the root and inside a live bucket
+    val leftover = BucketedTableStore.create(spark, s"${tmpDir()}/t", Seq("k"),
+      (1L to 50L).map(i => (i, s"v$i")).toDF("k", "v"), numBuckets = 8)
+    val b = liveBuckets(leftover).head
+    (100L to 110L).map(i => (i, s"stray$i")).toDF("k", "v")
+      .write.parquet(s"${leftover.path}/.merge-tmp-x/$BucketCol=$b")
+    val fs = new Path(leftover.path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.create(new Path(leftover.path, "_SUCCESS"), true).close()
+    fs.create(new Path(leftover.path, s"$BucketCol=$b/_SUCCESS"), true).close()
+    sameAsFileSource(leftover)
+    assert(rows(leftover.read()).map(_._1) == (1L to 50L))
+
+    // non-nullable and nested columns
+    val inner = StructType(Seq(
+      StructField("a", IntegerType, nullable = false),
+      StructField("xs", ArrayType(IntegerType, containsNull = false), nullable = false),
+      StructField("m", MapType(StringType, LongType, valueContainsNull = false))))
+    val nestedSchema = StructType(Seq(
+      StructField("k", LongType, nullable = false),
+      StructField("nested", inner, nullable = false)))
+    val data = (1L to 20L).map(i => Row(i, Row(i.toInt, Seq(i.toInt), Map(s"m$i" -> i))))
+    sameAsFileSource(BucketedTableStore.create(spark, s"${tmpDir()}/t", Seq("k"),
+      spark.createDataFrame(data.asJava, nestedSchema), numBuckets = 8))
+  }
+
+  test("a bucket directory that vanishes after the root listing fails the read") {
+    import spark.implicits._
+    val local = s"${tmpDir()}/t"
+    BucketedTableStore.create(spark, local, Seq("k"),
+      (1L to 50L).map(i => (i, s"v$i")).toDF("k", "v"), numBuckets = 8)
+    spark.sparkContext.hadoopConfiguration.set("fs.vanish.impl", classOf[VanishingBucketFs].getName)
+    val store = new BucketedTableStore(spark, s"vanish://$local", Seq("k"), 8)
+    assert(rows(store.read()).size == 50)
+
+    val victim = s"$local/$BucketCol=${liveBuckets(store).head}"
+    VanishingBucketFs.victim = Some(victim)
+    intercept[java.io.FileNotFoundException](store.read())
+    assert(VanishingBucketFs.victim.isEmpty && !new java.io.File(victim).exists)
   }
 
   test("a merge into a bucket with no live directory inserts into an empty slice") {
@@ -177,4 +262,25 @@ class BucketedTableStoreSpec extends AnyFunSuite {
     assert(fs.delete(sidecar, false))
     same()
   }
+}
+
+/** A local file system under the `vanish` scheme that deletes the
+  * `victim` directory right after listing its parent: the race of a
+  * concurrent merge retiring a bucket while a reader plans its scan.
+  */
+class VanishingBucketFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("vanish:///")
+
+  override def listStatus(p: Path): Array[org.apache.hadoop.fs.FileStatus] = {
+    val listed = super.listStatus(p)
+    VanishingBucketFs.victim.filter(v => listed.exists(_.getPath.toUri.getPath == v)).foreach { v =>
+      VanishingBucketFs.victim = None
+      delete(new Path(v), true)
+    }
+    listed
+  }
+}
+
+object VanishingBucketFs {
+  @volatile var victim: Option[String] = None
 }

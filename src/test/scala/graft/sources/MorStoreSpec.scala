@@ -74,6 +74,27 @@ class MorStoreSpec extends AnyFunSuite {
     assert(st.generations().map(_._2) == Seq("base", "delta"))
   }
 
+  test("knownEmpty: only a base logged with 0 rows; an entry without a row count is not") {
+    val root = freshRoot()
+    val st = new MorStore(spark, root, Seq("k"))
+    assert(st.knownEmpty, "no commit yet")
+    st.commitBase(rows(1L -> 1L, 2L -> 2L), 1L)
+    assert(!st.knownEmpty)
+    assert(st.log.read(0).rows.map(_ + 1L).contains(3L), "a base logs its row count as a Long")
+    st.commitDelta(delta((1L, 0L, "D"), (2L, 0L, "D")), 2L)
+    assert(st.log.read(1).rows.contains(2L))
+    assert(!st.knownEmpty, "a delta head is never known empty, even one that deletes everything")
+    st.commitBase(st.read().limit(0), 3L)
+    assert(st.knownEmpty, "a 0-row base head resolves empty")
+    // an entry written before row counts were logged resolves as before
+    val head = new org.apache.hadoop.fs.Path(root, "_log/2.json")
+    val out = head.getFileSystem(spark.sparkContext.hadoopConfiguration).create(head, true)
+    try out.write("""{"generation":2,"ts":3,"kind":"base"}""".getBytes("UTF-8")) finally out.close()
+    assert(st.log.read(2).rows.isEmpty)
+    assert(!st.knownEmpty)
+    assert(st.read().count() == 0)
+  }
+
   test("a U after a D resurrects the key") {
     val st = new MorStore(spark, freshRoot(), Seq("k"))
     st.commitBase(rows(1L -> 10L), 1000L)
