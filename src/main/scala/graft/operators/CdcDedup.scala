@@ -136,7 +136,7 @@ object CdcDedup {
       approx_count_distinct(bucket).as("buckets_touched")).head()
     val (total, unique) = (row.getLong(0), row.getLong(1))
     val out = if (total == unique) skipPath(df) else windowPath(df, keys)
-    (out, MergePlanner.Probe(unique, row.getLong(2), -1L))
+    (out, MergePlanner.Probe(unique, row.getLong(2)))
   }
 
   private def transientCols(df: DataFrame): Seq[String] =

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.sources.{BucketedTableStore, MorStore}
@@ -29,16 +29,9 @@ import graft.sources.{BucketedTableStore, MorStore}
   *    rewrite to compaction.
   *
   * The decision costs ONE small aggregation over the staging batch
-  * (row count + approximate distinct count of the target bucket id)
-  * plus, optionally, a Count-Min probe bounding the hottest bucket's
-  * share — the [[CountMin]] upper-bound trick: for every key k and
-  * sketch row r, true(k) ≤ cell_r(h_r(k)) ≤ max_cell(r), so
-  * min over rows of the row-max bounds the heaviest key from above
-  * without knowing which key it is. The hot-share bound feeds the
-  * SALTING decision inside ShuffleCow (a skewed backfill salts only
-  * its hot slice, [[SkewJoin.hybridSkewJoin]]); it does not move the
-  * strategy boundary, because CoW rewrite cost is bucket-count-driven,
-  * not skew-driven.
+  * (row count + approximate distinct count of the target bucket id),
+  * which the pipeline fuses into its dedup gate
+  * ([[CdcDedup.dedupAndProbe]]).
   *
   * At 100 TB the probe is what makes adaptivity affordable: counting
   * rows and approximating distinct buckets is one map-side-combined
@@ -58,15 +51,10 @@ object MergePlanner {
     * @param bucketsTouched approx distinct target buckets (HLL++,
     *                       default 5% relative error — strategy
     *                       boundaries are coarse, the error is noise)
-    * @param hotBucketMax   upper bound on the hottest bucket's row
-    *                       count (Count-Min row-max minimum), -1 if
-    *                       the CM probe was skipped
     */
-  final case class Probe(rows: Long, bucketsTouched: Long, hotBucketMax: Long) {
+  final case class Probe(rows: Long, bucketsTouched: Long) {
     def touchedFrac(numBuckets: Int): Double =
       if (numBuckets <= 0) 1.0 else bucketsTouched.toDouble / numBuckets
-    def hotShare: Double =
-      if (rows <= 0 || hotBucketMax < 0) 0.0 else hotBucketMax.toDouble / rows
   }
 
   /** Strategy boundaries.
@@ -85,29 +73,15 @@ object MergePlanner {
       bucketFrac: Double = 0.5)
 
   /** One aggregation pass over the batch: exact rows + approx distinct
-    * buckets (+ optional Count-Min hottest-bucket bound, a second
-    * sketch-sized aggregate). `keys` and `numBuckets` must match the
-    * target store's bucketing or the touch estimate is meaningless.
+    * buckets. `keys` and `numBuckets` must match the target store's
+    * bucketing or the touch estimate is meaningless.
     */
-  def probe(staging: DataFrame, keys: Seq[String], numBuckets: Int,
-      withHotBound: Boolean = false): Probe = {
-    val bucket = pmod(hash(keys.map(col): _*), lit(numBuckets))
+  def probe(staging: DataFrame, keys: Seq[String], numBuckets: Int): Probe = {
     val r = staging
       .agg(count(lit(1)).as("n"),
-        approx_count_distinct(bucket).as("b"))
+        approx_count_distinct(pmod(hash(keys.map(col): _*), lit(numBuckets))).as("b"))
       .head()
-    val hot =
-      if (!withHotBound) -1L
-      else {
-        // CM row-max minimum: an upper bound on the heaviest bucket
-        // ([[CountMin.heaviestKeyBound]]). depth 4 × width 2048 ≈ 8k
-        // cells — sketch-sized regardless of batch size, map-side
-        // combined like every CountMin build.
-        CountMin.heaviestKeyBound(CountMin.build(
-          staging.select(bucket.cast("string").as("__bkt")),
-          "__bkt", depth = 4, width = 2048))
-      }
-    Probe(r.getLong(0), r.getLong(1), hot)
+    Probe(r.getLong(0), r.getLong(1))
   }
 
   /** The policy — pure and total, so the spec enumerates it directly. */
@@ -117,19 +91,6 @@ object MergePlanner {
     else if (p.touchedFrac(numBuckets) <= th.bucketFrac) BroadcastCow
     else MorDelta
 
-  /** Probe-and-dispatch against a CoW home store with a MoR delta
-    * side-table for scattered batches (the Hudi-style pairing: the
-    * bucketed table is the read-optimized view; `morSide` accumulates
-    * scatter until its compaction folds it back). Returns the strategy
-    * taken so callers/specs can assert the routing.
-    *
-    * ORDERING: once any batch lands in `morSide`, a later CoW merge
-    * of overlapping keys would apply out of order — so a CoW-routed
-    * batch [[drain]]s the side FIRST (one amortized rewrite of the
-    * accumulated net changes), then merges. Readers of the pair use
-    * [[resolvedView]] between drains. [[graft.pipeline.CdcPipeline]]
-    * runs the same protocol per table.
-    */
   /** The resolved current view of a CoW home with an undrained MoR
     * side: net side ops applied on top (deletes drop, upserts replace;
     * upsert rows are projected to the home schema — scatter batches
@@ -175,29 +136,42 @@ object MergePlanner {
       .drop("__present", opCol)
   }
 
+  /** Dispatch one deduplicated CDC batch against a CoW home store with
+    * a MoR delta side-table for scattered batches (the Hudi-style
+    * pairing: the bucketed table is the read-optimized view; `morSide`
+    * accumulates scatter until a drain folds it back). `p` is the
+    * batch's probe, taken by the dedup gate's aggregation
+    * ([[CdcDedup.dedupAndProbe]]), so routing starts no job of its own.
+    * The batch's `Op` column holds the CDC op: `"D"` deletes, anything
+    * else upserts. Returns the strategy taken and the touched bucket
+    * count (0 for a MoR delta).
+    *
+    * ORDERING: once any batch lands in `morSide`, a later CoW merge
+    * of overlapping keys would apply out of order — so a CoW-routed
+    * batch [[drain]]s the side FIRST (one amortized rewrite of the
+    * accumulated net changes), then merges. Readers of the pair use
+    * [[resolvedView]] between drains.
+    */
   def mergeAdaptive(
-      cow: BucketedTableStore, morSide: MorStore, staging: DataFrame,
-      opCol: String = "__op",
-      th: Thresholds = Thresholds()): Strategy = {
-    val p = probe(staging.drop(opCol), cow.keys, cow.numBuckets)
-    val chosen = choose(p, cow.numBuckets, th)
-    chosen match {
+      cow: BucketedTableStore, morSide: MorStore, batch: DataFrame, p: Probe,
+      th: Thresholds = Thresholds()): (Strategy, Int) =
+    choose(p, cow.numBuckets, th) match {
       case MorDelta =>
-        // a first delta bootstraps the side's EMPTY base (all live data
-        // is in the CoW home), so its resolve is exactly the scatter
-        morSide.commitDelta(normalizeDelta(cow, morSide, staging, opCol),
+        // normalizeDelta reproduces the CoW merge's semantics exactly,
+        // including the WHEN-NOT-MATCHED insert of unmatched DELETE
+        // rows; a first delta bootstraps the side's EMPTY base (all
+        // live data is in the CoW home)
+        morSide.commitDelta(normalizeDelta(cow, morSide, batch, "Op"),
           morSide.freshTs())
-      case _ =>
+        (MorDelta, 0)
+      case chosen =>
         // fold any accumulated scatter home first — per-key apply
-        // order must match the batch arrival order
+        // order must match the batch arrival order; both CoW flavors
+        // route through the store's bucket-pruned rewrite, the
+        // broadcast hint following the decision
         drain(cow, morSide, th)
-        // both CoW flavors route through the store's bucket-pruned
-        // rewrite; the broadcast hint follows the decision
-        cow.merge(staging, deleteCol = opCol, deleteVals = Seq("D"),
-          broadcastStaging = chosen == BroadcastCow)
+        (chosen, cow.merge(batch, broadcastStaging = chosen == BroadcastCow))
     }
-    chosen
-  }
 
   /** Fold the MoR side-table's accumulated scatter back into the CoW
     * home and reset it — the drain the [[mergeAdaptive]] ordering

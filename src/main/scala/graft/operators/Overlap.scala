@@ -37,8 +37,7 @@ private[graft] object Overlap {
   def inParallel[T](tasks: Seq[() => T]): Seq[T] =
     if (tasks.lengthCompare(1) <= 0) tasks.map(_())
     else {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
+      import scala.jdk.CollectionConverters._
       val pool = java.util.concurrent.Executors.newFixedThreadPool(
         tasks.size,
         (r: Runnable) => {
@@ -46,10 +45,13 @@ private[graft] object Overlap {
           t.setDaemon(true)
           t
         })
-      implicit val ec: ExecutionContext =
-        ExecutionContext.fromExecutorService(pool)
-      try Await.result(Future.sequence(tasks.map(t => Future(t()))),
-        Duration.Inf)
+      // invokeAll returns only once every task has completed; the first
+      // failure in input order is rethrown after that
+      try pool.invokeAll(tasks.map(t => (() => t()): java.util.concurrent.Callable[T]).asJava)
+        .asScala.toSeq.map { f =>
+          try f.get()
+          catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+        }
       finally pool.shutdown()
     }
 }

@@ -3,10 +3,9 @@ package graft.pipeline
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 import graft.config.TableKeys
-import graft.operators.{CdcDedup, CdcMerge, EvolutionLog, FileLedger, MergePlanner, SchemaEvolution}
+import graft.operators.{CdcDedup, EvolutionLog, FileLedger, MergePlanner, SchemaEvolution}
 import graft.routing.CdcPath
 import graft.sources.{BucketedTableStore, MorStore}
 
@@ -22,7 +21,7 @@ import graft.sources.{BucketedTableStore, MorStore}
   * single-writer semantics per table; exactly-once comes from the ledger +
   * idempotent merge instead of engine MVCC.
   *
-  * MERGE strategy is per-batch ADAPTIVE by default ([[MergePlanner]]):
+  * MERGE strategy is per-batch ADAPTIVE ([[MergePlanner]]):
   * the typical small concentrated CDC file takes the bucket-pruned
   * broadcast CoW rewrite exactly as before, but a batch that SCATTERS
   * across most buckets commits as an O(batch) MoR delta to the table's
@@ -31,22 +30,20 @@ import graft.sources.{BucketedTableStore, MorStore}
   * the NET changes, [[MergePlanner.drain]]) before any later CoW-routed
   * batch of the same table — preserving per-key apply order — so CoW
   * buckets never interleave with undrained scatter. Readers use
-  * [[readTable]], which resolves home ∪ side; `adaptiveMerge = false`
-  * restores the static always-CoW path (then `storeFor(...).read()`
-  * alone is complete).
+  * [[readTable]], which resolves home ∪ side.
+  *
+  * [[graft.streaming.CdcStream]] micro-batches take the same apply
+  * ([[applyStaged]]) as files: only staging and the ledger mark differ.
   */
 final class CdcPipeline(
     spark: SparkSession,
     storeRoot: String,
     tableKeys: TableKeys,
     numBuckets: Int = 64,
-    deleteCol: String = "Op",
-    deleteVals: Seq[String] = Seq("D"),
     pathRoot: String = "fair",
     cleanupProbability: Double = 0.0,
     cleanupRetentionDays: Int = 30,
-    cleanupRng: () => Double = () => math.random(),
-    adaptiveMerge: Boolean = true) {
+    cleanupRng: () => Double = () => math.random()) {
 
   val ledger = new FileLedger(spark, s"$storeRoot/_ledger")
   val evolutionLog = new EvolutionLog(spark, s"$storeRoot/_evolution_log")
@@ -71,9 +68,7 @@ final class CdcPipeline(
   def readTable(table: String): DataFrame = {
     val keys = tableKeys.keysFor(table)
       .getOrElse(throw new IllegalArgumentException(s"no keys for $table"))
-    val store = storeFor(table, keys)
-    if (!adaptiveMerge) store.read()
-    else MergePlanner.resolvedView(store, morSideFor(table, keys))
+    MergePlanner.resolvedView(storeFor(table, keys), morSideFor(table, keys))
   }
 
   import CdcPipeline._
@@ -113,71 +108,7 @@ final class CdcPipeline(
     try {
       // STEP 1: stage with ingestion_seq (handler.py:486-546)
       staging = CdcDedup.readCdcFiles(spark, Seq(fileKey)).persist()
-      val store = storeFor(table, keys)
-      if (!store.exists)
-        throw new IllegalStateException(s"target table '$table' not initialized at ${store.path}")
-
-      // STEP 2: schema evolution (handler.py:250-338). Safe new columns
-      // are ADDED to the target schema BEFORE the merge — the reference
-      // ALTERs production then refreshes its column list so staged values
-      // for the new columns flow through the merge intersection
-      // (handler.py:846-850). Un-evolved parquet files read the column as
-      // null; merged buckets materialize it.
-      val evolution = SchemaEvolution.diff(staging.schema, store.schema)
-      store.evolveSchema(evolution)
-      // durable notification channel (SNS parity, handler.py:313-336):
-      // findings — especially requiresManual — land in _evolution_log;
-      // a logging failure must never fail the merge it describes
-      // (the reference's publish is try/except-warning too)
-      if (evolution.hasChanges)
-        try evolutionLog.log(table, CdcPath.ledgerKey(fileKey), evolution)
-        catch { case NonFatal(e) =>
-          System.err.println(s"[graft] evolution-log append failed for $table: ${e.getMessage}")
-        }
-
-      // STEP 3: dedup via the cascade (handler.py:407-479). On the
-      // adaptive path the gate aggregation ALSO carries the merge
-      // planner's probe (CdcDedup.dedupAndProbe — exact fusion: the
-      // deduped batch has `unique_keys` rows and the same bucket set),
-      // so the probe's former second full-batch pass is gone and the
-      // adaptive routing costs exactly what the reference's dedup gate
-      // already paid (handler.py:423-439).
-      val (dedup, fusedProbe) =
-        if (adaptiveMerge) {
-          val (d, p) = CdcDedup.dedupAndProbe(staging, keys, numBuckets)
-          (d, Some(p))
-        } else (CdcDedup.dedup(staging, keys, gate = true), None)
-
-      // STEP 4+5: column prep + MERGE (handler.py:876-946). The
-      // physical strategy is per-batch adaptive: probe the batch (the
-      // fused aggregation above — rows + approx buckets touched),
-      // route concentrated batches through the bucket-pruned
-      // CoW rewrite and scattered ones to the MoR side-store as an
-      // O(batch) delta; any CoW-routed batch drains accumulated
-      // scatter first so per-key apply order holds.
-      val touched =
-        if (!adaptiveMerge) store.merge(dedup, deleteCol, deleteVals)
-        else {
-          val side = morSideFor(table, keys)
-          MergePlanner.choose(fusedProbe.get, numBuckets) match {
-            case MergePlanner.MorDelta =>
-              // normalizeDelta reproduces the CoW merge's semantics
-              // exactly — including the WHEN-NOT-MATCHED insert of
-              // unmatched DELETE rows (handler.py:876-946)
-              val premapped = dedup.withColumn("__cdc_op",
-                when(col(deleteCol).isin(deleteVals.map(lit): _*), lit("D"))
-                  .otherwise(lit("U")))
-                .drop(deleteCol)
-              val delta = MergePlanner.normalizeDelta(
-                store, side, premapped, "__cdc_op")
-              side.commitDelta(delta, side.freshTs())
-              0
-            case chosen =>
-              MergePlanner.drain(store, side)
-              store.merge(dedup, deleteCol, deleteVals,
-                broadcastStaging = chosen == MergePlanner.BroadcastCow)
-          }
-        }
+      val (touched, evolution) = applyStaged(staging, table, keys, CdcPath.ledgerKey(fileKey))
 
       // STEP 7: ledger (handler.py:962-967)
       ledger.markCompleted(CdcPath.ledgerKey(fileKey))
@@ -194,6 +125,50 @@ final class CdcPipeline(
         ledger.markFailed(CdcPath.ledgerKey(fileKey), e.getMessage)
         Failed(table, e)
     } finally if (staging != null) staging.unpersist()
+  }
+
+  /** Apply an already-staged batch — one file, or a stream micro-batch of
+    * files — to `table`: schema-evolve, cascade dedup, adaptive MERGE.
+    * `source` names the batch in `_evolution_log`. Returns the touched
+    * bucket count and the evolution result; the caller owns the staging
+    * persist and the ledger mark.
+    */
+  private[graft] def applyStaged(staging: DataFrame, table: String, keys: Seq[String],
+      source: String): (Int, SchemaEvolution.EvolutionResult) = {
+    val store = storeFor(table, keys)
+    if (!store.exists)
+      throw new IllegalStateException(s"target table '$table' not initialized at ${store.path}")
+
+    // STEP 2: schema evolution (handler.py:250-338). Safe new columns
+    // are ADDED to the target schema BEFORE the merge — the reference
+    // ALTERs production then refreshes its column list so staged values
+    // for the new columns flow through the merge intersection
+    // (handler.py:846-850). Un-evolved parquet files read the column as
+    // null; merged buckets materialize it.
+    val evolution = SchemaEvolution.diff(staging.schema, store.schema)
+    store.evolveSchema(evolution)
+    // durable notification channel (SNS parity, handler.py:313-336):
+    // findings — especially requiresManual — land in _evolution_log;
+    // a logging failure must never fail the merge it describes
+    // (the reference's publish is try/except-warning too)
+    if (evolution.hasChanges)
+      try evolutionLog.log(table, source, evolution)
+      catch { case NonFatal(e) =>
+        System.err.println(s"[graft] evolution-log append failed for $table: ${e.getMessage}")
+      }
+
+    // STEP 3: dedup via the cascade (handler.py:407-479). The gate
+    // aggregation ALSO carries the merge planner's probe (exact fusion:
+    // the deduped batch has `unique_keys` rows and the same bucket set),
+    // so adaptive routing costs exactly what the reference's dedup gate
+    // already paid (handler.py:423-439).
+    val (dedup, probe) = CdcDedup.dedupAndProbe(staging, keys, numBuckets)
+
+    // STEP 4+5: column prep + MERGE (handler.py:876-946), routed per
+    // batch: concentrated batches take the bucket-pruned CoW rewrite,
+    // scattered ones commit to the MoR side-store as an O(batch) delta
+    val (_, touched) = MergePlanner.mergeAdaptive(store, morSideFor(table, keys), dedup, probe)
+    (touched, evolution)
   }
 
   /** Backfill driver: apply every unprocessed CDC file under `root`,

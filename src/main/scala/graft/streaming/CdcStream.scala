@@ -5,67 +5,64 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
-import graft.operators.{CdcDedup, FileLedger}
-import graft.sources.BucketedTableStore
+import graft.config.TableKeys
+import graft.operators.CdcDedup
+import graft.pipeline.CdcPipeline
+import graft.routing.CdcPath
 
 /** Structured Streaming CDC: the event-driven half of the reference
   * (S3 ObjectCreated → Lambda; reference: stacks/firebolt_cdc_stack.py:80-87)
-  * as a file-source stream with `foreachBatch` merge (SURVEY §2.9, §3.1).
+  * as a file-source stream with `foreachBatch` apply (SURVEY §2.9, §3.1).
   *
   * One stream per target table (schemas are per-table): new parquet files
   * under `{root}/{table}/YYYY/MM/DD/` are discovered by the file source,
-  * LOAD* full-load files are filtered out, each micro-batch is deduped by
-  * the cascade and merged into the bucketed store. The streaming
-  * checkpoint provides exactly-once file processing (replacing the
-  * reference's app-level ledger check, handler.py:664-676); the ledger is
-  * still written for observability/backfill parity.
+  * LOAD* full-load files are filtered out, and each micro-batch takes the
+  * batch pipeline's one apply path ([[CdcPipeline.applyStaged]]): schema
+  * evolution, cascade dedup, adaptive MERGE (a scattered batch lands in
+  * the table's MoR side-store; a CoW-routed one drains the side first).
+  * The streaming checkpoint provides exactly-once file processing
+  * (replacing the reference's app-level ledger check, handler.py:664-676);
+  * the batch's files are still marked in the ledger for
+  * observability/backfill parity.
   *
   * `Trigger.AvailableNow` replays everything outstanding then stops —
   * the backfill path (retrigger_lambda_*.py) for free.
   *
   * Schema evolution note: a file-source stream reads with the schema
-  * fixed at start, so columns added mid-stream surface on the next
-  * restart (streams restart cheaply from the checkpoint); the batch
-  * pipeline ([[graft.pipeline.CdcPipeline]]) evolves per file like the
-  * reference.
+  * fixed at start, so the stream evolves the table only within that
+  * schema — a nullable source column the table lacks is added (and
+  * logged to `_evolution_log`) by the first batch. Columns that appear
+  * in files after the start are not read until a restart with a wider
+  * schema; the batch pipeline evolves per file like the reference.
   */
 object CdcStream {
 
-  /** @param pathGlobFilter source file-name filter. The default admits
-    *        every parquet file and LOAD* full-load files are dropped by a
-    *        row-level filter AFTER the scan — fine when LOAD files share
-    *        the CDC schema. If full-load files are schema-incompatible
-    *        (common with DMS: no Op column, different decimals), narrow
-    *        the glob so they are never scanned, e.g. `"2*.parquet"` for
-    *        DMS timestamp-named CDC files or `"[!L]*.parquet"`.
-    */
+  /** Files admitted per micro-batch. */
+  private val MaxFilesPerTrigger = 100
+
   final case class Config(
       root: String,
       table: String,
       keys: Seq[String],
       storeRoot: String,
       checkpointRoot: String,
-      numBuckets: Int = 64,
-      deleteCol: String = "Op",
-      deleteVals: Seq[String] = Seq("D"),
-      maxFilesPerTrigger: Int = 100,
-      writeLedger: Boolean = true,
-      pathGlobFilter: String = "*.parquet")
+      numBuckets: Int = 64)
 
   /** Start the per-table CDC stream. Caller owns the returned query
     * (`processAllAvailable()` in tests, `awaitTermination()` in prod).
     */
   def start(spark: SparkSession, cfg: Config, schema: StructType,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val store = new BucketedTableStore(spark, s"${cfg.storeRoot}/${cfg.table}", cfg.keys, cfg.numBuckets)
+    val pipeline = new CdcPipeline(spark, cfg.storeRoot,
+      TableKeys(Map(cfg.table -> Some(cfg.keys))), cfg.numBuckets)
+    val store = pipeline.storeFor(cfg.table, cfg.keys)
     require(store.exists, s"target ${store.path} must be initialized (initial load) before streaming")
-    val ledger = new FileLedger(spark, s"${cfg.storeRoot}/_ledger")
 
     val src = spark.readStream
       .schema(schema)
-      .option("maxFilesPerTrigger", cfg.maxFilesPerTrigger)
+      .option("maxFilesPerTrigger", MaxFilesPerTrigger)
       .option("recursiveFileLookup", "true")
-      .option("pathGlobFilter", cfg.pathGlobFilter)
+      .option("pathGlobFilter", "*.parquet")
       .parquet(s"${cfg.root}/${cfg.table}")
       // ingestion_seq = row order within each file (binlog order); LOAD*
       // full-load files skipped (reference: handler.py:781-783)
@@ -77,20 +74,16 @@ object CdcStream {
       .queryName(s"cdc-${cfg.table}")
       .option("checkpointLocation", s"${cfg.checkpointRoot}/${cfg.table}")
       .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // the batch feeds four consumers (emptiness, ledger file list,
-        // dedup gate, merge) — materialize it once per micro-batch
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        // the batch feeds the emptiness check, the ledger file list and
+        // the apply — materialize it once per micro-batch
         val b = batch.persist()
         try {
           if (!b.isEmpty) {
-            val files =
-              if (cfg.writeLedger)
-                b.select("__source_file").distinct().collect()
-                  .map(r => graft.routing.CdcPath.ledgerKey(r.getString(0))).toSeq
-              else Nil
-            val dedup = CdcDedup.dedup(b, cfg.keys, gate = true)
-            store.merge(dedup, cfg.deleteCol, cfg.deleteVals)
-            if (cfg.writeLedger) ledger.markBatchProcessed(files)
+            val files = b.select("__source_file").distinct().collect()
+              .map(r => CdcPath.ledgerKey(r.getString(0))).toSeq.sorted
+            pipeline.applyStaged(b, cfg.table, cfg.keys, files.mkString(","))
+            pipeline.ledger.markBatchProcessed(files)
           }
         } finally b.unpersist()
       }

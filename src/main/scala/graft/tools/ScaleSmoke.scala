@@ -400,7 +400,7 @@ object ScaleSmoke {
       val n = batch.count()
       val p = MergePlanner.probe(batch, keys, numBuckets)
       println(s"[scale] T=$t: $n rows, probe buckets=${p.bucketsTouched}, " +
-        s"chosen=${MergePlanner.choose(p, numBuckets)}")
+        s"touched frac=${p.touchedFrac(numBuckets)}")
       time(f"  T=$t broadcast CoW merge") { store.merge(batch) }
       time(f"  T=$t MoR delta commit") {
         mor.commitDelta(batch.withColumnRenamed("Op", mor.OpCol), 1000L + t)

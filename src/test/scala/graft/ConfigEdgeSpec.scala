@@ -5,9 +5,8 @@ import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.config.TableKeys
-import graft.operators.Retry
 
-/** Edge coverage for config loading and retry jitter bounds. */
+/** Edge coverage for config loading and key-name candidates. */
 class ConfigEdgeSpec extends AnyFunSuite {
 
   test("TableKeys.load reads a config file; empty/whitespace composite parts dropped") {
@@ -20,19 +19,6 @@ class ConfigEdgeSpec extends AnyFunSuite {
     assert(tk.keysFor("b").contains(Seq.empty))
     assert(tk.keysFor("c").contains(Seq("id")))
     assert(tk.withTable("d", None).keysFor("d").isEmpty)
-  }
-
-  test("retry wait = backoff + jitter·jitterSeconds, observed via injected sleeper") {
-    val waits = Seq.newBuilder[Long]
-    val p = Retry.Policy(maxRetries = 4, sleeper = ms => waits += ms, jitterSeconds = 2.0)
-    var n = 0
-    Retry.withRetry(p, jitter = () => 0.5) {
-      n += 1
-      if (n < 4) throw new RuntimeException("mvcc")
-      ()
-    }
-    // attempts 0,1,2 waited: 3^n + 0.5*2 seconds
-    assert(waits.result() == Seq(2000L, 4000L, 10000L))
   }
 
   test("candidate key names follow the reference order") {

@@ -10,6 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.config.TableKeys
 import graft.operators.{FileLedger, SchemaEvolution}
 import graft.pipeline.CdcPipeline
+import graft.routing.CdcPath
 import graft.sources.BucketedTableStore
 import graft.streaming.CdcStream
 
@@ -509,5 +510,79 @@ class PipelineSpec extends AnyFunSuite with SparkJobProbe {
     val q2 = CdcStream.start(spark, cfg, schema, Trigger.AvailableNow())
     q2.awaitTermination(60000)
     assert(snapshot(store.read()) == Seq((1L, "alice-v2", 1.5)))
+  }
+
+  test("streaming: a stream batch applies after a MoR-routed file and survives its drain") {
+    import spark.implicits._
+    val root = tmpDir()
+    val keys = TableKeys.parse("""{"users": "id"}""")
+    val pipe = new CdcPipeline(spark, s"$root/store", keys, numBuckets = 8)
+    pipe.initialLoad("users", (1L to 200L).map(i => (i, s"v$i", i * 1.0)).toDF("id", "v", "amount"))
+    val side = pipe.morSideFor("users", Seq("id"))
+
+    // a pipeline file scattered over all 8 buckets lands in the MoR side
+    writeCdcFile(s"$root/fair/users/2026/08/12/b1.parquet",
+      (2L to 200L by 2).map(i => (i, "pipe", i * 2.0, "U", "2026-08-12 00:00:00", 0L)))
+    assert(pipe.processFile(s"$root/fair/users/2026/08/12/b1.parquet")
+      .isInstanceOf[CdcPipeline.Applied])
+    assert(!side.knownEmpty, "scattered file must land as a MoR side delta")
+
+    // a stream batch then updates key 2
+    writeCdcFile(s"$root/in/users/2026/08/13/s1.parquet", Seq(
+      (2L, "stream", 3.0, "U", "2026-08-13 00:00:00", 0L)))
+    val schema = spark.read.parquet(s"$root/in/users/2026/08/13/s1.parquet").schema
+    val cfg = CdcStream.Config(
+      root = s"$root/in", table = "users", keys = Seq("id"),
+      storeRoot = s"$root/store", checkpointRoot = s"$root/ckpt", numBuckets = 8)
+    CdcStream.start(spark, cfg, schema).awaitTermination(60000)
+    def row(id: Long) = snapshot(pipe.readTable("users")).find(_._1 == id)
+    assert(row(2L).contains((2L, "stream", 3.0)), "the stream's update must be visible")
+    assert(row(4L).contains((4L, "pipe", 8.0)))
+    assert(pipe.ledger.isProcessed(s"$root/in/users/2026/08/13/s1.parquet"))
+
+    // a later CoW-routed file drains whatever the side still holds: the
+    // stream's value must stay
+    writeCdcFile(s"$root/fair/users/2026/08/14/b2.parquet", Seq(
+      (1L, "one", -1.0, "U", "2026-08-14 00:00:00", 0L)))
+    assert(pipe.processFile(s"$root/fair/users/2026/08/14/b2.parquet")
+      .isInstanceOf[CdcPipeline.Applied])
+    assert(side.knownEmpty, "a CoW-routed file must drain the side")
+    assert(row(2L).contains((2L, "stream", 3.0)), "the drain overwrote the stream's update")
+    assert(row(1L).contains((1L, "one", -1.0)) && row(4L).contains((4L, "pipe", 8.0)))
+  }
+
+  test("streaming: a nullable source column the table lacks evolves the table") {
+    import spark.implicits._
+    val root = tmpDir()
+    val keys = TableKeys.parse("""{"users": "id"}""")
+    val pipe = new CdcPipeline(spark, s"$root/store", keys, numBuckets = 4)
+    pipe.initialLoad("users", Seq((1L, "alice", 1.0), (2L, "bob", 2.0)).toDF("id", "v", "amount"))
+
+    val tmp = tmpDir() + "/out"
+    Seq((1L, "alice", 1.5, "a@x.io", "U"), (3L, "carol", 3.0, "c@x.io", "I"))
+      .toDF("id", "v", "amount", "email", "Op")
+      .coalesce(1).write.parquet(tmp)
+    val part = new java.io.File(tmp).listFiles().find(_.getName.endsWith(".parquet")).get
+    val dest = new java.io.File(s"$root/in/users/2026/08/12/evo.parquet")
+    dest.getParentFile.mkdirs()
+    Files.move(part.toPath, dest.toPath)
+
+    val schema = spark.read.parquet(dest.toString).schema
+    assert(schema("email").nullable)
+    val cfg = CdcStream.Config(
+      root = s"$root/in", table = "users", keys = Seq("id"),
+      storeRoot = s"$root/store", checkpointRoot = s"$root/ckpt", numBuckets = 4)
+    CdcStream.start(spark, cfg, schema).awaitTermination(60000)
+
+    val store = pipe.storeFor("users", Seq("id"))
+    assert(store.schema.fieldNames.contains("email"))
+    val state = pipe.readTable("users").collect()
+      .map(r => (r.getAs[Long]("id"), Option(r.getAs[String]("email")))).sortBy(_._1)
+    assert(state.toSeq == Seq((1L, Some("a@x.io")), (2L, None), (3L, Some("c@x.io"))))
+    val logged = pipe.evolutionLog.records
+      .select("table", "file_key", "kind", "column_name").collect()
+      .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getString(3))).toSet
+    assert(logged == Set(("users", CdcPath.ledgerKey(dest.toString), "column_added", "email")),
+      logged.toString)
   }
 }

@@ -2,7 +2,7 @@ package graft.operators
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -37,34 +37,26 @@ class MergePlannerSpec extends AnyFunSuite {
   test("policy: small+concentrated=broadcast CoW, scattered=MoR delta, huge=shuffle CoW") {
     val th = Thresholds(broadcastMaxRows = 1000L, bucketFrac = 0.5)
     // concentrated trickle: 100 rows in 3 of 64 buckets
-    assert(choose(Probe(100, 3, -1), 64, th) == BroadcastCow)
+    assert(choose(Probe(100, 3), 64, th) == BroadcastCow)
     // exactly at the bucket boundary still CoW (<=)
-    assert(choose(Probe(100, 32, -1), 64, th) == BroadcastCow)
+    assert(choose(Probe(100, 32), 64, th) == BroadcastCow)
     // scattered trickle: 100 rows across 60 of 64 buckets — rewriting
     // 94% of the table for 100 rows is the MoR case
-    assert(choose(Probe(100, 60, -1), 64, th) == MorDelta)
+    assert(choose(Probe(100, 60), 64, th) == MorDelta)
     // backfill: size dominates every other signal
-    assert(choose(Probe(5000, 3, -1), 64, th) == ShuffleCow)
-    assert(choose(Probe(5000, 60, -1), 64, th) == ShuffleCow)
+    assert(choose(Probe(5000, 3), 64, th) == ShuffleCow)
+    assert(choose(Probe(5000, 60), 64, th) == ShuffleCow)
   }
 
-  test("probe: exact rows, near-exact touched buckets, CM hot bound is a true upper bound") {
+  test("probe: exact rows, near-exact touched buckets") {
     // 600 rows: 500 on one hot key (one bucket), 100 spread over the
     // key space
     val hot = rows(Seq.fill(500)(7L)) .unionAll(rows(1000L until 1100L))
-    val p = probe(hot, Seq("k"), numBuckets = 16, withHotBound = true)
+    val p = probe(hot, Seq("k"), numBuckets = 16)
     assert(p.rows == 600)
     // 100 spread keys over 16 buckets: every bucket touched; HLL at 5%
     // error must land within ±3 of 16
     assert(p.bucketsTouched >= 13 && p.bucketsTouched <= 19, p.toString)
-    // the true hottest bucket holds >= 500 rows (the hot key plus any
-    // spread keys sharing its bucket); the CM bound can only be above
-    val trueMax = hot
-      .groupBy(pmod(hash(col("k")), lit(16))).count()
-      .agg(max("count")).head().getLong(0)
-    assert(p.hotBucketMax >= trueMax,
-      s"CM bound ${p.hotBucketMax} below true max $trueMax")
-    assert(p.hotShare >= 500.0 / 600.0 - 0.01)
   }
 
   test("adaptive dispatch routes each batch shape to the matching store") {
@@ -73,18 +65,23 @@ class MergePlannerSpec extends AnyFunSuite {
       Seq("k"), initial = rows(0L until 1600L), numBuckets = 16)
     val mor = new MorStore(spark, freshDir("mp-mor"), Seq("k"))
     val th = Thresholds(broadcastMaxRows = 500L, bucketFrac = 0.5)
+    // the pipeline's path: the dedup gate's fused probe feeds the routing
+    def route(batch: DataFrame): Strategy = {
+      val (dedup, p) = CdcDedup.dedupAndProbe(batch, Seq("k"), cow.numBuckets)
+      mergeAdaptive(cow, mor, dedup, p, th = th)._1
+    }
     // 1. concentrated CDC file: keys 0..15 share bucket structure —
     //    pick keys hashing into few buckets by construction (multiples
     //    of 16 hash differently; just use a handful of keys)
     val small = Seq((3L, 999L, "U"), (4L, 999L, "U")).toDF("k", "v", "Op")
-    assert(mergeAdaptive(cow, mor, small, opCol = "Op", th = th) == BroadcastCow)
+    assert(route(small) == BroadcastCow)
     assert(cow.read().filter(col("k") === 3L).head().getLong(1) == 999L)
     assert(mor.isEmpty, "concentrated batch must not land in the MoR side")
     // 2. scattered trickle: 200 distinct keys spread over the space —
     //    touches most of 16 buckets, stays under the row cap
     val scatter = rows(0L until 200L by 1L).withColumn("v", col("v") + 1L)
       .withColumn("Op", lit("U"))
-    assert(mergeAdaptive(cow, mor, scatter, opCol = "Op", th = th) == MorDelta)
+    assert(route(scatter) == MorDelta)
     assert(!mor.isEmpty, "scattered batch must land as a MoR delta")
     assert(mor.read().count() == 200)
     assert(cow.read().filter(col("k") === 5L).head().getLong(1) == 50L,
@@ -93,7 +90,7 @@ class MergePlannerSpec extends AnyFunSuite {
     //    side first (per-key apply order), then rewrites
     val backfill = rows(0L until 800L).withColumn("v", col("v") + 7L)
       .withColumn("Op", lit("U"))
-    assert(mergeAdaptive(cow, mor, backfill, opCol = "Op", th = th) == ShuffleCow)
+    assert(route(backfill) == ShuffleCow)
     assert(mor.netChanges().isEmpty,
       "a CoW-routed batch must drain the accumulated scatter first")
     assert(cow.read().filter(col("k") === 5L).head().getLong(1) == 57L)
