@@ -37,9 +37,13 @@ object CdcDedup {
     * stable under any parallelism/split). Multi-file batches stay
     * per-file-ordered; pass the file path through `__source_file` for
     * routing and cross-file ordering.
+    *
+    * The schema is the first file's footer, read on the driver
+    * ([[graft.sources.ParquetFooters]]), so staging starts no Spark job.
     */
   def readCdcFiles(spark: SparkSession, paths: Seq[String]): DataFrame =
-    spark.read.parquet(paths.map(escapeGlob): _*)
+    spark.read.schema(graft.sources.ParquetFooters.schema(spark, paths))
+      .parquet(paths.map(escapeGlob): _*)
       .withColumn(IngestionSeqCol, col("_metadata.row_index"))
       .withColumn("__source_file", col("_metadata.file_path"))
 

@@ -2,31 +2,41 @@ package graft.operators
 
 import java.sql.Timestamp
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
+
+import graft.sources.RowLog
 
 /** Durable schema-evolution findings (`_evolution_log`).
   *
   * The reference publishes manual-intervention findings to SNS so an
   * operator running hundreds of tables sees unsafe columns that were
   * skipped (reference: lambda/handler.py:313-336). This rebuild has no
-  * message bus, so the notification channel is a small append-only
-  * parquet table next to the ledger: one row per finding, queryable by
-  * ops tooling (`kind = 'manual_required'` is the SNS-parity subset;
-  * added/removed/type-changed columns are logged too for a full audit
-  * trail).
+  * message bus, so the notification channel is a small append-only log
+  * next to the ledger: one row per finding, queryable by ops tooling
+  * (`kind = 'manual_required'` is the SNS-parity subset; added/removed/
+  * type-changed columns are logged too for a full audit trail).
   *
-  * Same write discipline as [[FileLedger]]: uniquely-named files moved
-  * in atomically, so concurrent per-table pipelines can append without
-  * sharing Spark's `_temporary` committer dir.
+  * Same append as the [[FileLedger]] tail: each [[log]] call writes one
+  * uniquely named JSON entry from the driver ([[graft.sources.RowLog]]),
+  * with no Spark job, and concurrent per-table pipelines never collide.
+  * Findings are rare (one per schema change), so the log never folds. A
+  * log written as plain parquet files in its root (the earlier format)
+  * still reads, beside the entries.
   */
 final class EvolutionLog(spark: SparkSession, path: String) {
 
   import EvolutionLog._
 
-  def records: DataFrame =
-    if (ParquetAppend.exists(spark, path)) spark.read.schema(Schema).parquet(path)
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], Schema)
+  private val entries = new RowLog(spark, s"$path/_log", Schema)
+
+  def records: DataFrame = {
+    val logged = entries.frame(entries.names().flatMap(entries.read))
+    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (RowLog.parquetFiles(fs, path).isEmpty) logged
+    else spark.read.schema(Schema).parquet(path).unionByName(logged)
+  }
 
   /** Append one row per finding in `result`; returns rows written.
     * Callers should treat failures as non-fatal (the reference wraps its
@@ -43,7 +53,7 @@ final class EvolutionLog(spark: SparkSession, path: String) {
       result.removedColumns.map(c => row("column_removed", c, "in production, missing from staging")) ++
       result.typeChanges.map(tc =>
         row("type_change", tc.name, s"${tc.from.simpleString} -> ${tc.to.simpleString}"))
-    if (rows.nonEmpty) ParquetAppend.append(spark, path, rows, Schema)
+    if (rows.nonEmpty) entries.append(rows)
     rows.size
   }
 }

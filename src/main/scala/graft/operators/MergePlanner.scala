@@ -179,9 +179,11 @@ object MergePlanner {
     * bucket-pruned rewrite applies the NET per-key change
     * ([[graft.sources.MorStore.netChanges]] — latest op wins, deletes
     * included), so N scattered MorDelta batches cost one amortized
-    * rewrite instead of N; the broadcast hint follows the net batch's
-    * size through the same threshold the per-batch routing uses.
-    * Returns touched bucket count.
+    * rewrite instead of N. The broadcast hint follows the same row
+    * threshold the per-batch routing uses, applied to the rows the side's
+    * log counts from its newest base onward — an upper bound on the net
+    * rows, known without a job; a side whose log lacks a count takes the
+    * shuffle merge. Returns touched bucket count.
     *
     * The reset commits an empty BASE generation logged with 0 rows, so a
     * crash between the merge and the reset replays the net changes —
@@ -196,10 +198,9 @@ object MergePlanner {
     if (morSide.knownEmpty) 0
     else {
       val net = morSide.netChanges()
-      val rows = net.count()
       val touched = cow.merge(net.drop(morSide.SeqCol),
         deleteCol = morSide.OpCol, deleteVals = Seq("D"),
-        broadcastStaging = rows <= th.broadcastMaxRows)
+        broadcastStaging = morSide.loggedRowsSinceBase.exists(_ <= th.broadcastMaxRows))
       morSide.commitBase(net.filter(lit(false)).drop(
         morSide.OpCol, morSide.SeqCol), morSide.freshTs())
       touched

@@ -21,16 +21,24 @@ import graft.sources.{BucketedTableStore, MorStore}
   * single-writer semantics per table; exactly-once comes from the ledger +
   * idempotent merge instead of engine MVCC.
   *
+  * Only the dedup gate and the merge move data. The bookkeeping around
+  * them starts no Spark job: the ledger check and mark are driver-side log
+  * reads and writes ([[FileLedger]]), `_evolution_log` findings are driver
+  * appends ([[EvolutionLog]]), and the staged file's schema comes from its
+  * footer. Ledger retention runs when the ledger's tail crosses its size
+  * trigger, not on a per-invocation coin flip as in the reference
+  * (AUTOMATIC_CLEANUP.md:12-63).
+  *
   * MERGE strategy is per-batch ADAPTIVE ([[MergePlanner]]):
   * the typical small concentrated CDC file takes the bucket-pruned
-  * broadcast CoW rewrite exactly as before, but a batch that SCATTERS
-  * across most buckets commits as an O(batch) MoR delta to the table's
-  * side-store instead of rewriting the table to change a sliver. The
-  * side-store drains back into the CoW home (one amortized rewrite of
-  * the NET changes, [[MergePlanner.drain]]) before any later CoW-routed
-  * batch of the same table — preserving per-key apply order — so CoW
-  * buckets never interleave with undrained scatter. Readers use
-  * [[readTable]], which resolves home ∪ side.
+  * broadcast CoW rewrite, but a batch that SCATTERS across most buckets
+  * commits as an O(batch) MoR delta to the table's side-store instead of
+  * rewriting the table to change a sliver. The side-store drains back
+  * into the CoW home (one amortized rewrite of the NET changes,
+  * [[MergePlanner.drain]]) before any later CoW-routed batch of the same
+  * table — preserving per-key apply order — so CoW buckets never
+  * interleave with undrained scatter. Readers use [[readTable]], which
+  * resolves home ∪ side.
   *
   * [[graft.streaming.CdcStream]] micro-batches take the same apply
   * ([[applyStaged]]) as files: only staging and the ledger mark differ.
@@ -40,10 +48,7 @@ final class CdcPipeline(
     storeRoot: String,
     tableKeys: TableKeys,
     numBuckets: Int = 64,
-    pathRoot: String = "fair",
-    cleanupProbability: Double = 0.0,
-    cleanupRetentionDays: Int = 30,
-    cleanupRng: () => Double = () => math.random()) {
+    pathRoot: String = "fair") {
 
   val ledger = new FileLedger(spark, s"$storeRoot/_ledger")
   val evolutionLog = new EvolutionLog(spark, s"$storeRoot/_evolution_log")
@@ -112,13 +117,6 @@ final class CdcPipeline(
 
       // STEP 7: ledger (handler.py:962-967)
       ledger.markCompleted(CdcPath.ledgerKey(fileKey))
-
-      // probabilistic maintenance: with small probability per invocation,
-      // apply ledger retention (reference: AUTOMATIC_CLEANUP.md:12-63 —
-      // CLEANUP_PROBABILITY=0.01, CLEANUP_DAYS_TO_KEEP=30)
-      if (cleanupProbability > 0.0 && cleanupRng() < cleanupProbability)
-        ledger.cleanup(cleanupRetentionDays)
-
       Applied(table, touched, evolution)
     } catch {
       case NonFatal(e) =>
@@ -175,9 +173,8 @@ final class CdcPipeline(
     * per-table in path (= binlog) order — replaces the reference's
     * retrigger scripts (retrigger_lambda_for_old_files.py:88-158).
     *
-    * The processed set is computed ONCE up front (per-file ledger
-    * re-reads would make a whole-history replay quadratic in ledger
-    * size); per-file processing then skips the redundant check.
+    * The ledger is checked ONCE up front for the whole list;
+    * per-file processing then skips the redundant check.
     *
     * Retry semantics match the reference: `failed` files are retried,
     * and MERGE is last-write-wins with no recency guard (the reference's
@@ -190,7 +187,7 @@ final class CdcPipeline(
   def backfill(files: Seq[String]): Seq[(String, Outcome)] = processFiles(files.sorted)
 
   /** Micro-batch driver: apply a batch of event-delivered files with ONE
-    * ledger scan for the whole batch — the per-event ledger SELECT of the
+    * ledger check for the whole batch — the per-event ledger SELECT of the
     * reference (handler.py:800-804), amortized. Given order is preserved
     * (backfill passes path-sorted = binlog order). Intra-batch duplicate
     * deliveries (at-least-once event sources re-deliver) skip after the

@@ -50,6 +50,9 @@ class MorStore(spark: SparkSession, root: String, keyCols: Seq[String]) {
 
   private def genDir(v: Long) = new Path(root, s"g=$v")
 
+  /** Generation `g`'s files, schema from a driver footer read (no job). */
+  private def readGen(g: Long): DataFrame = ParquetFooters.read(spark, Seq(genDir(g).toString))
+
   private[graft] val log = new CommitLog[MorStore.Entry](spark, root, "_log")
 
   // ── commit ──────────────────────────────────────────────────────────
@@ -93,12 +96,13 @@ class MorStore(spark: SparkSession, root: String, keyCols: Seq[String]) {
     * and the delta's row columns match the base schema exactly — an
     * extra column (e.g. a partition column a DLQ read infers) would
     * otherwise surface later as an unrelated union-arity error in the
-    * resolve, far from the commit that caused it.
+    * resolve, far from the commit that caused it. Every schema here is
+    * read from footers on the driver, so the aggregation is the one job.
     */
   private def validateDeltaFiles(dest: Path, allowEvolution: Boolean): Unit = {
-    val written = spark.read.parquet(dest.toString)
+    val written = ParquetFooters.read(spark, Seq(dest.toString))
     generations().filter(_._2 == "base").map(_._1).lastOption.foreach { bg =>
-      val baseSchema = spark.read.parquet(genDir(bg).toString).schema
+      val baseSchema = ParquetFooters.schema(spark, Seq(genDir(bg).toString))
       val baseCols = baseSchema.fieldNames.toSet
       val rowCols = written.columns
         .filterNot(c => c == OpCol || c == SeqCol).toSet
@@ -120,14 +124,14 @@ class MorStore(spark: SparkSession, root: String, keyCols: Seq[String]) {
       // as int64 anyway. Reject at the commit with the fix spelled
       // out: widening drift → promote() first; anything else → manual.
       // The EFFECTIVE schema is base ++ columns added by earlier
-      // deltas (evolution), each a cheap footer read — checking only
-      // the base would let delta-vs-delta drift on an evolved column
-      // through to the resolve, the exact far-from-cause failure this
-      // guard exists to prevent.
+      // deltas (evolution), each one footer read on the driver (no
+      // Spark job) — checking only the base would let delta-vs-delta
+      // drift on an evolved column through to the resolve, the exact
+      // far-from-cause failure this guard exists to prevent.
       val effective = scala.collection.mutable.Map[String, org.apache.spark
         .sql.types.DataType](baseSchema.fields.toIndexedSeq.map(f => f.name -> f.dataType): _*)
       generations().collect { case (g, "delta") if g > bg => g }.foreach { dg =>
-        spark.read.parquet(genDir(dg).toString).schema.fields
+        ParquetFooters.schema(spark, Seq(genDir(dg).toString)).fields
           .filterNot(f => f.name == OpCol || f.name == SeqCol)
           .foreach(f => effective.getOrElseUpdate(f.name, f.dataType))
       }
@@ -323,6 +327,17 @@ class MorStore(spark: SparkSession, root: String, keyCols: Seq[String]) {
     e.kind == "base" && e.rows.contains(0L)
   }
 
+  /** Rows logged from the newest base onward: an upper bound on the rows
+    * of [[netChanges]], from the log alone (no data file, no Spark job).
+    * None before the first commit, or when an entry carries no count.
+    */
+  private[graft] def loggedRowsSinceBase: Option[Long] = {
+    val es = log.entries()
+    val fromBase = es.drop(es.lastIndexWhere(_.kind == "base").max(0))
+    if (fromBase.isEmpty || fromBase.exists(_.rows.isEmpty)) None
+    else Some(fromBase.flatMap(_.rows).sum)
+  }
+
   // ── read (the MoR resolve) ──────────────────────────────────────────
 
   /** Current table state: newest base, with every later delta
@@ -349,7 +364,7 @@ class MorStore(spark: SparkSession, root: String, keyCols: Seq[String]) {
   private def readGens(gens: Seq[(Long, String)]): DataFrame = {
     val baseGen = gens.filter(_._2 == "base").map(_._1).lastOption
       .getOrElse(throw new IllegalStateException(s"no base generation at $root"))
-    val base = spark.read.parquet(genDir(baseGen).toString)
+    val base = readGen(baseGen)
     val deltaGens = gens.collect { case (g, "delta") if g > baseGen => g }
     if (deltaGens.isEmpty) base
     else {
@@ -361,8 +376,7 @@ class MorStore(spark: SparkSession, root: String, keyCols: Seq[String]) {
       // anchored to the file's PARENT directory ($-anchored), not the
       // first g= anywhere in the path — a store rooted under a user
       // path that itself contains "/g=N/" must not mis-recover
-      val deltas = spark.read.option("mergeSchema", "true")
-        .parquet(deltaGens.map(g => genDir(g).toString): _*)
+      val deltas = ParquetFooters.read(spark, deltaGens.map(g => genDir(g).toString), merge = true)
         .withColumn("__gen", regexp_extract(
           col("_metadata.file_path"), "/g=(\\d+)/[^/]+$", 1).cast("long"))
       // newest delta row per key wins; generation ties (several
@@ -439,11 +453,9 @@ class MorStore(spark: SparkSession, root: String, keyCols: Seq[String]) {
       g > fromExclusive && g <= toInclusive }
     val parts = window.flatMap {
       case (g, "delta") =>
-        Some(spark.read.parquet(genDir(g).toString)
-          .withColumn(ChangeGenCol, lit(g)))
+        Some(readGen(g).withColumn(ChangeGenCol, lit(g)))
       case (g, _) if g == oldest && fromExclusive < oldest =>
-        Some(spark.read.parquet(genDir(g).toString)
-          .withColumn(OpCol, lit("U")).withColumn(ChangeGenCol, lit(g)))
+        Some(readGen(g).withColumn(OpCol, lit("U")).withColumn(ChangeGenCol, lit(g)))
       case _ => None
     }
     if (parts.isEmpty)

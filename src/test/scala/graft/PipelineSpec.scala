@@ -256,18 +256,26 @@ class PipelineSpec extends AnyFunSuite with SparkJobProbe {
     assert(pipe.ledger.isProcessed(fileDir))
   }
 
-  test("pipeline: probabilistic cleanup triggers under injected RNG") {
+  test("pipeline: a mark crossing the ledger's size trigger folds it with retention") {
     import spark.implicits._
     val root = tmpDir()
     val keys = TableKeys.parse("""{"users": "id"}""")
-    val pipe = new CdcPipeline(spark, s"$root/store", keys, numBuckets = 4,
-      cleanupProbability = 1.0, cleanupRng = () => 0.0)
+    // a ledger row past the 30-day retention, in the ledger's parquet base
+    spark.createDataFrame(spark.sparkContext.parallelize(Seq(org.apache.spark.sql.Row("ancient",
+      "completed", null, new java.sql.Timestamp(System.currentTimeMillis() - 40L * 86400000L))), 1),
+      FileLedger.Schema).write.parquet(s"$root/store/_ledger")
+    val pipe = new CdcPipeline(spark, s"$root/store", keys, numBuckets = 4)
     pipe.initialLoad("users", Seq((1L, "alice", 1.0)).toDF("id", "v", "amount"))
+    // a full tail: the next mark crosses the trigger
+    (0 until FileLedger.MaxTailEntries).foreach(i => pipe.ledger.markCompleted(s"history/$i"))
+    assert(pipe.ledger.isProcessed("ancient"))
     val fileDir = s"$root/fair/users/2026/08/12/b.parquet"
     writeCdcFile(fileDir, Seq((2L, "bob", 2.0, "I", "2026-08-02 00:00:00", 0L)))
     assert(pipe.processFile(fileDir).isInstanceOf[CdcPipeline.Applied])
-    // cleanup ran (retention keeps today's rows; the ledger was compacted)
-    assert(pipe.ledger.records.count() == 1)
+    // the fold ran: the tail is empty and retention dropped the old row
+    assert(new java.io.File(s"$root/store/_ledger/_log").list().count(_.endsWith(".json")) == 0)
+    assert(pipe.ledger.records.count() == FileLedger.MaxTailEntries + 1)
+    assert(pipe.ledger.isProcessed(fileDir) && !pipe.ledger.isProcessed("ancient"))
   }
 
   test("backfill: discovers files recursively, applies in path order, skips LOAD/processed") {
