@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.collection.immutable.BitSet
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -117,30 +119,40 @@ object CdcDedup {
     else windowPath(df, keys)
   }
 
-  /** [[dedup]] fused with [[MergePlanner.probe]]: ONE aggregation pass
-    * over the staging batch yields BOTH the gate decision (total vs
-    * distinct keys) AND the merge planner's probe (deduped row count +
-    * approx distinct target buckets) — the separate probe job is gone
-    * from the pipeline (it cost a second full-batch aggregation per
-    * file). The fusion is exact, not approximate: dedup keeps one row
-    * per key tuple, so the deduped batch has `unique_keys` rows and
-    * touches the same bucket set as the raw batch, and HLL++ registers
-    * depend only on the SET of hashed values, so duplicates cannot
-    * move the bucket estimate.
+  /** [[dedup]] fused with the merge planner's probe: ONE aggregation,
+    * grouped by the target store's bucket expression
+    * ([[graft.sources.BucketedTableStore.bucketExpr]]), yields the gate
+    * decision (rows vs distinct keys) AND the probe: the exact deduped
+    * row count and the exact set of buckets the batch touches, which the
+    * merge takes instead of finding them in a pass of its own. One row
+    * per touched bucket reaches the driver (at most the batch's distinct
+    * keys, at most `numBuckets`). The fusion is exact: a key's bucket is
+    * a function of the key, so the per-bucket distinct-key counts sum to
+    * the batch's, and dedup keeps one row per key tuple, so the deduped
+    * batch has `unique` rows and the raw batch's bucket set.
     *
-    * `numBuckets` must match the target store's bucketing (same
-    * contract as [[MergePlanner.probe]]).
+    * A batch with duplicates comes back as a lazy local checkpoint of
+    * the window: the window's shuffle runs once, when the frame is made,
+    * and the first job that reads it keeps its rows for the merge's
+    * other joins, which would each rerun the window (column pruning gives
+    * each its own exchange). Caching the frame instead costs a job per
+    * reading stage. The rows go with the frame; an executor lost before
+    * the merge fails the apply, which is then retried.
+    *
+    * `numBuckets` must match the target store's bucketing.
     */
   def dedupAndProbe(df: DataFrame, keys: Seq[String], numBuckets: Int)
       : (DataFrame, MergePlanner.Probe) = {
-    val bucket = pmod(hash(keys.map(col): _*), lit(numBuckets))
-    val row = df.agg(
-      count(lit(1)).as("total_rows"),
-      count_distinct(struct(keys.map(col): _*)).as("unique_keys"),
-      approx_count_distinct(bucket).as("buckets_touched")).head()
-    val (total, unique) = (row.getLong(0), row.getLong(1))
-    val out = if (total == unique) skipPath(df) else windowPath(df, keys)
-    (out, MergePlanner.Probe(unique, row.getLong(2)))
+    val perBucket = df
+      .groupBy(graft.sources.BucketedTableStore.bucketExpr(keys, numBuckets))
+      .agg(count(lit(1)), count_distinct(struct(keys.map(col): _*)))
+      .collect()
+    val total = perBucket.iterator.map(_.getLong(1)).sum
+    val unique = perBucket.iterator.map(_.getLong(2)).sum
+    val out =
+      if (total == unique) skipPath(df)
+      else windowPath(df, keys).localCheckpoint(eager = false)
+    (out, MergePlanner.Probe(unique, BitSet.fromSpecific(perBucket.iterator.map(_.getInt(0)))))
   }
 
   private def transientCols(df: DataFrame): Seq[String] =

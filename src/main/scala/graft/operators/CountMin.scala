@@ -62,8 +62,7 @@ object CountMin {
     * aggregate; 0 for an empty sketch. This is the probe that lets a
     * skew-aware planner SKIP hot-key detection entirely when the
     * bound already clears the threshold (the common, unskewed case) —
-    * [[MergePlanner.probe]]'s hot-bucket bound and
-    * [[SkewJoin.sketchPlannedJoin]]'s fast path both ride it.
+    * [[SkewJoin.sketchPlannedJoin]]'s fast path rides it.
     */
   def heaviestKeyBound(sketch: DataFrame): Long =
     sketch.groupBy(col("row")).agg(max(col("c")).as("m"))

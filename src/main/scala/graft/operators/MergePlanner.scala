@@ -1,7 +1,10 @@
 package graft.operators
 
+import scala.collection.immutable.BitSet
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.sources.{BucketedTableStore, MorStore}
 
@@ -28,15 +31,17 @@ import graft.sources.{BucketedTableStore, MorStore}
   *    ([[graft.sources.MorStore.commitDelta]]) instead, deferring the
   *    rewrite to compaction.
   *
-  * The decision costs ONE small aggregation over the staging batch
-  * (row count + approximate distinct count of the target bucket id),
-  * which the pipeline fuses into its dedup gate
-  * ([[CdcDedup.dedupAndProbe]]).
+  * The decision costs ONE small aggregation over the staging batch,
+  * grouped by the target bucket id (exact row count + exact touched
+  * bucket set), which the pipeline fuses into its dedup gate
+  * ([[CdcDedup.dedupAndProbe]]). The same set then tells the CoW merge
+  * which buckets to rewrite, and the MoR route logs it with its delta
+  * so a drain knows its buckets from the log.
   *
-  * At 100 TB the probe is what makes adaptivity affordable: counting
-  * rows and approximating distinct buckets is one map-side-combined
-  * pass over the BATCH (never the table), and the strategy it picks
-  * changes the write cost by orders of magnitude in both directions.
+  * At 100 TB the probe is what makes adaptivity affordable: it is one
+  * map-side-combined pass over the BATCH (never the table), and the
+  * strategy it picks changes the write cost by orders of magnitude in
+  * both directions.
   */
 object MergePlanner {
 
@@ -45,14 +50,14 @@ object MergePlanner {
   case object ShuffleCow extends Strategy
   case object MorDelta extends Strategy
 
-  /** What one probe pass observed about a staging batch.
+  /** What one probe pass observed about a staging batch; every field
+    * is exact.
     *
-    * @param rows           exact batch row count
-    * @param bucketsTouched approx distinct target buckets (HLL++,
-    *                       default 5% relative error — strategy
-    *                       boundaries are coarse, the error is noise)
+    * @param rows    deduplicated row count (the batch's distinct keys)
+    * @param buckets the target buckets the batch's keys hash to
     */
-  final case class Probe(rows: Long, bucketsTouched: Long) {
+  final case class Probe(rows: Long, buckets: BitSet) {
+    def bucketsTouched: Long = buckets.size
     def touchedFrac(numBuckets: Int): Double =
       if (numBuckets <= 0) 1.0 else bucketsTouched.toDouble / numBuckets
   }
@@ -72,18 +77,6 @@ object MergePlanner {
       broadcastMaxRows: Long = 2000000L,
       bucketFrac: Double = 0.5)
 
-  /** One aggregation pass over the batch: exact rows + approx distinct
-    * buckets. `keys` and `numBuckets` must match the target store's
-    * bucketing or the touch estimate is meaningless.
-    */
-  def probe(staging: DataFrame, keys: Seq[String], numBuckets: Int): Probe = {
-    val r = staging
-      .agg(count(lit(1)).as("n"),
-        approx_count_distinct(pmod(hash(keys.map(col): _*), lit(numBuckets))).as("b"))
-      .head()
-    Probe(r.getLong(0), r.getLong(1))
-  }
-
   /** The policy — pure and total, so the spec enumerates it directly. */
   def choose(p: Probe, numBuckets: Int,
       th: Thresholds = Thresholds()): Strategy =
@@ -99,11 +92,14 @@ object MergePlanner {
     * side the log shows empty ([[MorStore.knownEmpty]]: never written,
     * or drained) is not resolved at all: the view is the home's read.
     */
-  def resolvedView(cow: BucketedTableStore, morSide: MorStore): DataFrame = {
-    val home = cow.read()
+  def resolvedView(cow: BucketedTableStore, morSide: MorStore): DataFrame =
+    resolve(cow.read(), cow, morSide)
+
+  /** [[resolvedView]] over `home`, all of the CoW home or a slice of it. */
+  private def resolve(home: DataFrame, cow: BucketedTableStore, morSide: MorStore): DataFrame =
     if (morSide.knownEmpty) home
     else {
-      val net = morSide.netChanges()
+      val net = morSide.netChanges().localCheckpoint(eager = false)
       val upserts = net.filter(col(morSide.OpCol) === "U")
       val aligned = upserts.select(home.columns.toSeq.map(c =>
         if (upserts.columns.contains(c)) col(c)
@@ -111,7 +107,6 @@ object MergePlanner {
       home.join(net.select(cow.keys.map(col): _*), cow.keys, "left_anti")
         .unionByName(aligned)
     }
-  }
 
   /** Normalize a CDC batch into a MoR delta that reproduces the CoW
     * merge EXACTLY: the merge's WHEN-NOT-MATCHED insert applies to
@@ -121,12 +116,15 @@ object MergePlanner {
     * handler.py:876-946), while a D on a present key deletes it. The
     * presence probe broadcasts the batch's keys into ONE column-pruned
     * scan of home ∪ side — still O(scan) cheaper than the
-    * whole-table rewrite the delta route avoided.
+    * whole-table rewrite the delta route avoided. Given the batch's
+    * `buckets` (its probe's set), the home part of that scan reads only
+    * those buckets; the side is resolved in full either way.
     */
   private[graft] def normalizeDelta(cow: BucketedTableStore, morSide: MorStore,
-      staging: DataFrame, opCol: String): DataFrame = {
+      staging: DataFrame, opCol: String, buckets: Option[BitSet] = None): DataFrame = {
     val keys = cow.keys
-    val present = resolvedView(cow, morSide).select(keys.map(col): _*)
+    val home = buckets.fold(cow.read())(cow.read)
+    val present = resolve(home, cow, morSide).select(keys.map(col): _*)
       .join(broadcast(staging.select(keys.map(col): _*)), keys, "left_semi")
       .withColumn("__present", lit(true))
     staging.join(broadcast(present), keys, "left")
@@ -146,6 +144,9 @@ object MergePlanner {
     * else upserts. Returns the strategy taken and the touched bucket
     * count (0 for a MoR delta).
     *
+    * The probe's bucket set rides along: the CoW merge rewrites exactly
+    * those buckets, and a MoR delta logs them for its drain.
+    *
     * ORDERING: once any batch lands in `morSide`, a later CoW merge
     * of overlapping keys would apply out of order — so a CoW-routed
     * batch [[drain]]s the side FIRST (one amortized rewrite of the
@@ -161,8 +162,8 @@ object MergePlanner {
         // including the WHEN-NOT-MATCHED insert of unmatched DELETE
         // rows; a first delta bootstraps the side's EMPTY base (all
         // live data is in the CoW home)
-        morSide.commitDelta(normalizeDelta(cow, morSide, batch, "Op"),
-          morSide.freshTs())
+        morSide.commitDelta(normalizeDelta(cow, morSide, batch, "Op", Some(p.buckets)),
+          morSide.freshTs(), buckets = Some(p.buckets))
         (MorDelta, 0)
       case chosen =>
         // fold any accumulated scatter home first — per-key apply
@@ -170,7 +171,8 @@ object MergePlanner {
         // route through the store's bucket-pruned rewrite, the
         // broadcast hint following the decision
         drain(cow, morSide, th)
-        (chosen, cow.merge(batch, broadcastStaging = chosen == BroadcastCow))
+        (chosen, cow.merge(batch, broadcastStaging = chosen == BroadcastCow,
+          buckets = Some(p.buckets)))
     }
 
   /** Fold the MoR side-table's accumulated scatter back into the CoW
@@ -179,15 +181,21 @@ object MergePlanner {
     * bucket-pruned rewrite applies the NET per-key change
     * ([[graft.sources.MorStore.netChanges]] — latest op wins, deletes
     * included), so N scattered MorDelta batches cost one amortized
-    * rewrite instead of N. The broadcast hint follows the same row
-    * threshold the per-batch routing uses, applied to the rows the side's
-    * log counts from its newest base onward — an upper bound on the net
-    * rows, known without a job; a side whose log lacks a count takes the
-    * shuffle merge. Returns touched bucket count.
+    * rewrite instead of N. Two facts come from the side's log from its
+    * newest base onward, with no job: the rows logged (an upper bound on
+    * the net rows) pick the broadcast hint by the same row threshold the
+    * per-batch routing uses, and the union of the logged bucket sets
+    * tells the merge which buckets to rewrite. A side whose log lacks a
+    * count takes the shuffle merge; one whose log lacks a set (or names
+    * a bucket the home does not have) lets the merge find the buckets in
+    * a pass of its own. The net changes are a lazy local checkpoint, as
+    * a deduplicated batch is ([[CdcDedup.dedupAndProbe]]): their window
+    * runs once for the merge's joins. Returns touched bucket count.
     *
-    * The reset commits an empty BASE generation logged with 0 rows, so a
-    * crash between the merge and the reset replays the net changes —
-    * idempotent, because the net batch is last-write-wins against rows
+    * The reset commits an empty BASE generation logged with 0 rows,
+    * written on the driver ([[graft.sources.MorStore.commitEmptyBase]]),
+    * so a crash between the merge and the reset replays the net changes
+    * — idempotent, because the net batch is last-write-wins against rows
     * it already wrote. A side the log shows empty
     * ([[MorStore.knownEmpty]]: never written, or already drained) is a
     * no-op that reads no data, starts no Spark job and commits nothing,
@@ -197,12 +205,13 @@ object MergePlanner {
       th: Thresholds = Thresholds()): Int =
     if (morSide.knownEmpty) 0
     else {
-      val net = morSide.netChanges()
+      val net = morSide.netChanges().localCheckpoint(eager = false)
       val touched = cow.merge(net.drop(morSide.SeqCol),
         deleteCol = morSide.OpCol, deleteVals = Seq("D"),
-        broadcastStaging = morSide.loggedRowsSinceBase.exists(_ <= th.broadcastMaxRows))
-      morSide.commitBase(net.filter(lit(false)).drop(
-        morSide.OpCol, morSide.SeqCol), morSide.freshTs())
+        broadcastStaging = morSide.loggedRowsSinceBase.exists(_ <= th.broadcastMaxRows),
+        buckets = morSide.loggedBucketsSinceBase.filter(_.forall(_ < cow.numBuckets)))
+      morSide.commitEmptyBase(StructType(net.schema.filterNot(f =>
+        f.name == morSide.OpCol || f.name == morSide.SeqCol)), morSide.freshTs())
       touched
     }
 }

@@ -37,7 +37,6 @@ private[graft] object Overlap {
   def inParallel[T](tasks: Seq[() => T]): Seq[T] =
     if (tasks.lengthCompare(1) <= 0) tasks.map(_())
     else {
-      import scala.jdk.CollectionConverters._
       val pool = java.util.concurrent.Executors.newFixedThreadPool(
         tasks.size,
         (r: Runnable) => {
@@ -45,13 +44,20 @@ private[graft] object Overlap {
           t.setDaemon(true)
           t
         })
-      // invokeAll returns only once every task has completed; the first
-      // failure in input order is rethrown after that
-      try pool.invokeAll(tasks.map(t => (() => t()): java.util.concurrent.Callable[T]).asJava)
-        .asScala.toSeq.map { f =>
-          try f.get()
-          catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
-        }
-      finally pool.shutdown()
+      try onPool(pool, tasks) finally pool.shutdown()
     }
+
+  /** [[inParallel]] on a caller's pool (a bounded pool queues what it
+    * cannot start): every task completes before the first failure in
+    * input order is rethrown.
+    */
+  def onPool[T](pool: java.util.concurrent.ExecutorService, tasks: Seq[() => T]): Seq[T] = {
+    import scala.jdk.CollectionConverters._
+    // invokeAll returns only once every task has completed
+    pool.invokeAll(tasks.map(t => (() => t()): java.util.concurrent.Callable[T]).asJava)
+      .asScala.toSeq.map { f =>
+        try f.get()
+        catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+      }
+  }
 }

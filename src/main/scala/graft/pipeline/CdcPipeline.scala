@@ -106,13 +106,15 @@ final class CdcPipeline(
 
   /** Apply one routed file. Any non-fatal failure becomes a `failed`
     * ledger row; a fatal JVM error (OOM, interrupt) propagates unrecorded.
-    * The staged file is released on every path.
+    * Nothing is cached: the file is staged as a plain read, which the
+    * dedup gate and the merge's joins each scan (a CDC file is small, and
+    * caching it would cost a job of its own), so no path has a cache to
+    * release.
     */
-  private def applyFile(fileKey: String, table: String, keys: Seq[String]): Outcome = {
-    var staging: DataFrame = null
+  private def applyFile(fileKey: String, table: String, keys: Seq[String]): Outcome =
     try {
       // STEP 1: stage with ingestion_seq (handler.py:486-546)
-      staging = CdcDedup.readCdcFiles(spark, Seq(fileKey)).persist()
+      val staging = CdcDedup.readCdcFiles(spark, Seq(fileKey))
       val (touched, evolution) = applyStaged(staging, table, keys, CdcPath.ledgerKey(fileKey))
 
       // STEP 7: ledger (handler.py:962-967)
@@ -122,14 +124,13 @@ final class CdcPipeline(
       case NonFatal(e) =>
         ledger.markFailed(CdcPath.ledgerKey(fileKey), e.getMessage)
         Failed(table, e)
-    } finally if (staging != null) staging.unpersist()
-  }
+    }
 
   /** Apply an already-staged batch — one file, or a stream micro-batch of
     * files — to `table`: schema-evolve, cascade dedup, adaptive MERGE.
     * `source` names the batch in `_evolution_log`. Returns the touched
-    * bucket count and the evolution result; the caller owns the staging
-    * persist and the ledger mark.
+    * bucket count and the evolution result; the caller owns any persist
+    * of the staging and the ledger mark.
     */
   private[graft] def applyStaged(staging: DataFrame, table: String, keys: Seq[String],
       source: String): (Int, SchemaEvolution.EvolutionResult) = {
@@ -156,10 +157,11 @@ final class CdcPipeline(
       }
 
     // STEP 3: dedup via the cascade (handler.py:407-479). The gate
-    // aggregation ALSO carries the merge planner's probe (exact fusion:
-    // the deduped batch has `unique_keys` rows and the same bucket set),
-    // so adaptive routing costs exactly what the reference's dedup gate
-    // already paid (handler.py:423-439).
+    // aggregation, grouped by bucket, ALSO carries the merge planner's
+    // probe: exact rows and the exact touched-bucket set, so adaptive
+    // routing and the merge's bucket pruning cost exactly what the
+    // reference's dedup gate already paid (handler.py:423-439). A
+    // deduplicated batch comes back checkpointed, so its window runs once.
     val (dedup, probe) = CdcDedup.dedupAndProbe(staging, keys, numBuckets)
 
     // STEP 4+5: column prep + MERGE (handler.py:876-946), routed per

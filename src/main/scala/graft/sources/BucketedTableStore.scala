@@ -2,8 +2,10 @@ package graft.sources
 
 import java.util.UUID
 
+import scala.collection.immutable.BitSet
+
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
@@ -22,8 +24,12 @@ import graft.operators.CdcMerge
   *   path/__bucket=0..N-1/part-*.parquet,  __bucket = pmod(hash(keys), N)
   *
   * A merge then:
-  *   1. computes the distinct buckets touched by the staged keys (≤ batch
-  *      size, usually ≪ N);
+  *   1. takes the buckets touched by the staged keys (≤ batch size,
+  *      usually ≪ N) from its caller — the CDC path's dedup gate
+  *      aggregates by bucket anyway ([[graft.operators.CdcDedup
+  *      .dedupAndProbe]]), and a drain reads them from the side-store's
+  *      log — or, when the caller has none, finds them in one
+  *      `distinct` pass over the batch;
   *   2. reads ONLY those bucket directories: the root listing that the
   *      swap recovery already does names the live ones, and the scan is
   *      planned from the store's own listing of just those directories;
@@ -61,9 +67,6 @@ final class BucketedTableStore(
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   def exists: Boolean = fs.exists(new Path(path))
-
-  private def bucketOf(df: DataFrame) =
-    pmod(hash(keys.map(col): _*), lit(numBuckets))
 
   /** Initial (full) load — the reference's `LOAD*` path
     * (handler.py:781-783 skips these in CDC; they seed the table).
@@ -122,7 +125,7 @@ final class BucketedTableStore(
     * row groups (free point-lookup pruning on top of the bucket pruning).
     */
   private def writeBuckets(df: DataFrame, dest: String): Unit =
-    df.withColumn(BucketCol, bucketOf(df))
+    df.withColumn(BucketCol, bucketExpr(keys, numBuckets))
       .repartition(col(BucketCol))
       .sortWithinPartitions((BucketCol +: keys).map(col): _*)
       .write.mode(SaveMode.Overwrite)
@@ -155,6 +158,13 @@ final class BucketedTableStore(
       liveBuckets(fs.listStatus(new Path(path)).map(_.getPath)))
     case None => spark.read.parquet(path).drop(BucketCol)
   }
+
+  /** The rows of `buckets` only: one [[scan]] of the live ones among
+    * them, as a merge reads its slice, so a probe for a batch's keys
+    * lists and scans the batch's buckets, not the table.
+    */
+  private[graft] def read(buckets: BitSet): DataFrame =
+    scan(schema, liveBuckets(fs.listStatus(new Path(path)).map(_.getPath)).filter(buckets))
 
   /** One scan of the given live buckets, schema `s` (nullable, without
     * the bucket column), planned from the store's own listing: each
@@ -202,20 +212,25 @@ final class BucketedTableStore(
     if (result.columnsAdded.nonEmpty)
       writeSchemaSidecar(graft.operators.SchemaEvolution.evolve(schema, result))
 
-  /** Merge one deduplicated staging batch. Returns touched bucket count. */
+  /** Merge one deduplicated staging batch. `buckets`, when given, must
+    * hold every bucket the batch's keys hash to (more is harmless: a
+    * bucket no key reaches is rewritten unchanged); without it the merge
+    * finds them in a pass of its own. Returns touched bucket count.
+    */
   def merge(
       staging: DataFrame,
       deleteCol: String = "Op",
       deleteVals: Seq[String] = Seq("D"),
-      broadcastStaging: Boolean = true): Int = {
+      broadcastStaging: Boolean = true,
+      buckets: Option[BitSet] = None): Int = {
     require(exists, s"target $path not initialized")
     validateBucketCount()
     val live = recoverInterruptedSwaps()
 
     // 1. buckets touched by this batch (small: ≤ distinct staged keys)
-    val stagingB = staging.withColumn(BucketCol, bucketOf(staging)).persist()
-    val affected = stagingB.select(BucketCol).distinct().collect().map(_.getInt(0)).sorted
-    if (affected.isEmpty) { stagingB.unpersist(); return 0 }
+    val affected = buckets.getOrElse(BitSet.fromSpecific(
+      staging.select(bucketExpr(keys, numBuckets)).distinct().collect().map(_.getInt(0)))).toArray
+    if (affected.isEmpty) return 0
 
     // 2. scan of only the affected live bucket directories; none live
     // ⇒ an empty slice
@@ -223,10 +238,10 @@ final class BucketedTableStore(
 
     // 3. merge on the slice — broadcast for CDC-file-sized batches, a
     // shuffle join when the caller (e.g. MergePlanner's ShuffleCow for
-    // backfills) knows the batch is too big to ship to every task (the
-    // store owns the staging persist lifecycle — no inner persist that
-    // would leak across micro-batches)
-    val merged = CdcMerge(slice, stagingB.drop(BucketCol), keys, deleteCol, deleteVals,
+    // backfills) knows the batch is too big to ship to every task. The
+    // caller owns any persist of the batch: no persist here that would
+    // leak across micro-batches.
+    val merged = CdcMerge(slice, staging, keys, deleteCol, deleteVals,
       broadcastStaging = broadcastStaging, persistStaging = false)
 
     // 4. temp write + per-bucket swap. Renames only, in two phases with a
@@ -260,7 +275,6 @@ final class BucketedTableStore(
     }
     fs.delete(tmp, true)
     fs.delete(trash, true)
-    stagingB.unpersist()
     affected.length
   }
 
@@ -293,6 +307,10 @@ object BucketedTableStore {
   val BucketCol = "__bucket"
 
   private val BucketField = StructField(BucketCol, IntegerType, nullable = true)
+
+  /** The bucket of a row: `pmod(hash(keys), numBuckets)`. */
+  def bucketExpr(keys: Seq[String], numBuckets: Int): Column =
+    pmod(hash(keys.map(col): _*), lit(numBuckets))
 
   /** The buckets named by `__bucket=b` directories among `listed`, ascending. */
   private def liveBuckets(listed: Array[Path]): Array[Int] =

@@ -1,8 +1,11 @@
 package graft.sources
 
+import scala.collection.immutable.BitSet
+
 import com.fasterxml.jackson.databind.annotation.JsonDeserialize
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.GraftFooterBridge
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -66,6 +69,21 @@ class MorStore(spark: SparkSession, root: String, keyCols: Seq[String]) {
     g
   }
 
+  /** Commit an empty base generation of `schema` — a side-store's
+    * bootstrap or reset — as one footer-only parquet file written on the
+    * driver: what an empty Spark write leaves, with no Spark job. Logged
+    * with 0 rows, so the store is [[knownEmpty]] after it. Returns the
+    * generation.
+    */
+  private[graft] def commitEmptyBase(schema: StructType, commitTsMillis: Long): Long = {
+    val g = log.nextId()
+    fs.delete(genDir(g), true) // orphan from a crashed commit
+    GraftFooterBridge.writeEmpty(spark, spark.sparkContext.hadoopConfiguration,
+      new Path(genDir(g), "part-00000.parquet"), schema)
+    log.append(MorStore.Entry(g, commitTsMillis, "base", Some(0L)))
+    g
+  }
+
   /** Write generation `g`; returns its row count, which rides the write
     * itself (an Observation metric, no second job).
     */
@@ -84,12 +102,14 @@ class MorStore(spark: SparkSession, root: String, keyCols: Seq[String]) {
     * before the generation becomes visible; violations abort with the
     * generation directory still invisible (no log entry). A store
     * with no generation yet first commits an EMPTY base of the delta's
-    * row schema under the same ts, so a first delta needs no special
-    * casing in the caller.
+    * row schema under the same ts ([[commitEmptyBase]]), so a first
+    * delta needs no special casing in the caller. `buckets`, when given,
+    * is logged on the delta's entry: the CoW home buckets its keys hash
+    * to, which a drain reads back ([[loggedBucketsSinceBase]]).
     */
   def commitDelta(delta: DataFrame, commitTsMillis: Long,
-      allowEvolution: Boolean = false): Long =
-    commitDeltaAll(Seq(delta -> commitTsMillis), allowEvolution).head
+      allowEvolution: Boolean = false, buckets: Option[BitSet] = None): Long =
+    commitChain(Seq((delta, commitTsMillis, buckets)), allowEvolution).head
 
   /** Fail unless every __op ∈ {U, D}, (key ++ __seq-if-present) is
     * unique (one aggregation job over the just-written generation),
@@ -193,21 +213,24 @@ class MorStore(spark: SparkSession, root: String, keyCols: Seq[String]) {
     * deltas that do not read this store.
     */
   def commitDeltaAll(deltas: Seq[(DataFrame, Long)],
-      allowEvolution: Boolean = false): Seq[Long] = {
-    deltas.foreach { case (d, _) =>
+      allowEvolution: Boolean = false): Seq[Long] =
+    commitChain(deltas.map { case (d, ts) => (d, ts, None) }, allowEvolution)
+
+  private def commitChain(deltas: Seq[(DataFrame, Long, Option[BitSet])],
+      allowEvolution: Boolean): Seq[Long] = {
+    deltas.foreach { case (d, _, _) =>
       require(d.columns.contains(OpCol), s"delta must carry $OpCol in {U, D}") }
     if (deltas.nonEmpty && isEmpty) {
-      val (d, ts) = deltas.head
-      commitBase(spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-        StructType(d.schema.filterNot(f => f.name == OpCol || f.name == SeqCol))), ts)
+      val (d, ts, _) = deltas.head
+      commitEmptyBase(StructType(d.schema.filterNot(f => f.name == OpCol || f.name == SeqCol)), ts)
     }
     val base = log.nextId()
     val rows = graft.operators.Overlap.inParallel(
-      deltas.zipWithIndex.map { case ((df, _), i) => () => write(base + i, df) })
-    deltas.zipWithIndex.map { case ((_, ts), i) =>
+      deltas.zipWithIndex.map { case ((df, _, _), i) => () => write(base + i, df) })
+    deltas.zipWithIndex.map { case ((_, ts, buckets), i) =>
       val g = base + i
       validateDeltaFiles(genDir(g), allowEvolution)
-      log.append(MorStore.Entry(g, ts, "delta", Some(rows(i))))
+      log.append(MorStore.Entry(g, ts, "delta", Some(rows(i)), buckets.map(MorStore.encodeBuckets)))
       g
     }
   }
@@ -332,10 +355,28 @@ class MorStore(spark: SparkSession, root: String, keyCols: Seq[String]) {
     * None before the first commit, or when an entry carries no count.
     */
   private[graft] def loggedRowsSinceBase: Option[Long] = {
-    val es = log.entries()
-    val fromBase = es.drop(es.lastIndexWhere(_.kind == "base").max(0))
+    val fromBase = entriesSinceBase
     if (fromBase.isEmpty || fromBase.exists(_.rows.isEmpty)) None
     else Some(fromBase.flatMap(_.rows).sum)
+  }
+
+  /** The union of the bucket sets logged from the newest base onward:
+    * every CoW home bucket [[netChanges]] touches, from the log alone. A
+    * base logged with 0 rows adds none. None before the first commit, or
+    * when an entry carries no set (a delta committed without one, or a
+    * base with rows).
+    */
+  private[graft] def loggedBucketsSinceBase: Option[BitSet] = {
+    val fromBase = entriesSinceBase
+    val sets = fromBase.filterNot(e => e.kind == "base" && e.rows.contains(0L))
+      .map(_.buckets.map(MorStore.decodeBuckets))
+    if (fromBase.isEmpty || sets.exists(_.isEmpty)) None
+    else Some(sets.flatten.foldLeft(BitSet.empty)(_ | _))
+  }
+
+  private def entriesSinceBase: Seq[MorStore.Entry] = {
+    val es = log.entries()
+    es.drop(es.lastIndexWhere(_.kind == "base").max(0))
   }
 
   // ── read (the MoR resolve) ──────────────────────────────────────────
@@ -540,13 +581,26 @@ object MorStore {
 
   /** One `_log/N.json` entry; `kind` is "base" or "delta"; `rows` is
     * the generation's row count (None in entries written before it was
-    * recorded).
+    * recorded); `buckets` is a side-store delta's CoW home bucket set
+    * ([[encodeBuckets]]; None when the commit had none, and in entries
+    * written before it was recorded).
     */
   final case class Entry(generation: Long, ts: Long, kind: String,
-      @JsonDeserialize(contentAs = classOf[java.lang.Long]) rows: Option[Long] = None)
+      @JsonDeserialize(contentAs = classOf[java.lang.Long]) rows: Option[Long] = None,
+      buckets: Option[String] = None)
       extends CommitLog.Entry {
     def id: Long = generation
   }
+
+  /** A bucket set as a bitset in base64: one bit per bucket up to the
+    * highest set, so at most `numBuckets / 8` bytes (50,000 at 400k
+    * buckets) before the base64 text's 4/3.
+    */
+  private[graft] def encodeBuckets(b: BitSet): String =
+    java.util.Base64.getEncoder.encodeToString(java.util.BitSet.valueOf(b.toBitMask).toByteArray)
+
+  private[graft] def decodeBuckets(s: String): BitSet =
+    BitSet.fromBitMaskNoCopy(java.util.BitSet.valueOf(java.util.Base64.getDecoder.decode(s)).toLongArray)
 
   private val lastTs = new java.util.concurrent.atomic.AtomicLong(0L)
 

@@ -154,17 +154,13 @@ class TableCatalog(spark: SparkSession, root: String) {
       // all members — on a unified-index commit (6-7 batch-sized
       // relations per micro-batch) that is most of the commit latency,
       // and each job is far narrower than the cluster. A failed write
-      // fails the whole stage (the commit never publishes); any sibling
-      // directory already written is an unreferenced orphan that the
-      // next vacuum reclaims — exactly the crash contract above.
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      implicit val ec = TableCatalog.stagingEc
-      Await.result(
-        Future.sequence(tables.toSeq.map { case (t, df) =>
-          Future(writeOne(t, df))
-        }),
-        Duration.Inf).toMap
+      // fails the whole stage (the commit never publishes) once every
+      // sibling write has settled, so no write is still running when
+      // the error surfaces; any sibling directory written is an
+      // unreferenced orphan that the next vacuum reclaims — exactly the
+      // crash contract above.
+      graft.operators.Overlap.onPool(TableCatalog.stagingPool,
+        tables.toSeq.map { case (t, df) => () => writeOne(t, df) }).toMap
     }
   }
 
@@ -1013,12 +1009,11 @@ object TableCatalog {
     * wave). Daemon threads — staging work must never hold the JVM
     * open past the driver.
     */
-  private[sources] lazy val stagingEc: scala.concurrent.ExecutionContext =
-    scala.concurrent.ExecutionContext.fromExecutorService(
-      java.util.concurrent.Executors.newFixedThreadPool(8,
-        (r: Runnable) => {
-          val t = new Thread(r, "catalog-stage")
-          t.setDaemon(true)
-          t
-        }))
+  private[sources] lazy val stagingPool: java.util.concurrent.ExecutorService =
+    java.util.concurrent.Executors.newFixedThreadPool(8,
+      (r: Runnable) => {
+        val t = new Thread(r, "catalog-stage")
+        t.setDaemon(true)
+        t
+      })
 }

@@ -374,7 +374,6 @@ object ScaleSmoke {
     */
   private def mergePlanSmoke(spark: SparkSession, dir: String,
       numBuckets: Int = 64): Unit = {
-    import graft.operators.MergePlanner
     val li = spark.read.parquet(s"$dir/lineitem.parquet")
     val nRows = li.count()
     val keys = Seq("l_orderkey", "l_linenumber")
@@ -398,7 +397,7 @@ object ScaleSmoke {
         .withColumn("l_quantity", col("l_quantity") + 1)
         .withColumn("Op", lit("U")).persist()
       val n = batch.count()
-      val p = MergePlanner.probe(batch, keys, numBuckets)
+      val (_, p) = graft.operators.CdcDedup.dedupAndProbe(batch, keys, numBuckets)
       println(s"[scale] T=$t: $n rows, probe buckets=${p.bucketsTouched}, " +
         s"touched frac=${p.touchedFrac(numBuckets)}")
       time(f"  T=$t broadcast CoW merge") { store.merge(batch) }

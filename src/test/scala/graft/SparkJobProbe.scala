@@ -5,8 +5,9 @@ import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.scalatest.Assertions
 
 /** Counts the Spark jobs a block starts, for specs that pin a job budget. */
@@ -26,18 +27,29 @@ trait SparkJobProbe extends Assertions {
     val group = s"listing-guard-${UUID.randomUUID()}"
     val marker = s"marker-$group"
     val seen = new ConcurrentLinkedQueue[(String, SparkJobProbe.Job)]()
+    // a SQL execution's call site, by execution id: the jobs adaptive
+    // execution starts for one query stage carry no call site of their own
+    val executions = new java.util.concurrent.ConcurrentHashMap[String, String]()
     val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => executions.put(s.executionId.toString, s.description)
+        case _ =>
+      }
       override def onJobStart(e: SparkListenerJobStart): Unit = {
         val p = Option(e.properties)
         def prop(k: String) = p.flatMap(q => Option(q.getProperty(k))).getOrElse("")
-        val site = if (e.stageInfos.isEmpty) "" else e.stageInfos.maxBy(_.stageId).name
+        val execution = prop("spark.sql.execution.id")
+        val site = Option(executions.get(execution)).getOrElse(
+          if (e.stageInfos.isEmpty) "" else e.stageInfos.maxBy(_.stageId).name)
         seen.add(prop("spark.jobGroup.id") -> SparkJobProbe.Job(
-          prop("spark.job.description"), site, prop("spark.sql.execution.id").nonEmpty))
+          prop("spark.job.description"), site, execution.nonEmpty))
       }
     }
     sc.addSparkListener(listener)
     try {
-      sc.setJobGroup(group, group)
+      // no group description: a SQL execution then takes its call site as
+      // its description, which names the job
+      sc.setJobGroup(group, null)
       try {
         f
         sc.setJobDescription(marker)
@@ -65,8 +77,9 @@ trait SparkJobProbe extends Assertions {
 }
 
 object SparkJobProbe {
-  /** One started job: its description, its call site (as the UI shows it)
-    * and whether it ran inside a SQL execution.
+  /** One started job: its description, its call site (as the UI shows it;
+    * for a job inside a SQL execution, the execution's) and whether it ran
+    * inside a SQL execution.
     */
   final case class Job(description: String, callSite: String, inSqlExecution: Boolean)
 }

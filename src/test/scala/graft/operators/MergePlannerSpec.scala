@@ -2,6 +2,8 @@ package graft.operators
 
 import java.nio.file.Files
 
+import scala.collection.immutable.BitSet
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -29,6 +31,14 @@ class MergePlannerSpec extends AnyFunSuite {
     d.getAbsolutePath + "/t"
   }
 
+  /** A bucket set of `n` buckets, for policy literals. */
+  private def bits(n: Int) = BitSet(0 until n: _*)
+
+  /** The distinct buckets of `df`'s keys, computed directly. */
+  private def bucketsOf(df: DataFrame, keys: Seq[String], numBuckets: Int): BitSet =
+    BitSet(df.select(BucketedTableStore.bucketExpr(keys, numBuckets)).distinct()
+      .collect().map(_.getInt(0)).toIndexedSeq: _*)
+
   private def rows(ks: Seq[Long]) = {
     import spark.implicits._
     ks.map(k => (k, k * 10L)).toDF("k", "v")
@@ -37,26 +47,26 @@ class MergePlannerSpec extends AnyFunSuite {
   test("policy: small+concentrated=broadcast CoW, scattered=MoR delta, huge=shuffle CoW") {
     val th = Thresholds(broadcastMaxRows = 1000L, bucketFrac = 0.5)
     // concentrated trickle: 100 rows in 3 of 64 buckets
-    assert(choose(Probe(100, 3), 64, th) == BroadcastCow)
+    assert(choose(Probe(100, bits(3)), 64, th) == BroadcastCow)
     // exactly at the bucket boundary still CoW (<=)
-    assert(choose(Probe(100, 32), 64, th) == BroadcastCow)
+    assert(choose(Probe(100, bits(32)), 64, th) == BroadcastCow)
     // scattered trickle: 100 rows across 60 of 64 buckets — rewriting
     // 94% of the table for 100 rows is the MoR case
-    assert(choose(Probe(100, 60), 64, th) == MorDelta)
+    assert(choose(Probe(100, bits(60)), 64, th) == MorDelta)
     // backfill: size dominates every other signal
-    assert(choose(Probe(5000, 3), 64, th) == ShuffleCow)
-    assert(choose(Probe(5000, 60), 64, th) == ShuffleCow)
+    assert(choose(Probe(5000, bits(3)), 64, th) == ShuffleCow)
+    assert(choose(Probe(5000, bits(60)), 64, th) == ShuffleCow)
   }
 
-  test("probe: exact rows, near-exact touched buckets") {
+  test("probe: exact rows, exact touched buckets") {
     // 600 rows: 500 on one hot key (one bucket), 100 spread over the
     // key space
     val hot = rows(Seq.fill(500)(7L)) .unionAll(rows(1000L until 1100L))
-    val p = probe(hot, Seq("k"), numBuckets = 16)
-    assert(p.rows == 600)
-    // 100 spread keys over 16 buckets: every bucket touched; HLL at 5%
-    // error must land within ±3 of 16
-    assert(p.bucketsTouched >= 13 && p.bucketsTouched <= 19, p.toString)
+      .withColumn(CdcDedup.IngestionSeqCol, monotonically_increasing_id())
+    val (_, p) = CdcDedup.dedupAndProbe(hot, Seq("k"), numBuckets = 16)
+    assert(p.rows == 101, p.toString)
+    assert(p.buckets == bucketsOf(hot, Seq("k"), 16), p.toString)
+    assert(p.bucketsTouched == p.buckets.size)
   }
 
   test("adaptive dispatch routes each batch shape to the matching store") {
@@ -135,12 +145,11 @@ class MergePlannerSpec extends AnyFunSuite {
       "fused dedup diverged from dedup()")
     assert(d1.filter(col("payload") === "new").count() == 1,
       "the cascade's newest-load_timestamp winner changed")
-    // the probe equals a standalone probe of the DEDUPED output —
-    // dedup keeps one row per key, so rows == distinct keys and the
-    // bucket set is unchanged (HLL registers see the same value set)
-    val ref = probe(CdcDedup.dedup(dup, Seq("id")), Seq("id"), 8)
-    assert(p1.rows == ref.rows && p1.bucketsTouched == ref.bucketsTouched,
-      s"fused probe $p1 diverged from standalone $ref")
+    // the probe describes the DEDUPED output — dedup keeps one row per
+    // key, so rows == distinct keys and the bucket set is unchanged
+    val ref = CdcDedup.dedup(dup, Seq("id"))
+    assert(p1.rows == ref.count() && p1.buckets == bucketsOf(ref, Seq("id"), 8),
+      s"fused probe $p1 diverged from the deduped batch")
     // key-unique batch: the gate must take the skip path — no window
     // in the plan, same probe contract
     val uniq = Seq((1L, "a"), (2L, "b")).toDF("id", "payload")
@@ -149,7 +158,112 @@ class MergePlannerSpec extends AnyFunSuite {
       == uniq.collect().map(_.toSeq).toSet)
     assert(!d2.queryExecution.optimizedPlan.toString.contains("row_number"),
       "a key-unique batch must skip the window shuffle")
-    val refU = probe(uniq, Seq("id"), 8)
-    assert(p2.rows == 2 && p2.bucketsTouched == refU.bucketsTouched)
+    assert(p2.rows == 2 && p2.buckets == bucketsOf(uniq, Seq("id"), 8))
+  }
+
+  // ── exactness of the bucket set ────────────────────────────────────
+
+  test("probe: the bucket set is the deduplicated batch's (multi-column keys, nulls, ties)") {
+    import spark.implicits._
+    val spread = (0 until 300).map(i =>
+      (Option(i % 50L), Option(s"s${i % 7}"), s"v$i", if (i % 11 == 0) "D" else "U",
+        s"2026-01-0${1 + i % 3} 00:00:00"))
+    val odd = Seq(
+      (Option(1L), Option("a"), "x1", "U", "2026-02-01 00:00:00"),
+      (Option(1L), Option("a"), "x2", "D", "2026-02-01 00:00:00"), // tie: D wins
+      (Option.empty[Long], Option("b"), "n1", "I", "2026-02-01 00:00:00"), // null key part
+      (Option.empty[Long], Option("b"), "n2", "U", "2026-02-02 00:00:00"),
+      (Option(2L), Option.empty[String], "n3", "I", "2026-02-01 00:00:00"),
+      (Option.empty[Long], Option.empty[String], "n4", "I", "2026-02-01 00:00:00"))
+    val batch = (spread ++ odd).toDF("k1", "k2", "v", "Op", "lts")
+      .withColumn("load_timestamp", col("lts").cast("timestamp")).drop("lts")
+    val keys = Seq("k1", "k2")
+    Seq(8, 64, 1000).foreach { nb =>
+      val (d, p) = CdcDedup.dedupAndProbe(batch, keys, nb)
+      assert(p.buckets == bucketsOf(d, keys, nb), s"$nb buckets: $p")
+      assert(p.rows == d.count() && p.rows == batch.select(keys.map(col): _*).distinct().count(),
+        s"$nb buckets: $p")
+    }
+    val (d, _) = CdcDedup.dedupAndProbe(batch, keys, 8)
+    assert(d.filter(col("k1") === 1L && col("k2") === "a").head().getAs[String]("Op") == "D")
+    assert(d.filter(col("k1").isNull && col("k2") === "b").head().getAs[String]("v") == "n2")
+    assert(d.filter(col("k1").isNull && col("k2").isNull).count() == 1)
+  }
+
+  test("merge: a given bucket set rewrites exactly what the merge's own pass finds") {
+    import spark.implicits._
+    val initial = rows(0L until 500L)
+    val withSet = BucketedTableStore.create(spark, freshDir("bs-given"), Seq("k"), initial, 16)
+    val computed = BucketedTableStore.create(spark, freshDir("bs-own"), Seq("k"), initial, 16)
+    val batch = Seq((3L, 1L, "U"), (4L, 0L, "D"), (77L, 7L, "U"), (9000L, 9L, "I"), (9001L, 0L, "D"))
+      .toDF("k", "v", "Op")
+    val (d, p) = CdcDedup.dedupAndProbe(batch, Seq("k"), 16)
+    val touchedGiven = withSet.merge(d, buckets = Some(p.buckets))
+    val touchedOwn = computed.merge(d)
+    assert(touchedGiven == touchedOwn && touchedGiven == p.buckets.size)
+    def state(st: BucketedTableStore) = st.read().collect().map(r => r.getLong(0) -> r.getLong(1)).toSet
+    assert(state(withSet) == state(computed))
+    assert(state(withSet).contains(9001L -> 0L), "the unmatched delete is inserted")
+    assert(!state(withSet).exists(_._1 == 4L))
+    assert(withSet.merge(d.limit(0), buckets = Some(BitSet.empty)) == 0)
+  }
+
+  test("drain: the logged bucket sets give the drain its buckets; a side without them still drains") {
+    import spark.implicits._
+    val th = Thresholds(broadcastMaxRows = 500L, bucketFrac = 0.1)
+    def fixture(tag: String) = {
+      val cow = BucketedTableStore.create(spark, freshDir(s"dr-$tag"), Seq("k"), rows(0L until 400L), 16)
+      val sideRoot = freshDir(s"dr-side-$tag")
+      (cow, new MorStore(spark, sideRoot, Seq("k")), sideRoot)
+    }
+    val scatter = (100L until 140L).map(k => (k, k + 1L, if (k % 10 == 0) "D" else "U"))
+      .toDF("k", "v", "Op")
+    def state(cow: BucketedTableStore) = cow.read().collect().map(r => r.getLong(0) -> r.getLong(1)).toSet
+
+    // logged: mergeAdaptive's MoR route records the probe's set
+    val (cowA, sideA, _) = fixture("logged")
+    val (dA, pA) = CdcDedup.dedupAndProbe(scatter, Seq("k"), 16)
+    assert(mergeAdaptive(cowA, sideA, dA, pA, th)._1 == MorDelta)
+    assert(sideA.loggedBucketsSinceBase.contains(pA.buckets))
+    assert(drain(cowA, sideA, th) == pA.buckets.size)
+    assert(sideA.knownEmpty && sideA.loggedBucketsSinceBase.contains(BitSet.empty))
+
+    // unlogged: an entry written before sets were logged has no field
+    val (cowB, sideB, rootB) = fixture("old")
+    sideB.commitDelta(normalizeDelta(cowB, sideB, dA, "Op"), 10L)
+    new java.io.File(s"$rootB/_log").listFiles().filter(_.getName.endsWith(".json")).foreach { f =>
+      val m = graft.sources.CommitLog.json.readValue(f, classOf[java.util.Map[String, Object]])
+      assert(!m.containsKey("buckets") || m.get("buckets") == null)
+      m.remove("buckets")
+      graft.sources.CommitLog.json.writeValue(f, m)
+      new java.io.File(f.getParent, s".${f.getName}.crc").delete()
+    }
+    assert(sideB.loggedBucketsSinceBase.isEmpty)
+    assert(drain(cowB, sideB, th) == pA.buckets.size)
+    assert(sideB.knownEmpty)
+    assert(state(cowB) == state(cowA))
+    assert(!state(cowA).exists(_._1 == 110L) && state(cowA).contains(101L -> 102L))
+  }
+
+  test("normalizeDelta: the batch's bucket set gives the same delta as a full home probe") {
+    import spark.implicits._
+    val cow = BucketedTableStore.create(spark, freshDir("nd-cow"), Seq("k"), rows(0L until 200L), 16)
+    val side = new MorStore(spark, freshDir("nd-side"), Seq("k"))
+    // an undrained side: key 5 deleted, key 500 upserted
+    side.commitDelta(Seq((5L, 0L, "D"), (500L, 5000L, "U")).toDF("k", "v", side.OpCol), 1L)
+    val batch = Seq(
+      (7L, 70L, "D"),     // present in the home: deletes
+      (5L, 50L, "D"),     // deleted by the side: unmatched, inserted
+      (999L, 9L, "D"),    // never present: unmatched, inserted
+      (500L, 1L, "D"),    // present through the side: deletes
+      (8L, 81L, "U"))
+      .toDF("k", "v", "Op")
+    val (d, p) = CdcDedup.dedupAndProbe(batch, Seq("k"), 16)
+    def ops(buckets: Option[BitSet]) = normalizeDelta(cow, side, d, "Op", buckets).collect()
+      .map(r => r.getAs[Long]("k") -> r.getAs[String](side.OpCol)).toMap
+    val full = ops(None)
+    assert(full == Map(7L -> "D", 5L -> "U", 999L -> "U", 500L -> "D", 8L -> "U"), full)
+    assert(ops(Some(p.buckets)) == full)
+    assert(cow.read(p.buckets).count() < 200, "the probe reads only the batch's buckets")
   }
 }

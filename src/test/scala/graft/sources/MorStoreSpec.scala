@@ -2,15 +2,19 @@ package graft.sources
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
+import scala.collection.immutable.BitSet
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Merge-on-read semantics: delta application order, delete /
   * resurrect, compaction equivalence, and O(batch) commit (the table
   * is never rewritten by a delta).
   */
-class MorStoreSpec extends AnyFunSuite {
+class MorStoreSpec extends AnyFunSuite with graft.SparkJobProbe {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -475,5 +479,72 @@ class MorStoreSpec extends AnyFunSuite {
       "net after a reset base must be empty")
     st.commitDelta(delta((6L, 60L, "U")), 4L)
     assert(net(st) == Map(6L -> (60L, "U")))
+  }
+
+  test("bucket sets: an entry's bitset round-trips through the log and unions from the base") {
+    val rnd = new scala.util.Random(7)
+    val half = BitSet((0 until 400000).filter(_ => rnd.nextBoolean()): _*)
+    Seq(BitSet.empty, BitSet(0), BitSet(63, 64), BitSet(5, 399999), half).foreach { b =>
+      assert(MorStore.decodeBuckets(MorStore.encodeBuckets(b)) == b)
+    }
+    // one bit per bucket: 50,000 bytes at 400k buckets, in base64
+    assert(MorStore.encodeBuckets(half).length <= (400000 / 8 + 2) / 3 * 4)
+
+    val st = new MorStore(spark, freshRoot(), Seq("k"))
+    st.commitDelta(delta((1L, 10L, "U")), 1L, buckets = Some(BitSet(3, 7)))
+    assert(st.generations().map(_._2) == Seq("base", "delta"))
+    assert(st.loggedBucketsSinceBase.contains(BitSet(3, 7)))
+    st.commitDelta(delta((2L, 20L, "D")), 2L, buckets = Some(half))
+    assert(st.loggedBucketsSinceBase.contains(half | BitSet(3, 7)))
+    assert(st.log.read(2L).buckets.map(MorStore.decodeBuckets).contains(half))
+    st.commitDelta(delta((3L, 30L, "U")), 3L)
+    assert(st.loggedBucketsSinceBase.isEmpty, "a delta logged without a set has unknown buckets")
+    st.commitEmptyBase(st.read().schema, 4L)
+    assert(st.knownEmpty && st.loggedBucketsSinceBase.contains(BitSet.empty))
+    st.commitDelta(delta((4L, 40L, "U")), 5L, buckets = Some(BitSet(1)))
+    assert(st.loggedBucketsSinceBase.contains(BitSet(1)), "the sets before the newest base are drained")
+    st.commitBase(rows(9L -> 90L), 6L)
+    assert(st.loggedBucketsSinceBase.isEmpty, "a base with rows has unknown buckets")
+  }
+
+  test("empty base: the driver writes the footer an empty Spark write leaves, with no job") {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val schema = StructType(Seq(
+      StructField("k", LongType, nullable = false), StructField("s", StringType),
+      StructField("d", DecimalType(10, 2)), StructField("big", DecimalType(30, 4)),
+      StructField("ts", TimestampType), StructField("day", DateType),
+      StructField("xs", ArrayType(IntegerType)),
+      StructField("m", MapType(StringType, DoubleType)),
+      StructField("st", StructType(Seq(StructField("a", IntegerType), StructField("b", BinaryType))))))
+    val conf = spark.sparkContext.hadoopConfiguration
+    def footer(dir: String) = {
+      val f = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".parquet"))
+      assert(f.length == 1, dir)
+      ParquetFileReader.readFooter(HadoopInputFile.fromPath(new Path(f.head.getPath), conf),
+        org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER)
+    }
+    val sparkDir = freshRoot()
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema).write.parquet(sparkDir)
+    val stRoot = freshRoot()
+    val st = new MorStore(spark, stRoot, Seq("k"))
+    val jobs = jobDescriptions { assert(st.commitEmptyBase(schema, 1L) == 0L) }
+    assert(jobs.isEmpty, s"the empty base started Spark jobs: $jobs")
+    val ours = footer(s"$stRoot/g=0")
+    val theirs = footer(sparkDir)
+    assert(ours.getFileMetaData.getSchema == theirs.getFileMetaData.getSchema)
+    assert(ours.getFileMetaData.getKeyValueMetaData.asScala ==
+      theirs.getFileMetaData.getKeyValueMetaData.asScala)
+    assert(ours.getBlocks.isEmpty && theirs.getBlocks.isEmpty)
+    assert(ParquetFooters.schema(spark, Seq(s"$stRoot/g=0")) ==
+      ParquetFooters.schema(spark, Seq(sparkDir)))
+    assert(st.knownEmpty && st.read().isEmpty)
+    assert(st.read().schema == spark.read.parquet(sparkDir).schema)
+    // a first delta validates against the empty base's schema
+    st.commitDelta(spark.createDataFrame(spark.sparkContext.parallelize(Seq(
+      Row(1L, "a", null, null, null, null, null, null, null, "U"))),
+      schema.add(StructField(st.OpCol, StringType))), 2L)
+    assert(st.read().count() == 1)
   }
 }

@@ -42,6 +42,27 @@ class TableCatalogSpec extends AnyFunSuite {
     assert(cat.generationAsOf(1500L) == 0)
   }
 
+  test("stage: a failed member write surfaces only once every sibling write has settled") {
+    import org.apache.spark.sql.functions.{col, udf}
+    TableCatalogSpec.siblingDone.set(false)
+    val slow = udf { (v: Long) => Thread.sleep(1500); TableCatalogSpec.siblingDone.set(true); v }
+    val boom = udf { (v: Long) =>
+      if (v >= 0) throw new IllegalStateException("injected member failure"); v }
+    val root = freshRoot()
+    val cat = new TableCatalog(spark, root)
+    val e = intercept[Exception] {
+      cat.stage(Map(
+        "slow" -> nums(0, 1).select(slow(col("v")).as("v")),
+        "bad" -> nums(0, 1).select(boom(col("v")).as("v"))))
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("injected member failure")), e)
+    assert(TableCatalogSpec.siblingDone.get(), "the error surfaced while a sibling write was running")
+    val slowStages = new java.io.File(s"$root/tables/slow").listFiles()
+    assert(slowStages.exists(d => new java.io.File(d, "_SUCCESS").exists()),
+      "the sibling's write had not committed when the error surfaced")
+  }
+
   test("a staged but unpublished commit is invisible to every read path") {
     val cat = new TableCatalog(spark, freshRoot())
     cat.commitAll(Map("a" -> nums(0, 10), "b" -> nums(0, 100)), 1000L)
@@ -462,4 +483,9 @@ class TableCatalogSpec extends AnyFunSuite {
     assert(cat.read("snap").count() == 4)
     assert(cat.readAt(gr, "snap").count() == 10)
   }
+}
+
+object TableCatalogSpec {
+  /** Set by the slow sibling write of the staging-failure spec. */
+  val siblingDone = new java.util.concurrent.atomic.AtomicBoolean(false)
 }
