@@ -192,17 +192,7 @@ object Bench {
     graft.tools.Scratch.sweepStale()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val loadBefore = loadAvg()
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // FAIR job scheduling: the paired light-tail runner (below) puts
-      // two sub-second queries in flight at once; FIFO would starve the
-      // second of cores whenever the first holds a wide stage
-      .config("spark.scheduler.mode", "FAIR")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session()
     val benchT0 = System.nanoTime()
     def elapsedMs: Long = (System.nanoTime() - benchT0) / 1000000L
     // Outlier retry: a contended box inflates individual runs (never

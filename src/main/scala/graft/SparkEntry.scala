@@ -4,8 +4,29 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.queries.{AnalyticsQueries, CoreQueries, CurationQueries, DataPipelineQueries, EngineQueries, PipelineQueries, PlatformQueries, SemanticQueries, StreamingQueries, ValidationQueries}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
+/** Query registry, oracle SQL and the mains' session — see SURVEY.md §7. */
 object SparkEntry {
+
+  /** The local session every main starts: `local[n]` with n shuffle
+    * partitions, n = `SPARK_GRAFT_CPUS` or else the JVM's processor
+    * count; UTC session time, no UI, log level WARN. FAIR scheduling:
+    * Bench's paired light-tail runner keeps two sub-second queries in
+    * flight, and FIFO would starve the second of cores whenever the
+    * first holds a wide stage (with one job in flight FAIR is FIFO).
+    */
+  def session(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config("spark.scheduler.mode", "FAIR")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     * Runs the reference's core transaction: synthetic CDC batch staged,

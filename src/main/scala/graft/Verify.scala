@@ -7,18 +7,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     graft.tools.Scratch.sweepStale()
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    def freshSession(): SparkSession = {
-      val s = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      s
-    }
-    var spark = freshSession()
+    var spark = SparkEntry.session()
     new java.io.File(outDir).mkdirs()
     // dev-loop filter: SPARK_GRAFT_ONLY=q01_agg,d40_... runs a subset
     // (unset in the driver environment → full suite)
@@ -35,7 +24,7 @@ object Verify {
         System.err.println(s"[verify] SparkContext stopped — recreating session before $name")
         SparkSession.clearActiveSession()
         SparkSession.clearDefaultSession()
-        spark = freshSession()
+        spark = SparkEntry.session()
       }
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")

@@ -21,8 +21,10 @@ object CdcPath {
   // Reference pattern anchored at the bucket-relative key
   // (handler.py:766); `root` generalizes the reference's hard-coded
   // `fair` prefix and, for local runs, any absolute path prefix.
-  private def pattern(root: String) =
-    (raw"^(?:.*/)?" + java.util.regex.Pattern.quote(root) + raw"/([^/]+)/(\d{4})/(\d{2})/(\d{2})/([^/]+\.parquet)$$").r
+  // Compiled once per root: a stream routes every row by its file path.
+  private val patterns = new java.util.concurrent.ConcurrentHashMap[String, scala.util.matching.Regex]()
+  private def pattern(root: String) = patterns.computeIfAbsent(root, r =>
+    (raw"^(?:.*/)?" + java.util.regex.Pattern.quote(r) + raw"/([^/]+)/(\d{4})/(\d{2})/(\d{2})/([^/]+\.parquet)$$").r)
 
   /** Route one file key. Left = skip reason, Right = routed file. */
   def parse(key: String, root: String = "fair"): Either[SkipReason, CdcFile] =

@@ -418,29 +418,17 @@ class MorStore(spark: SparkSession, root: String, keyCols: Seq[String]) {
       // first g= anywhere in the path — a store rooted under a user
       // path that itself contains "/g=N/" must not mis-recover
       val deltas = ParquetFooters.read(spark, deltaGens.map(g => genDir(g).toString), merge = true)
-        .withColumn("__gen", regexp_extract(
+        .withColumn(ChangeGenCol, regexp_extract(
           col("_metadata.file_path"), "/g=(\\d+)/[^/]+$", 1).cast("long"))
-      // newest delta row per key wins; generation ties (several
-      // events for one key INSIDE one batch) break on __seq, which
-      // commitDelta guarantees exists whenever a tie is possible —
-      // the resolve is deterministic, so resolve ≡ compact holds.
-      val seqOrder =
-        if (deltas.columns.contains(SeqCol)) coalesce(col(SeqCol), lit(0L)).desc
-        else lit(0).desc
-      val latest = deltas.withColumn("__rn", row_number().over(
-          Window.partitionBy(keyCols.map(col): _*)
-            .orderBy(col("__gen").desc, seqOrder)))
-        .filter(col("__rn") === 1).drop("__rn")
-      val untouched = base.join(latest.select(keyCols.map(col): _*),
-        keyCols, "left_anti")
-      // allowMissingColumns: an evolved delta widened the schema —
+      // the deltas are a changefeed over the base: newest delta row per
+      // key wins, generation ties (several events for one key INSIDE one
+      // batch) break on __seq, which commitDelta guarantees exists
+      // whenever a tie is possible — the resolve is deterministic, so
+      // resolve ≡ compact holds. An evolved delta widened the schema:
       // pre-evolution base rows surface NULL for the new columns
       // (commit-time validation still rejects stray columns unless the
       // commit explicitly evolved, so this leniency can't mask typos)
-      untouched.unionByName(
-        latest.filter(col(OpCol) === "U")
-          .drop(OpCol, "__gen", SeqCol),
-        allowMissingColumns = true)
+      MorStore.applyChanges(Some(base), deltas, keyCols)
     }
   }
 
@@ -604,17 +592,6 @@ object MorStore {
 
   private val lastTs = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** Consumer-side application of a [[MorStore.changesBetween]] feed:
-    * fold `changes` into `state` (the consumer's copy of the table at
-    * the feed's `fromExclusive` generation; None bootstraps from a
-    * feed that starts with the initial snapshot). The resolve is the
-    * store's own: newest change per key wins, ordered by
-    * (`__change_gen`, `__seq`), D drops the key, U upserts the row —
-    * so consumer state after apply ≡ the store's resolve at the
-    * feed's `toInclusive` generation (spec-pinned). One window over
-    * the CHANGES plus a changes-keyed anti join against state:
-    * O(|state| + |changes|), the whole point of consuming a feed.
-    */
   /** Newest change per key of a feed, ordered by (generation, seq). */
   private def latestOf(changes: DataFrame, keyCols: Seq[String]): DataFrame = {
     require(changes.columns.contains("__op"),
@@ -631,6 +608,17 @@ object MorStore {
       .filter(col("__rn") === 1).drop("__rn")
   }
 
+  /** Consumer-side application of a [[MorStore.changesBetween]] feed:
+    * fold `changes` into `state` (the consumer's copy of the table at
+    * the feed's `fromExclusive` generation; None bootstraps from a
+    * feed that starts with the initial snapshot). The resolve is the
+    * store's own: newest change per key wins, ordered by
+    * (`__change_gen`, `__seq`), D drops the key, U upserts the row —
+    * so consumer state after apply ≡ the store's resolve at the
+    * feed's `toInclusive` generation (spec-pinned). One window over
+    * the CHANGES plus a changes-keyed anti join against state:
+    * O(|state| + |changes|), the whole point of consuming a feed.
+    */
   def applyChanges(state: Option[DataFrame], changes: DataFrame,
       keyCols: Seq[String]): DataFrame = {
     val latest = latestOf(changes, keyCols)

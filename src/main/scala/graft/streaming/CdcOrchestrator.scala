@@ -50,8 +50,4 @@ object CdcOrchestrator {
       }
     }
   }
-
-  /** Block until every stream finishes (AvailableNow) or `timeoutMs`. */
-  def awaitAll(running: Seq[Running], timeoutMs: Long = 300000): Unit =
-    running.foreach(_.query.awaitTermination(timeoutMs))
 }

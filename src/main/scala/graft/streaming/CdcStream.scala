@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -16,10 +17,11 @@ import graft.routing.CdcPath
   *
   * One stream per target table (schemas are per-table): new parquet files
   * under `{root}/{table}/YYYY/MM/DD/` are discovered by the file source,
-  * LOAD* full-load files are filtered out, and each micro-batch takes the
-  * batch pipeline's one apply path ([[CdcPipeline.applyStaged]]): schema
-  * evolution, cascade dedup, adaptive MERGE (a scattered batch lands in
-  * the table's MoR side-store; a CoW-routed one drains the side first).
+  * files [[CdcPath.parse]] skips (LOAD*, off-pattern) are filtered out,
+  * and each micro-batch takes the batch pipeline's one apply path
+  * ([[CdcPipeline.applyStaged]]): schema evolution, cascade dedup,
+  * adaptive MERGE (a scattered batch lands in the table's MoR
+  * side-store; a CoW-routed one drains the side first).
   * The streaming checkpoint provides exactly-once file processing
   * (replacing the reference's app-level ledger check, handler.py:664-676);
   * the batch's files are still marked in the ledger for
@@ -58,17 +60,21 @@ object CdcStream {
     val store = pipeline.storeFor(cfg.table, cfg.keys)
     require(store.exists, s"target ${store.path} must be initialized (initial load) before streaming")
 
+    // a file is applied iff CdcPath routes it under the stream's root,
+    // as processFile routes a key under its pathRoot: LOAD* full-load
+    // files and off-pattern keys (a retry/ subfolder) are skipped
+    val root = new Path(cfg.root).toUri.getPath // scheme and trailing slash dropped
+    val routed = udf((file: String) => CdcPath.parse(CdcPath.ledgerKey(file), root).isRight)
     val src = spark.readStream
       .schema(schema)
       .option("maxFilesPerTrigger", MaxFilesPerTrigger)
       .option("recursiveFileLookup", "true")
       .option("pathGlobFilter", "*.parquet")
       .parquet(s"${cfg.root}/${cfg.table}")
-      // ingestion_seq = row order within each file (binlog order); LOAD*
-      // full-load files skipped (reference: handler.py:781-783)
+      // ingestion_seq = row order within each file (binlog order)
       .withColumn(CdcDedup.IngestionSeqCol, col("_metadata.row_index"))
       .withColumn("__source_file", col("_metadata.file_path"))
-      .filter(!element_at(split(col("__source_file"), "/"), -1).startsWith("LOAD"))
+      .filter(routed(col("__source_file")))
 
     src.writeStream
       .queryName(s"cdc-${cfg.table}")

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.operators.BpeInduction
 import graft.queries.PlatformQueries
 
@@ -11,12 +9,7 @@ import graft.queries.PlatformQueries
   */
 object BpeVocabDump {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.SparkEntry.session()
     import spark.implicits._
     val (merges, vocab) = BpeInduction.train(
       PlatformQueries.BpeTrainCorpus.toDF("text"), "text",

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev probe: does a banded SELF-JOIN over a lazy signature subplan
@@ -10,11 +9,7 @@ import org.apache.spark.sql.functions._
   */
 object CcPlanCheck {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.SparkEntry.session()
 
     val labels = spark.range(1, 1001)
       .select(col("id"), greatest(col("id") - 1, lit(1L)).as("component"))

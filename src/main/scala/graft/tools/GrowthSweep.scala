@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Scale-growth measurement: time each named query at TWO data
   * directories (canonically sf0.1 and the [[MakeSf1]] sf1-equivalent)
   * in one JVM and report the wall-time growth ratio beside the data
@@ -17,13 +15,7 @@ object GrowthSweep {
   def main(args: Array[String]): Unit = {
     require(args.length > 3, "usage: GrowthSweep <dirA> <dirB> <runs> <query...>")
     val (dirA, dirB, runs) = (args(0), args(1), args(2).toInt)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.SparkEntry.session()
     def medianAt(name: String, dir: String): Double = {
       val fn = graft.SparkEntry.queries(name)
       val times = (0 to runs).map { _ =>

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Generate an sf1-equivalent test dataset (10× sf0.1) for the scale
@@ -51,13 +51,7 @@ object MakeSf1 {
   def main(args: Array[String]): Unit = {
     val dst = args.headOption.getOrElse("/tmp/sf1")
     val copies = if (args.length > 1) args(1).toInt else 10
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SparkEntry.session()
 
     def read(name: String) = spark.read.parquet(s"$Src/$name.parquet")
     def write(name: String, df: DataFrame): Unit = {

@@ -2,21 +2,13 @@ package graft.tools
 
 import java.io.PrintWriter
 
-import org.apache.spark.sql.SparkSession
-
 /** Generates PLANS.md: the physical plans of headline queries with the
   * scale-relevant features called out. Dev tool, rerun after plan-shape
   * changes: `sbt "runMain graft.tools.PlanDump"`.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.SparkEntry.session()
     val dir = "/root/testdata/sf0.001"
     val out = new StringBuilder
 
@@ -265,7 +257,7 @@ object PlanDump {
       "Model deployment as a plan, like t16 but three-relation: the bigram/context/unigram count relations (vocabulary-bounded) each ride a BroadcastExchange into ONE exploded corpus scan; the 1-row total rides a BroadcastNestedLoopJoin; the per-document aggregate partials map-side (a document's tokens never leave their partition before combining), so the only full shuffle carries one row per document. Training (not shown) is one corpus pass: a single (w1,w2) hash aggregate that the other model relations re-aggregate model-sized.",
       graft.queries.DataPipelineQueries.t35_lm_quality(spark, dir))
 
-    val pw = new PrintWriter("/root/repo/PLANS.md", "UTF-8")
+    val pw = new PrintWriter("PLANS.md", "UTF-8") // the checkout root: forked runs start there
     pw.write(out.toString)
     pw.close()
     println("wrote PLANS.md")

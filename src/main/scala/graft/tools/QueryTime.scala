@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Targeted per-query timing: run named SparkEntry queries N times each
   * in one JVM (first run discarded as warmup) and print the median —
   * the dev-loop A/B harness for single-operator performance work, so a
@@ -13,13 +11,7 @@ object QueryTime {
     require(args.length > 2, "usage: QueryTime <sfDir> <runs> <query...>")
     val sfDir = args(0)
     val runs = args(1).toInt
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.SparkEntry.session()
     args.drop(2).foreach { name =>
       val fn = graft.SparkEntry.queries(name)
       val times = (0 to runs).map { _ =>

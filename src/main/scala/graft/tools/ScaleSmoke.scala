@@ -23,13 +23,7 @@ import org.apache.spark.sql.functions._
   */
 object ScaleSmoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.SparkEntry.session()
     val mode = args.headOption.getOrElse("all")
     if (mode == "lsh" || mode == "all") lshSmoke(spark)
     if (mode == "cdc" || mode == "all") cdcSmoke(spark, "/root/testdata/sf0.1")

@@ -50,7 +50,7 @@ class OrchestratorSpec extends AnyFunSuite {
       schemas = Map("t_a" -> schema, "t_b" -> schema, "t_skip" -> schema),
       numBuckets = 4)
     assert(running.map(_.table).sorted == Seq("t_a", "t_b")) // t_skip absent
-    CdcOrchestrator.awaitAll(running)
+    running.foreach(r => assert(r.query.awaitTermination(300000), s"${r.table} stream timed out"))
 
     val aState = pipe.storeFor("t_a", Seq("id")).read()
       .collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)

@@ -520,6 +520,37 @@ class PipelineSpec extends AnyFunSuite with SparkJobProbe {
     assert(snapshot(store.read()) == Seq((1L, "alice-v2", 1.5)))
   }
 
+  test("streaming: a stream routes files as processFile does (LOAD and off-pattern skipped)") {
+    import spark.implicits._
+    val root = tmpDir()
+    val keys = TableKeys.parse("""{"users": "id"}""")
+    val pipe = new CdcPipeline(spark, s"$root/store", keys, numBuckets = 4, pathRoot = "in")
+    pipe.initialLoad("users", Seq((1L, "alice", 1.0)).toDF("id", "v", "amount"))
+    val day = s"$root/in/users/2026/08/12"
+    writeCdcFile(s"$day/b1.parquet", Seq((2L, "bob", 2.0, "I", "2026-08-02 00:00:00", 0L)))
+    writeCdcFile(s"$day/LOAD1.parquet", Seq((8L, "load", 8.0, "I", "2026-08-02 00:00:00", 0L)))
+    // an off-pattern key: one folder below the day
+    writeCdcFile(s"$day/retry/r1.parquet", Seq(
+      (1L, "retry", 1.5, "U", "2026-08-02 00:00:00", 0L),
+      (9L, "retry", 9.0, "I", "2026-08-02 00:00:00", 0L)))
+
+    val schema = spark.read.parquet(s"$day/b1.parquet").schema
+    val cfg = CdcStream.Config(
+      root = s"$root/in", table = "users", keys = Seq("id"),
+      storeRoot = s"$root/store", checkpointRoot = s"$root/ckpt", numBuckets = 4)
+    assert(CdcStream.start(spark, cfg, schema).awaitTermination(60000))
+    val store = pipe.storeFor("users", Seq("id"))
+    assert(snapshot(store.read()) == Seq((1L, "alice", 1.0), (2L, "bob", 2.0)))
+    assert(pipe.ledger.isProcessed(s"$day/b1.parquet"))
+    assert(!pipe.ledger.isProcessed(s"$day/LOAD1.parquet"))
+    assert(!pipe.ledger.isProcessed(s"$day/retry/r1.parquet"))
+
+    // the file path skips the same two files, for the same reasons
+    assert(pipe.processFile(s"$day/LOAD1.parquet") == CdcPipeline.Skipped(CdcPath.LoadFile.message))
+    assert(pipe.processFile(s"$day/retry/r1.parquet") == CdcPipeline.Skipped(CdcPath.NotCdcFile.message))
+    assert(snapshot(store.read()) == Seq((1L, "alice", 1.0), (2L, "bob", 2.0)))
+  }
+
   test("streaming: a stream batch applies after a MoR-routed file and survives its drain") {
     import spark.implicits._
     val root = tmpDir()
