@@ -37,8 +37,8 @@ object CdcDedup {
     * parallel scan is nondeterministic in Spark, so we use the file
     * source's `_metadata.row_index` (exact row position within the file,
     * stable under any parallelism/split). Multi-file batches stay
-    * per-file-ordered; pass the file path through `__source_file` for
-    * routing and cross-file ordering.
+    * per-file-ordered; the file path rides along as `__source_file` for
+    * cross-file ordering.
     *
     * The schema is the first file's footer, read on the driver
     * ([[graft.sources.ParquetFooters]]), so staging starts no Spark job.

@@ -9,8 +9,8 @@ import graft.operators.{CdcDedup, EvolutionLog, FileLedger, MergePlanner, Schema
 import graft.routing.CdcPath
 import graft.sources.{BucketedTableStore, MorStore}
 
-/** Batch CDC pipeline: one file (or micro-batch of files) applied to one
-  * target table — the reference's `lambda_handler` re-expressed
+/** Batch CDC pipeline: one file applied to one target table — the
+  * reference's `lambda_handler` re-expressed
   * (reference: lambda/handler.py:736-1000; SURVEY §3.1):
   *
   *   route → key lookup → ledger check → stage (+ingestion_seq) →
@@ -40,8 +40,9 @@ import graft.sources.{BucketedTableStore, MorStore}
   * interleave with undrained scatter. Readers use [[readTable]], which
   * resolves home ∪ side.
   *
-  * [[graft.streaming.CdcStream]] micro-batches take the same apply
-  * ([[applyStaged]]) as files: only staging and the ledger mark differ.
+  * Every caller applies files through [[processFile]]: [[processFiles]]
+  * and [[backfill]] in their given order, and each
+  * [[graft.streaming.CdcStream]] micro-batch file by file in path order.
   */
 final class CdcPipeline(
     spark: SparkSession,
@@ -82,14 +83,17 @@ final class CdcPipeline(
     * local absolute path or full URI whose suffix matches the reference
     * layout `{root}/{table}/YYYY/MM/DD/name.parquet`). Ledger entries use
     * the canonical scheme-stripped key ([[CdcPath.ledgerKey]]) so the
-    * streaming side (URI-form `_metadata.file_path`) and backfill side
-    * (listing paths) agree on processed state.
+    * streaming side (URI-form listed paths) and backfill side (listing
+    * paths) agree on processed state.
     */
   def processFile(fileKey: String): Outcome = processFile(fileKey, checkLedger = true)
 
   private[pipeline] def processFile(fileKey: String, checkLedger: Boolean): Outcome = {
+    // routing and the ledger see the same scheme-free key, so a listed
+    // `file:/...` path routes under an absolute pathRoot
+    val key = CdcPath.ledgerKey(fileKey)
     // STEP 0: route (handler.py:765-783)
-    CdcPath.parse(fileKey, pathRoot) match {
+    CdcPath.parse(key, pathRoot) match {
       case Left(skip) => Skipped(skip.message)
       case Right(cdcFile) =>
         // key lookup (handler.py:786-789); null ⇒ skip
@@ -97,79 +101,68 @@ final class CdcPipeline(
           case None => Skipped(CdcPath.NoKeys.message)
           case Some(keys) =>
             // ledger check (handler.py:800-804)
-            if (checkLedger && ledger.isProcessed(CdcPath.ledgerKey(fileKey)))
+            if (checkLedger && ledger.isProcessed(key))
               Skipped(CdcPath.AlreadyProcessed.message)
-            else applyFile(fileKey, cdcFile.table, keys)
+            else applyFile(fileKey, key, cdcFile.table, keys)
         }
     }
   }
 
-  /** Apply one routed file. Any non-fatal failure becomes a `failed`
-    * ledger row; a fatal JVM error (OOM, interrupt) propagates unrecorded.
-    * Nothing is cached: the file is staged as a plain read, which the
-    * dedup gate and the merge's joins each scan (a CDC file is small, and
-    * caching it would cost a job of its own), so no path has a cache to
-    * release.
+  /** Apply one routed file to `table`: stage, schema-evolve, cascade
+    * dedup, adaptive MERGE, ledger mark. Any non-fatal failure becomes a
+    * `failed` ledger row; a fatal JVM error (OOM, interrupt) propagates
+    * unrecorded. Nothing is cached: the file is staged as a plain read,
+    * which the dedup gate and the merge's joins each scan (a CDC file is
+    * small, and caching it would cost a job of its own), so no path has
+    * a cache to release.
     */
-  private def applyFile(fileKey: String, table: String, keys: Seq[String]): Outcome =
+  private def applyFile(fileKey: String, key: String, table: String, keys: Seq[String]): Outcome =
     try {
       // STEP 1: stage with ingestion_seq (handler.py:486-546)
       val staging = CdcDedup.readCdcFiles(spark, Seq(fileKey))
-      val (touched, evolution) = applyStaged(staging, table, keys, CdcPath.ledgerKey(fileKey))
+      val store = storeFor(table, keys)
+      if (!store.exists)
+        throw new IllegalStateException(s"target table '$table' not initialized at ${store.path}")
+
+      // STEP 2: schema evolution (handler.py:250-338). Safe new columns
+      // are ADDED to the target schema BEFORE the merge — the reference
+      // ALTERs production then refreshes its column list so staged values
+      // for the new columns flow through the merge intersection
+      // (handler.py:846-850). Un-evolved parquet files read the column as
+      // null; merged buckets materialize it.
+      val evolution = SchemaEvolution.diff(staging.schema, store.schema)
+      store.evolveSchema(evolution)
+      // durable notification channel (SNS parity, handler.py:313-336):
+      // findings — especially requiresManual — land in _evolution_log;
+      // a logging failure must never fail the merge it describes
+      // (the reference's publish is try/except-warning too)
+      if (evolution.hasChanges)
+        try evolutionLog.log(table, key, evolution)
+        catch { case NonFatal(e) =>
+          System.err.println(s"[graft] evolution-log append failed for $table: ${e.getMessage}")
+        }
+
+      // STEP 3: dedup via the cascade (handler.py:407-479). The gate
+      // aggregation, grouped by bucket, ALSO carries the merge planner's
+      // probe: exact rows and the exact touched-bucket set, so adaptive
+      // routing and the merge's bucket pruning cost exactly what the
+      // reference's dedup gate already paid (handler.py:423-439). A
+      // deduplicated batch comes back checkpointed, so its window runs once.
+      val (dedup, probe) = CdcDedup.dedupAndProbe(staging, keys, numBuckets)
+
+      // STEP 4+5: column prep + MERGE (handler.py:876-946), routed per
+      // file: concentrated files take the bucket-pruned CoW rewrite,
+      // scattered ones commit to the MoR side-store as an O(file) delta
+      val (_, touched) = MergePlanner.mergeAdaptive(store, morSideFor(table, keys), dedup, probe)
 
       // STEP 7: ledger (handler.py:962-967)
-      ledger.markCompleted(CdcPath.ledgerKey(fileKey))
+      ledger.markCompleted(key)
       Applied(table, touched, evolution)
     } catch {
       case NonFatal(e) =>
-        ledger.markFailed(CdcPath.ledgerKey(fileKey), e.getMessage)
+        ledger.markFailed(key, e.getMessage)
         Failed(table, e)
     }
-
-  /** Apply an already-staged batch — one file, or a stream micro-batch of
-    * files — to `table`: schema-evolve, cascade dedup, adaptive MERGE.
-    * `source` names the batch in `_evolution_log`. Returns the touched
-    * bucket count and the evolution result; the caller owns any persist
-    * of the staging and the ledger mark.
-    */
-  private[graft] def applyStaged(staging: DataFrame, table: String, keys: Seq[String],
-      source: String): (Int, SchemaEvolution.EvolutionResult) = {
-    val store = storeFor(table, keys)
-    if (!store.exists)
-      throw new IllegalStateException(s"target table '$table' not initialized at ${store.path}")
-
-    // STEP 2: schema evolution (handler.py:250-338). Safe new columns
-    // are ADDED to the target schema BEFORE the merge — the reference
-    // ALTERs production then refreshes its column list so staged values
-    // for the new columns flow through the merge intersection
-    // (handler.py:846-850). Un-evolved parquet files read the column as
-    // null; merged buckets materialize it.
-    val evolution = SchemaEvolution.diff(staging.schema, store.schema)
-    store.evolveSchema(evolution)
-    // durable notification channel (SNS parity, handler.py:313-336):
-    // findings — especially requiresManual — land in _evolution_log;
-    // a logging failure must never fail the merge it describes
-    // (the reference's publish is try/except-warning too)
-    if (evolution.hasChanges)
-      try evolutionLog.log(table, source, evolution)
-      catch { case NonFatal(e) =>
-        System.err.println(s"[graft] evolution-log append failed for $table: ${e.getMessage}")
-      }
-
-    // STEP 3: dedup via the cascade (handler.py:407-479). The gate
-    // aggregation, grouped by bucket, ALSO carries the merge planner's
-    // probe: exact rows and the exact touched-bucket set, so adaptive
-    // routing and the merge's bucket pruning cost exactly what the
-    // reference's dedup gate already paid (handler.py:423-439). A
-    // deduplicated batch comes back checkpointed, so its window runs once.
-    val (dedup, probe) = CdcDedup.dedupAndProbe(staging, keys, numBuckets)
-
-    // STEP 4+5: column prep + MERGE (handler.py:876-946), routed per
-    // batch: concentrated batches take the bucket-pruned CoW rewrite,
-    // scattered ones commit to the MoR side-store as an O(batch) delta
-    val (_, touched) = MergePlanner.mergeAdaptive(store, morSideFor(table, keys), dedup, probe)
-    (touched, evolution)
-  }
 
   /** Backfill driver: apply every unprocessed CDC file under `root`,
     * per-table in path (= binlog) order — replaces the reference's

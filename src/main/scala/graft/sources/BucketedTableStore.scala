@@ -77,17 +77,18 @@ final class BucketedTableStore(
     */
   def initialize(df: DataFrame): Unit = {
     writeBuckets(df, path)
-    writeSchemaSidecar(df.schema)
-    writeMetaSidecar()
+    writeSidecar(sidecarPath, df.schema.json)
+    writeSidecar(metaPath, s"""{"numBuckets": $numBuckets}""")
   }
 
   private def metaPath = new Path(path, "_graft_meta.json")
 
-  private def writeMetaSidecar(): Unit = {
-    val out = fs.create(metaPath, true)
-    out.write(s"""{"numBuckets": $numBuckets}""".getBytes("UTF-8"))
-    out.close()
-  }
+  /** Replace a sidecar whole: a tmp write, then one atomic overwrite
+    * rename ([[PointerFile.swing]]), so a crash mid-write leaves the old
+    * sidecar readable, never a truncated one.
+    */
+  private def writeSidecar(p: Path, text: String): Unit =
+    PointerFile.swing(spark.sparkContext.hadoopConfiguration, new Path(path), p, text, p.getName)
 
   /** Opening a store with a different bucket count than it was written
     * with would prune the wrong partitions and silently produce duplicate
@@ -133,12 +134,6 @@ final class BucketedTableStore(
       .parquet(dest)
 
   private def sidecarPath = new Path(path, "_graft_schema.json")
-
-  private def writeSchemaSidecar(s: StructType): Unit = {
-    val out = fs.create(sidecarPath, true)
-    out.write(s.json.getBytes("UTF-8"))
-    out.close()
-  }
 
   private def readSchemaSidecar(): Option[StructType] =
     readSidecar(sidecarPath).map(DataType.fromJson(_).asInstanceOf[StructType])
@@ -210,7 +205,7 @@ final class BucketedTableStore(
     */
   def evolveSchema(result: graft.operators.SchemaEvolution.EvolutionResult): Unit =
     if (result.columnsAdded.nonEmpty)
-      writeSchemaSidecar(graft.operators.SchemaEvolution.evolve(schema, result))
+      writeSidecar(sidecarPath, graft.operators.SchemaEvolution.evolve(schema, result).json)
 
   /** Merge one deduplicated staging batch. `buckets`, when given, must
     * hold every bucket the batch's keys hash to (more is harmless: a

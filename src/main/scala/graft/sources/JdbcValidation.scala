@@ -1,20 +1,19 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** S12: the JDBC validation side-channel — the reference's cross-DB
   * validator reaches its second engine over a wire protocol
   * (`validate_data_redshift_firebolt.py:47-100` — psycopg2 against
   * `pg_stat_user_tables` — and `:159-169`, per-table aggregate
-  * queries), then compares counts and summary stats between engines.
+  * queries).
   *
   * Spark-first shape: the remote engine is a `spark.read.format("jdbc")`
-  * source, so the comparison itself is a DataFrame full-outer join —
-  * the same compare operator family as v10/v12 — not driver-side pandas.
-  * Reads can be PARTITIONED (`partitionColumn`/bounds/`numPartitions`)
-  * so a big remote table arrives as parallel range scans instead of one
-  * executor's single cursor, and Catalyst pushes filters/projections
+  * source, so any comparison against it is an ordinary DataFrame join,
+  * not driver-side pandas. Reads can be PARTITIONED
+  * (`partitionColumn`/bounds/`numPartitions`) so a big remote table
+  * arrives as parallel range scans instead of one executor's single
+  * cursor, and Catalyst pushes filters/projections
   * into the remote SQL (`PushedFilters` in the JDBCScan node) — at
   * 100 TB the side-channel pulls aggregates or key ranges, never the
   * raw table through one connection.
@@ -62,66 +61,4 @@ object JdbcValidation {
       .option("lowerBound", lower).option("upperBound", upper)
       .option("numPartitions", numPartitions)
       .options(options).load()
-
-  /** Per-table count reconciliation
-    * (`validate_data_redshift_firebolt.py:101-131`): full-outer join on
-    * table_name, missing sides fill 0, `difference` = remote − local,
-    * `pct_diff` = round(100·difference/remote, 2) with ±∞→0 (the
-    * reference's inf-replace for remote_count = 0), `match`, and the
-    * MATCH/MISMATCH status string. Both inputs are (table_name, count)
-    * frames — tiny, so the join broadcasts.
-    */
-  def compareCounts(remote: DataFrame, local: DataFrame): DataFrame = {
-    val r = remote.toDF("table_name", "remote_count")
-    val l = local.toDF("table_name", "local_count")
-    val diff = col("remote_count") - col("local_count")
-    val pct0 = round(diff.cast("double") / col("remote_count") * 100, 2)
-    val pct = when(col("remote_count") === 0, lit(0.0)).otherwise(pct0)
-    r.join(broadcast(l), Seq("table_name"), "full_outer")
-      .na.fill(0L, Seq("remote_count", "local_count"))
-      .withColumn("difference", diff)
-      .withColumn("pct_diff", pct)
-      .withColumn("match", col("remote_count") === col("local_count"))
-      .withColumn("status",
-        when(col("match"), lit("MATCH"))
-          .otherwise(concat(lit("MISMATCH ("), col("pct_diff"), lit("%)"))))
-      .select("table_name", "remote_count", "local_count",
-        "difference", "pct_diff", "match", "status")
-      .orderBy("table_name")
-  }
-
-  /** The reference's per-table detail profile
-    * (`validate_data_redshift_firebolt.py:159-169`): total rows,
-    * distinct ids, earliest/latest record — ONE aggregate row. Applied
-    * identically to both engines' frames, the two rows compare
-    * column-for-column.
-    */
-  def detailStats(df: DataFrame, idCol: String, tsCol: String): DataFrame =
-    df.agg(
-      count(lit(1)).as("total_rows"),
-      countDistinct(col(idCol)).as("unique_ids"),
-      min(col(tsCol)).as("earliest_record"),
-      max(col(tsCol)).as("latest_record"))
-
-  /** Side-by-side detail compare: one row per side plus a match flag
-    * per stat — the reference prints these as aligned blocks; here they
-    * join on a constant key so mismatch detection is relational.
-    */
-  def compareDetails(remote: DataFrame, local: DataFrame,
-      idCol: String, tsCol: String): DataFrame = {
-    val r = detailStats(remote, idCol, tsCol).select(
-      col("total_rows").as("r_rows"), col("unique_ids").as("r_ids"),
-      col("earliest_record").as("r_min"), col("latest_record").as("r_max"))
-    val l = detailStats(local, idCol, tsCol).select(
-      col("total_rows").as("l_rows"), col("unique_ids").as("l_ids"),
-      col("earliest_record").as("l_min"), col("latest_record").as("l_max"))
-    def eqOrBothNull(a: Column, b: Column): Column = a <=> b
-    r.crossJoin(l).select(
-      col("r_rows"), col("l_rows"), col("r_ids"), col("l_ids"),
-      col("r_min"), col("l_min"), col("r_max"), col("l_max"),
-      (eqOrBothNull(col("r_rows"), col("l_rows")) &&
-        eqOrBothNull(col("r_ids"), col("l_ids")) &&
-        eqOrBothNull(col("r_min"), col("l_min")) &&
-        eqOrBothNull(col("r_max"), col("l_max"))).as("match"))
-  }
 }

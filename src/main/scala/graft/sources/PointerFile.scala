@@ -5,9 +5,10 @@ import java.util.EnumSet
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{CreateFlag, FileContext, Options, Path}
 
-/** The one pointer-swing primitive: [[TableCatalog]]'s refs and tags
-  * and [[CommitLog]]'s batch mark. Write the new value to a temp file,
-  * then ATOMICALLY REPLACE the pointer with one OVERWRITE rename
+/** The one pointer-swing primitive: [[TableCatalog]]'s refs and tags,
+  * [[CommitLog]]'s batch mark and [[BucketedTableStore]]'s sidecars.
+  * Write the new value to a temp file, then ATOMICALLY REPLACE the
+  * pointer with one OVERWRITE rename
   * (`FileContext.rename(…, Rename.OVERWRITE)` — POSIX `rename(2)`
   * semantics on local/HDFS), so a pointer never goes missing between
   * two calls.

@@ -13,8 +13,9 @@ import graft.config.TableKeys
   * (reference: FIX_TRANSACTION_CONFLICTS.md:9-15, 210-245 — tables
   * proceed in parallel, writes to one table are serialized): each table
   * gets its own stream+checkpoint, so per-table ordering is guaranteed by
-  * the single `foreachBatch` writer while tables run concurrently on the
-  * shared scheduler. Null-PK tables are skipped, mirroring
+  * the single `foreachBatch` writer, which applies its batch's files one
+  * at a time in path order, while tables run concurrently on the shared
+  * scheduler. Null-PK tables are skipped, mirroring
   * `get_table_keys` (handler.py:710-729).
   */
 object CdcOrchestrator {
@@ -23,8 +24,8 @@ object CdcOrchestrator {
 
   /** Start one [[CdcStream]] per keyed table in `tableKeys`.
     *
-    * @param schemas  per-table source schema (file streams need a fixed
-    *                 schema up front)
+    * @param schemas  its keys are the table universe; its values are not
+    *                 read, since each file is staged from its own footer
     */
   def startAll(
       spark: SparkSession,
@@ -46,7 +47,7 @@ object CdcOrchestrator {
             root = root, table = table, keys = keys,
             storeRoot = storeRoot, checkpointRoot = checkpointRoot,
             numBuckets = numBuckets)
-          Some(Running(table, CdcStream.start(spark, cfg, schemas(table), trigger)))
+          Some(Running(table, CdcStream.start(spark, cfg, trigger)))
       }
     }
   }

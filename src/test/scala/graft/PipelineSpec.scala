@@ -331,11 +331,10 @@ class PipelineSpec extends AnyFunSuite with SparkJobProbe {
 
     writeCdcFile(s"$root/in/users/2026/08/12/b1.parquet", Seq(
       (2L, "bob", 2.0, "I", "2026-08-02 00:00:00", 0L)))
-    val schema = spark.read.parquet(s"$root/in/users/2026/08/12/b1.parquet").schema
     val cfg = CdcStream.Config(
       root = s"$root/in", table = "users", keys = Seq("id"),
       storeRoot = s"$root/store", checkpointRoot = s"$root/ckpt", numBuckets = 4)
-    val q = CdcStream.start(spark, cfg, schema)
+    val q = CdcStream.start(spark, cfg)
     q.awaitTermination(60000)
     assert(snapshot(pipe.storeFor("users", Seq("id")).read())
       == Seq((1L, "alice", 1.0), (2L, "bob", 2.0)))
@@ -500,12 +499,11 @@ class PipelineSpec extends AnyFunSuite with SparkJobProbe {
     writeCdcFile(s"$root/in/users/2026/08/12/LOAD1.parquet", Seq(
       (9L, "ghost", 9.0, "I", "2026-08-02 00:00:00", 0L)))
 
-    val schema = spark.read.parquet(s"$root/in/users/2026/08/12/b1.parquet").schema
     val cfg = CdcStream.Config(
       root = s"$root/in", table = "users", keys = Seq("id"),
       storeRoot = s"$root/store", checkpointRoot = s"$root/ckpt", numBuckets = 4)
 
-    val q1 = CdcStream.start(spark, cfg, schema, Trigger.AvailableNow())
+    val q1 = CdcStream.start(spark, cfg, Trigger.AvailableNow())
     q1.awaitTermination(60000)
 
     val store = pipe.storeFor("users", Seq("id"))
@@ -515,7 +513,7 @@ class PipelineSpec extends AnyFunSuite with SparkJobProbe {
     // must NOT be reapplied (exactly-once)
     writeCdcFile(s"$root/in/users/2026/08/13/b2.parquet", Seq(
       (2L, "bob", 2.0, "D", "2026-08-03 00:00:00", 0L)))
-    val q2 = CdcStream.start(spark, cfg, schema, Trigger.AvailableNow())
+    val q2 = CdcStream.start(spark, cfg, Trigger.AvailableNow())
     q2.awaitTermination(60000)
     assert(snapshot(store.read()) == Seq((1L, "alice-v2", 1.5)))
   }
@@ -534,11 +532,10 @@ class PipelineSpec extends AnyFunSuite with SparkJobProbe {
       (1L, "retry", 1.5, "U", "2026-08-02 00:00:00", 0L),
       (9L, "retry", 9.0, "I", "2026-08-02 00:00:00", 0L)))
 
-    val schema = spark.read.parquet(s"$day/b1.parquet").schema
     val cfg = CdcStream.Config(
       root = s"$root/in", table = "users", keys = Seq("id"),
       storeRoot = s"$root/store", checkpointRoot = s"$root/ckpt", numBuckets = 4)
-    assert(CdcStream.start(spark, cfg, schema).awaitTermination(60000))
+    assert(CdcStream.start(spark, cfg).awaitTermination(60000))
     val store = pipe.storeFor("users", Seq("id"))
     assert(snapshot(store.read()) == Seq((1L, "alice", 1.0), (2L, "bob", 2.0)))
     assert(pipe.ledger.isProcessed(s"$day/b1.parquet"))
@@ -569,11 +566,10 @@ class PipelineSpec extends AnyFunSuite with SparkJobProbe {
     // a stream batch then updates key 2
     writeCdcFile(s"$root/in/users/2026/08/13/s1.parquet", Seq(
       (2L, "stream", 3.0, "U", "2026-08-13 00:00:00", 0L)))
-    val schema = spark.read.parquet(s"$root/in/users/2026/08/13/s1.parquet").schema
     val cfg = CdcStream.Config(
       root = s"$root/in", table = "users", keys = Seq("id"),
       storeRoot = s"$root/store", checkpointRoot = s"$root/ckpt", numBuckets = 8)
-    CdcStream.start(spark, cfg, schema).awaitTermination(60000)
+    CdcStream.start(spark, cfg).awaitTermination(60000)
     def row(id: Long) = snapshot(pipe.readTable("users")).find(_._1 == id)
     assert(row(2L).contains((2L, "stream", 3.0)), "the stream's update must be visible")
     assert(row(4L).contains((4L, "pipe", 8.0)))
@@ -611,7 +607,7 @@ class PipelineSpec extends AnyFunSuite with SparkJobProbe {
     val cfg = CdcStream.Config(
       root = s"$root/in", table = "users", keys = Seq("id"),
       storeRoot = s"$root/store", checkpointRoot = s"$root/ckpt", numBuckets = 4)
-    CdcStream.start(spark, cfg, schema).awaitTermination(60000)
+    CdcStream.start(spark, cfg).awaitTermination(60000)
 
     val store = pipe.storeFor("users", Seq("id"))
     assert(store.schema.fieldNames.contains("email"))
@@ -623,5 +619,124 @@ class PipelineSpec extends AnyFunSuite with SparkJobProbe {
       .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getString(3))).toSet
     assert(logged == Set(("users", CdcPath.ledgerKey(dest.toString), "column_added", "email")),
       logged.toString)
+  }
+
+  /** Land `files` (path → rows) under `{root}/in/users`, apply them as ONE
+    * stream micro-batch and, on a fresh store, serially through
+    * `processFiles` in path order. Returns (stream rows, serial rows).
+    */
+  def streamVsSerial(files: Seq[(String, Seq[(Long, String, Double, String, String, Long)])])
+      : (Seq[(Long, String, Double)], Seq[(Long, String, Double)]) = {
+    import spark.implicits._
+    val root = tmpDir()
+    val keys = TableKeys.parse("""{"users": "id"}""")
+    def fresh(store: String) = {
+      val p = new CdcPipeline(spark, s"$root/$store", keys, numBuckets = 4, pathRoot = "in")
+      p.initialLoad("users", Seq((1L, "alice", 1.0), (2L, "bob", 2.0)).toDF("id", "v", "amount"))
+      p
+    }
+    val (streamed, serial) = (fresh("store"), fresh("serial"))
+    val paths = files.map { case (name, rows) =>
+      val f = s"$root/in/users/2026/08/12/$name"
+      writeCdcFile(f, rows)
+      f
+    }
+    val cfg = CdcStream.Config(
+      root = s"$root/in", table = "users", keys = Seq("id"),
+      storeRoot = s"$root/store", checkpointRoot = s"$root/ckpt", numBuckets = 4)
+    val q = CdcStream.start(spark, cfg)
+    assert(q.awaitTermination(60000))
+    assert(q.recentProgress.count(_.numInputRows > 0) == 1, "every file must arrive in one micro-batch")
+    assert(serial.processFiles(paths.sorted).forall(_._2.isInstanceOf[CdcPipeline.Applied]))
+    (snapshot(streamed.readTable("users")), snapshot(serial.readTable("users")))
+  }
+
+  test("streaming: a key inserted and deleted by two files of one batch ends absent, as serially") {
+    val (streamed, serial) = streamVsSerial(Seq(
+      "f1.parquet" -> Seq((7L, "fresh", 7.0, "I", "2026-08-12 00:00:00", 0L),
+        (1L, "alice-v2", 1.5, "U", "2026-08-12 00:00:00", 0L)),
+      "f2.parquet" -> Seq((7L, "fresh", 7.0, "D", "2026-08-12 00:00:01", 0L))))
+    assert(streamed == Seq((1L, "alice-v2", 1.5), (2L, "bob", 2.0)))
+    assert(streamed == serial)
+  }
+
+  test("streaming: a later file of one batch wins over an earlier one with a newer load_timestamp") {
+    val (streamed, serial) = streamVsSerial(Seq(
+      "f1.parquet" -> Seq((1L, "earlier", 1.1, "U", "2026-08-12 10:00:00", 0L)),
+      "f2.parquet" -> Seq((1L, "later", 1.2, "U", "2026-08-12 09:00:00", 0L))))
+    assert(streamed == Seq((1L, "later", 1.2), (2L, "bob", 2.0)))
+    assert(streamed == serial)
+  }
+
+  test("streaming: a column that first appears in a file landed after the start evolves the table") {
+    import spark.implicits._
+    val root = tmpDir()
+    val keys = TableKeys.parse("""{"users": "id"}""")
+    val pipe = new CdcPipeline(spark, s"$root/store", keys, numBuckets = 4)
+    pipe.initialLoad("users", Seq((1L, "alice", 1.0)).toDF("id", "v", "amount"))
+    val day = s"$root/in/users/2026/08/12"
+    writeCdcFile(s"$day/f1.parquet", Seq((2L, "bob", 2.0, "I", "2026-08-12 00:00:00", 0L)))
+    val cfg = CdcStream.Config(
+      root = s"$root/in", table = "users", keys = Seq("id"),
+      storeRoot = s"$root/store", checkpointRoot = s"$root/ckpt", numBuckets = 4)
+    val q = CdcStream.start(spark, cfg, Trigger.ProcessingTime(200))
+    try {
+      q.processAllAvailable()
+      assert(pipe.ledger.isProcessed(s"$day/f1.parquet"))
+
+      val tmp = tmpDir() + "/out"
+      Seq((3L, "carol", 3.0, "c@x.io", "I")).toDF("id", "v", "amount", "email", "Op")
+        .coalesce(1).write.parquet(tmp)
+      val part = new java.io.File(tmp).listFiles().find(_.getName.endsWith(".parquet")).get
+      Files.move(part.toPath, new java.io.File(s"$day/f2.parquet").toPath)
+      q.processAllAvailable()
+    } finally q.stop()
+
+    assert(pipe.storeFor("users", Seq("id")).schema.fieldNames.contains("email"))
+    val state = pipe.readTable("users").collect()
+      .map(r => (r.getAs[Long]("id"), Option(r.getAs[String]("email")))).sortBy(_._1)
+    assert(state.toSeq == Seq((1L, None), (2L, None), (3L, Some("c@x.io"))))
+    val logged = pipe.evolutionLog.records
+      .select("file_key", "kind", "column_name").collect()
+      .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
+    assert(logged == Set((s"$day/f2.parquet", "column_added", "email")), logged.toString)
+  }
+
+  test("streaming: a failed file stops its batch uncommitted; a restart applies the rest once") {
+    import spark.implicits._
+    val root = tmpDir()
+    val keys = TableKeys.parse("""{"users": "id"}""")
+    val pipe = new CdcPipeline(spark, s"$root/store", keys, numBuckets = 4, pathRoot = "in")
+    pipe.initialLoad("users", Seq((1L, "alice", 1.0)).toDF("id", "v", "amount"))
+    val day = s"$root/in/users/2026/08/12"
+    val Seq(good1, corrupt, good2) = Seq("f1", "f2", "f3").map(n => s"$day/$n.parquet")
+    writeCdcFile(good1, Seq((2L, "bob", 2.0, "I", "2026-08-12 00:00:00", 0L)))
+    new java.io.File(day).mkdirs()
+    Files.write(java.nio.file.Paths.get(corrupt), "not a parquet file".getBytes("UTF-8"))
+    writeCdcFile(good2, Seq((3L, "carol", 3.0, "I", "2026-08-12 00:00:00", 0L)))
+    val cfg = CdcStream.Config(
+      root = s"$root/in", table = "users", keys = Seq("id"),
+      storeRoot = s"$root/store", checkpointRoot = s"$root/ckpt", numBuckets = 4)
+    def statuses(f: String): Seq[String] = pipe.ledger.records
+      .filter(col("file_key") === f).select("status").collect().map(_.getString(0)).sorted.toSeq
+
+    val q1 = CdcStream.start(spark, cfg)
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException](q1.awaitTermination(60000))
+    assert(statuses(good1) == Seq("completed"))
+    assert(statuses(corrupt) == Seq("failed"))
+    assert(statuses(good2).isEmpty, "a file after the failed one must not be applied")
+    assert(snapshot(pipe.readTable("users")) == Seq((1L, "alice", 1.0), (2L, "bob", 2.0)))
+
+    // the corrupt file is replaced by a valid one; the restart re-delivers
+    // the uncommitted batch
+    Files.delete(java.nio.file.Paths.get(corrupt))
+    writeCdcFile(corrupt, Seq((4L, "dave", 4.0, "I", "2026-08-12 00:00:00", 0L)))
+    val q2 = CdcStream.start(spark, cfg)
+    assert(q2.awaitTermination(60000) && q2.exception.isEmpty)
+    assert(statuses(good1) == Seq("completed"), "good1 must not be re-applied")
+    assert(statuses(corrupt) == Seq("completed", "failed"))
+    assert(statuses(good2) == Seq("completed"))
+    assert(snapshot(pipe.readTable("users")) ==
+      Seq((1L, "alice", 1.0), (2L, "bob", 2.0), (3L, "carol", 3.0), (4L, "dave", 4.0)))
   }
 }

@@ -197,6 +197,28 @@ class BucketedTableStoreSpec extends AnyFunSuite with SparkJobProbe {
     assert(VanishingBucketFs.victim.isEmpty && !new java.io.File(victim).exists)
   }
 
+  test("a crash while the schema sidecar is written leaves the old schema readable") {
+    import spark.implicits._
+    val local = s"${tmpDir()}/t"
+    BucketedTableStore.create(spark, local, Seq("k"),
+      (1L to 20L).map(i => (i, s"v$i")).toDF("k", "v"), numBuckets = 8)
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.torn.impl", classOf[TornSidecarFs].getName)
+    conf.set("fs.AbstractFileSystem.torn.impl", classOf[TornSidecarAfs].getName)
+    val store = new BucketedTableStore(spark, s"torn://$local", Seq("k"), 8)
+    val before = store.schema
+
+    val evolution = SchemaEvolution.diff(before.add("amount", DecimalType(10, 2)), before)
+    TornSidecarFs.armed = true
+    try intercept[Exception](store.evolveSchema(evolution))
+    finally TornSidecarFs.armed = false
+
+    assert(store.schema == before)
+    assert(rows(store.read()).size == 20)
+    store.evolveSchema(evolution) // a retry after the crash succeeds
+    assert(store.schema.fieldNames.toSeq == Seq("k", "v", "amount"))
+  }
+
   test("a merge into a bucket with no live directory inserts into an empty slice") {
     import spark.implicits._
     val initial = (1L to 10L).map(i => (i, s"v$i"))
@@ -284,3 +306,37 @@ class VanishingBucketFs extends org.apache.hadoop.fs.RawLocalFileSystem {
 object VanishingBucketFs {
   @volatile var victim: Option[String] = None
 }
+
+/** A local file system under the `torn` scheme whose writes to a
+  * `_graft_schema.json*` file, while `armed`, put a few bytes on disk and
+  * then fail: a crash in the middle of a sidecar write. FileContext
+  * reaches it through [[TornSidecarAfs]].
+  */
+class TornSidecarFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("torn:///")
+
+  override protected def createOutputStreamWithMode(p: Path, append: Boolean,
+      permission: org.apache.hadoop.fs.permission.FsPermission): java.io.OutputStream = {
+    val out = super.createOutputStreamWithMode(p, append, permission)
+    if (!TornSidecarFs.armed || !p.getName.startsWith("_graft_schema.json")) out
+    else new java.io.OutputStream {
+      override def write(b: Int): Unit = tear()
+      override def write(b: Array[Byte], off: Int, len: Int): Unit = {
+        out.write(b, off, math.min(len, 8))
+        tear()
+      }
+      private def tear(): Nothing = {
+        out.close()
+        throw new java.io.IOException(s"injected crash while writing $p")
+      }
+      override def close(): Unit = out.close()
+    }
+  }
+}
+
+object TornSidecarFs {
+  @volatile var armed = false
+}
+
+class TornSidecarAfs(uri: java.net.URI, conf: org.apache.hadoop.conf.Configuration)
+  extends org.apache.hadoop.fs.DelegateToFileSystem(uri, new TornSidecarFs, conf, "torn", false)

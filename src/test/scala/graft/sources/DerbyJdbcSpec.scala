@@ -102,46 +102,4 @@ class DerbyJdbcSpec extends AnyFunSuite {
       s"filter not pushed into JDBC scan:\n$plan")
     assert(df.count() == (1 to 40).count(_ % 3 == 0))
   }
-
-  test("compareCounts reconciles per-table counts like the reference") {
-    import spark.implicits._
-    seeded
-    // remote side: counts over JDBC (one per table)
-    val remoteCounts = JdbcValidation.readQuery(spark, url,
-      "SELECT 'orders' AS table_name, COUNT(*) AS n FROM remote_orders")
-      .union(spark.createDataFrame(Seq(("remote_only", 5L))).toDF("t", "n"))
-    val localCounts = Seq(("orders", 40L), ("local_only", 3L))
-      .toDF("table_name", "n")
-    val out = JdbcValidation.compareCounts(remoteCounts, localCounts)
-      .collect().map(r => r.getString(0) ->
-        ((r.getLong(1), r.getLong(2), r.getLong(3), r.getBoolean(5),
-          r.getString(6)))).toMap
-    assert(out("orders") == ((40L, 40L, 0L, true, "MATCH")))
-    // missing sides fill 0; pct_diff of a 0-remote row pins to 0
-    assert(out("remote_only")._1 == 5L && out("remote_only")._2 == 0L &&
-      !out("remote_only")._4)
-    assert(out("local_only")._1 == 0L && out("local_only")._2 == 3L &&
-      !out("local_only")._4)
-    assert(out("local_only")._5 == "MISMATCH (0.0%)")
-  }
-
-  test("compareDetails matches JDBC side against a native DataFrame") {
-    import spark.implicits._
-    seeded
-    val remote = JdbcValidation.readTable(spark, url, "remote_orders")
-      .select(col("O_ORDERKEY").as("id"), col("CREATED").as("created"))
-    // the "local" engine holds the same logical table natively
-    val local = (1 to 40).map(i => (i.toLong, java.sql.Timestamp.valueOf(
-        f"2024-01-${i % 28 + 1}%02d 00:00:00")))
-      .toDF("id", "created")
-    val row = JdbcValidation.compareDetails(remote, local, "id", "created")
-      .head()
-    assert(row.getBoolean(8), s"detail mismatch: $row")
-    assert(row.getLong(0) == 40L && row.getLong(2) == 40L)
-    // and a deliberate drift is caught
-    val drifted = local.filter(col("id") =!= 40)
-    val bad = JdbcValidation.compareDetails(remote, drifted, "id", "created")
-      .head()
-    assert(!bad.getBoolean(8))
-  }
 }

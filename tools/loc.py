@@ -13,12 +13,15 @@ import os
 import sys
 
 
-def code_lines(text):
-    count = 0
+def scan(text):
+    """Yield (is_code, code) per line: whether the line counts as code, and
+    its text with comments removed and string literal contents dropped
+    (the quotes stay)."""
     depth = 0        # open /* */ comments
     in_str = None    # None, '"' or '"""'
     for line in text.splitlines():
         code = False
+        out = []
         i, n = 0, len(line)
         while i < n:
             c = line[i]
@@ -39,6 +42,7 @@ def code_lines(text):
                     while line.startswith('""""', i):
                         i += 1
                     in_str = None
+                    out.append('"""')
                     i += 3
                 else:
                     i += 1
@@ -49,6 +53,7 @@ def code_lines(text):
                     i += 2
                 elif c == '"':
                     in_str = None
+                    out.append(c)
                     i += 1
                 else:
                     i += 1
@@ -63,21 +68,28 @@ def code_lines(text):
                 code = True
             if line.startswith('"""', i):
                 in_str = '"""'
+                out.append('"""')
                 i += 3
             elif c == '"':
                 in_str = '"'
+                out.append(c)
                 i += 1
             elif c == "'" and (line.startswith("\\", i + 1) or line[i + 2:i + 3] == "'"):
                 # a character literal: skip to its closing quote
                 j = line.find("'", i + 2 + (line[i + 1:i + 2] == "\\"))
                 i = n if j < 0 else j + 1
+                out.append("' '")
             else:
+                out.append(c)
                 i += 1
         if in_str == '"':
             in_str = None  # an unclosed single-line string ends here
-        if code:
-            count += 1
-    return count
+            out.append('"')
+        yield code, "".join(out)
+
+
+def code_lines(text):
+    return sum(code for code, _ in scan(text))
 
 
 def main(argv):
